@@ -42,6 +42,23 @@ object Workload {
   def dirBytes(f: File): Long =
     if (f.isDirectory) Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
     else if (f.exists) f.length else 0L
+
+  /** Times the checks and runner layers alone on `table`, after an op:
+    * `Check.evaluate` over the op's metrics, then `AnalysisRunner.run`
+    * over each analyzer family of the checks.
+    */
+  def timeCheckLayers(tr: Tracer, checks: Seq[graft.checks.Check],
+      metrics: Map[AnyAnalyzer, graft.core.Metric[_]], table: DataFrame): Unit = {
+    val ctx = AnalyzerContext(metrics)
+    tr.span("checks.evaluate_s")(checks.foreach(_.evaluate(ctx)))
+    val analyzers = checks.flatMap(_.requiredAnalyzers()).distinct
+    val grouping = analyzers.filter(_.isInstanceOf[GroupingAnalyzer[_]])
+    val kll = analyzers.filter(_.isInstanceOf[graft.sketch.KLLSketchAnalyzer])
+    val scan = analyzers.filter(a => a.isInstanceOf[AnyScanAnalyzer] && !grouping.contains(a))
+    tr.span("runners.scan_family_s")(AnalysisRunner.run(table, scan))
+    tr.span("runners.grouping_family_s")(AnalysisRunner.run(table, grouping))
+    tr.span("sketch.kll_s")(AnalysisRunner.run(table, kll))
+  }
 }
 
 /** A ~30-constraint suite covering every analyzer family over one wide
@@ -53,7 +70,6 @@ final class BatchVerify(spark: SparkSession, data: File, suite: org.json4s.JValu
   private val checks = specs.map(_.build)
   private val table = spark.read.parquet(new File(data, "wide").getPath)
   private val rows = table.count()
-  private lazy val analyzers: Seq[AnyAnalyzer] = checks.flatMap(_.requiredAnalyzers()).distinct
 
   val roundLength = 1
   val warmupOps = 3
@@ -68,16 +84,7 @@ final class BatchVerify(spark: SparkSession, data: File, suite: org.json4s.JValu
 
   private var lastMetrics: Map[AnyAnalyzer, graft.core.Metric[_]] = Map.empty
 
-  override def extras(seq: Int): Unit = {
-    val ctx = AnalyzerContext(lastMetrics)
-    tr.span("checks.evaluate_s")(checks.foreach(_.evaluate(ctx)))
-    val grouping = analyzers.filter(_.isInstanceOf[GroupingAnalyzer[_]])
-    val kll = analyzers.filter(_.isInstanceOf[graft.sketch.KLLSketchAnalyzer])
-    val scan = analyzers.filter(a => a.isInstanceOf[AnyScanAnalyzer] && !grouping.contains(a))
-    tr.span("runners.scan_family_s")(AnalysisRunner.run(table, scan))
-    tr.span("runners.grouping_family_s")(AnalysisRunner.run(table, grouping))
-    tr.span("sketch.kll_s")(AnalysisRunner.run(table, kll))
-  }
+  override def extras(seq: Int): Unit = Workload.timeCheckLayers(tr, checks, lastMetrics, table)
 }
 
 /** Appends one day per op: merge with yesterday's persisted states,
@@ -128,6 +135,8 @@ final class IncrementalAppend(spark: SparkSession, data: File, work: File,
         analyzer, a.id)
     }
     val result = tr.span("checks.verify_s")(b.run())
+    lastMetrics = result.metrics
+    lastInput = input
     if (tr.enabled) {
       tr.gauge("core.state_mb", Workload.dirBytes(new File(stateDir(day)).getParentFile) / 1048576.0)
       val ok = AnalyzerContext(result.metrics.filter(_._2.value.isSuccess))
@@ -136,6 +145,13 @@ final class IncrementalAppend(spark: SparkSession, data: File, work: File,
     }
     (dayRows(day - 1), Json.obj("day" -> Json.num(day), "report" -> Suites.report(result, specs)))
   }
+
+  private var lastMetrics: Map[AnyAnalyzer, graft.core.Metric[_]] = Map.empty
+  private var lastInput: DataFrame = _
+
+  /** The checks and runner layers alone on the day just appended. */
+  override def extras(seq: Int): Unit =
+    Workload.timeCheckLayers(tr, checks, lastMetrics, lastInput)
 }
 
 /** q136's stage list on the public Curation.pipeline builder, consumed
