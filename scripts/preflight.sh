@@ -12,10 +12,16 @@
 # (ManifestSpec) already existed; it just wasn't run between the last
 # edit and the commit. This script makes the ritual one command:
 #
-#   ./scripts/preflight.sh            # compile + ManifestSpec
+#   ./scripts/preflight.sh            # compile + ManifestSpec + the
+#                                     # benchmark smoke run
 #   ./scripts/preflight.sh q142       # ... then spot-check one query
 #                                     # end-to-end against DuckDB at
 #                                     # sf0.001 (needs graft.Verify)
+#
+# The smoke run (perfbench/run.py --smoke) drives every benchmark
+# workload on tiny inputs and checks each op against DuckDB, so the
+# incremental-append (state load/merge/persist) and curation paths
+# cannot regress unnoticed.
 #
 # Exit code 0 = safe to commit.
 set -euo pipefail
@@ -23,6 +29,9 @@ cd "$(dirname "$0")/.."
 
 echo "[preflight] sbt Test/compile + ManifestSpec..."
 sbt -batch "Test/compile" "testOnly graft.ManifestSpec"
+
+echo "[preflight] perfbench smoke run..."
+python3 perfbench/run.py --smoke
 
 if [[ $# -ge 1 ]]; then
   only="$1"

@@ -1241,7 +1241,7 @@ object SparkEntry {
         Uniqueness(Seq("o_orderstatus")), Entropy("o_orderstatus"), kll)
 
       val tmp = java.nio.file.Files.createTempDirectory("graft_q43").toString
-      val direct = AnalysisRunner.runStateful(orders, analyzers,
+      val direct = AnalysisRunner.run(orders, analyzers,
         saveStatesWith = Some(new graft.core.HdfsStateProvider(s, s"$tmp/state")))
       // fresh provider instance: metrics re-rendered from loaded states
       // only. The SAME pass also copies every loaded state into the
@@ -1340,10 +1340,10 @@ object SparkEntry {
       val mergeAnalyzers: Seq[AnyAnalyzer] = Seq(
         Size(), Mean("o_totalprice"), Uniqueness(Seq("o_orderstatus")),
         Entropy("o_orderstatus"), kll)
-      AnalysisRunner.runStateful(orders.filter(col("o_orderkey") % 2 === 0),
+      AnalysisRunner.run(orders.filter(col("o_orderkey") % 2 === 0),
         mergeAnalyzers,
         saveStatesWith = Some(new graft.core.HdfsStateProvider(s, s"$tmp/half0")))
-      AnalysisRunner.runStateful(orders.filter(col("o_orderkey") % 2 === 1),
+      AnalysisRunner.run(orders.filter(col("o_orderkey") % 2 === 1),
         mergeAnalyzers,
         saveStatesWith = Some(new graft.core.HdfsStateProvider(s, s"$tmp/half1")))
       val merged = AnalysisRunner.runOnAggregatedStates(mergeAnalyzers,

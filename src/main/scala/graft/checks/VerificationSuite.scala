@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.core._
-import graft.runners.{AnalysisRunner, AnalyzerContext}
+import graft.runners.{AnalysisRunner, AnalyzerContext, RunResults}
 
 /** Outcome of a verification run
   * (reference capability: VerificationResult.scala / VerificationSuite.scala:107-144).
@@ -159,15 +159,18 @@ class VerificationSuite {
       data: DataFrame,
       checks: Seq[Check],
       requiredAnalyzers: Seq[AnyAnalyzer] = Seq.empty)
-    : VerificationResult = {
+    : VerificationResult =
+    onData(data).addChecks(checks).addRequiredAnalyzers(requiredAnalyzers).run()
+}
 
-    val analyzers = (requiredAnalyzers ++ checks.flatMap(_.requiredAnalyzers())).distinct
-    val probes = Constraint.whereSizeProbes(analyzers).filterNot(analyzers.contains)
-    val context = AnalysisRunner.run(data, analyzers ++ probes)
-    evaluate(checks, context, probes)
-  }
+object VerificationSuite {
+  def apply(): VerificationSuite = new VerificationSuite()
 
-  private def evaluate(
+  /** Evaluates every check over `context` and folds the check statuses
+    * into one result. Internal `probes` feed constraint evaluation but are
+    * not part of the user's requested metric surface.
+    */
+  private[graft] def evaluate(
       checks: Seq[Check],
       context: AnalyzerContext,
       probes: Seq[AnyAnalyzer] = Seq.empty): VerificationResult = {
@@ -175,14 +178,8 @@ class VerificationSuite {
     val status = checkResults
       .map(_._2.status)
       .foldLeft(CheckStatus.Success: CheckStatus)(CheckStatus.max)
-    // internal probes feed constraint evaluation but are not part of the
-    // user's requested metric surface
     VerificationResult(status, checkResults, context.metricMap -- probes)
   }
-}
-
-object VerificationSuite {
-  def apply(): VerificationSuite = new VerificationSuite()
 }
 
 class VerificationRunBuilder(data: DataFrame) {
@@ -303,81 +300,27 @@ class VerificationRunBuilder(data: DataFrame) {
   def run(): VerificationResult = {
     val allAnalyzers =
       (requiredAnalyzers ++ checks.flatMap(_.requiredAnalyzers())).distinct
-
-    // metric reuse: skip analyzers whose metrics are already stored
-    val cached: Map[AnyAnalyzer, Metric[_]] = (repository, reuseKey) match {
-      case (Some(repo), Some(key)) =>
-        val loaded = repo.loadByKey(key).map(_.metricMap).getOrElse {
-          if (failIfResultsMissing) {
-            throw new IllegalStateException(s"No stored results for $key")
-          }
-          Map.empty[AnyAnalyzer, Metric[_]]
-        }
-        loaded.filter { case (a, _) => allAnalyzers.contains(a) }
-      case _ =>
-        if (reuseKey.isDefined) {
-          throw new IllegalStateException(
-            "useRepository() must be called before reuseExistingResultsForKey")
-        }
-        Map.empty
-    }
-
-    // the reuse contract: failIfResultsMissing means the stored result
-    // must cover EVERY requested analyzer — a partial hit would silently
-    // recompute over possibly-different data than the stored metrics
-    // describe, which is exactly what the caller asked to be told about
-    if (failIfResultsMissing && reuseKey.isDefined) {
-      val missing = allAnalyzers.filterNot(cached.contains)
-      if (missing.nonEmpty) {
-        throw new IllegalStateException(
-          s"Stored results for ${reuseKey.get} lack metrics for: " +
-            missing.mkString(", "))
-      }
-    }
+    val strictReuse = failIfResultsMissing && reuseKey.isDefined
+    val cached = RunResults.reused(repository, reuseKey, failIfResultsMissing, allAnalyzers)
 
     // Size(where) probes (same fused scan) let where-filtered constraints
     // distinguish trivial passes from all-NULL failures; skipped in strict
     // reuse mode, where no computation may run at all
     val probes =
-      if (failIfResultsMissing && reuseKey.isDefined) Seq.empty[AnyAnalyzer]
+      if (strictReuse) Seq.empty[AnyAnalyzer]
       else Constraint.whereSizeProbes(allAnalyzers).filterNot(allAnalyzers.contains)
 
-    val toCompute = (allAnalyzers ++ probes).filterNot(cached.contains)
-    val computed: graft.runners.AnalyzerContext =
-      if (stateLoader.isDefined || statePersister.isDefined) {
-        AnalysisRunner.runStateful(data, toCompute,
-          aggregateWith = stateLoader, saveStatesWith = statePersister)
-      } else {
-        AnalysisRunner.run(data, toCompute)
-      }
-    val context = graft.runners.AnalyzerContext(cached ++ computed.metricMap)
+    val computed = AnalysisRunner.run(data, (allAnalyzers ++ probes).filterNot(cached.contains),
+      aggregateWith = stateLoader, saveStatesWith = statePersister)
+    val result = VerificationSuite.evaluate(
+      checks, AnalyzerContext(cached ++ computed.metricMap), probes)
 
-    val checkResults = checks.map(c => c -> c.evaluate(context))
-    val status = checkResults.map(_._2.status)
-      .foldLeft(CheckStatus.Success: CheckStatus)(CheckStatus.max)
-    val reported = context.metricMap -- probes
-    val result = VerificationResult(status, checkResults, reported)
-
-    // append semantics: merge with anything already stored under the key,
-    // new metrics win (reference: repository saveOrAppendResult contract)
-    for {
-      repo <- repository
-      key <- saveKey
-    } {
-      val existing = repo.loadByKey(key).map(_.metricMap).getOrElse(Map.empty)
-      repo.save(key, graft.runners.AnalyzerContext(existing ++ reported))
-    }
-
-    def writeFile(path: String, json: String): Unit = {
-      val spark = outputSession.getOrElse(data.sparkSession)
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (overwriteFiles || !fs.exists(fsPath)) {
-        VerificationResult.saveJsonToPath(spark, path, json)
-      }
-    }
-    checkResultsPath.foreach(p => writeFile(p, VerificationResult.checkResultsAsJson(result)))
-    successMetricsPath.foreach(p => writeFile(p, VerificationResult.successMetricsAsJson(result)))
+    RunResults.saveOrAppend(repository, saveKey, result.metrics)
+    val spark = outputSession.getOrElse(data.sparkSession)
+    checkResultsPath.foreach(p => RunResults.writeJson(
+      spark, p, overwriteFiles, VerificationResult.checkResultsAsJson(result)))
+    successMetricsPath.foreach(p => RunResults.writeJson(
+      spark, p, overwriteFiles, VerificationResult.successMetricsAsJson(result)))
     result
   }
 }

@@ -22,26 +22,29 @@ import graft.core.Preconditions._
 case class FrequenciesAndNumRows(frequencies: DataFrame, numRows: Long)
     extends State[FrequenciesAndNumRows] {
 
-  import FrequenciesAndNumRows.COUNT_COL
-
-  override def merge(other: FrequenciesAndNumRows): FrequenciesAndNumRows = {
-    val groupCols = frequencies.columns.filterNot(_ == COUNT_COL).toSeq
-    val left = frequencies.alias("graft_l")
-    val right = other.frequencies.alias("graft_r")
-    def l(c: String) = col(s"graft_l.$c")
-    def r(c: String) = col(s"graft_r.$c")
-    val joinCond = groupCols.map(c => l(c) <=> r(c)).reduce(_ && _)
-    val merged = left.join(right, joinCond, "outer")
-      .select(
-        groupCols.map(c => coalesce(l(c), r(c)).as(c)) :+
-          (coalesce(l(COUNT_COL), lit(0L)) + coalesce(r(COUNT_COL), lit(0L)))
-            .as(COUNT_COL): _*)
-    FrequenciesAndNumRows(merged, numRows + other.numRows)
-  }
+  override def merge(other: FrequenciesAndNumRows): FrequenciesAndNumRows =
+    FrequenciesAndNumRows(
+      FrequenciesAndNumRows.sumCounts(frequencies, other.frequencies),
+      numRows + other.numRows)
 }
 
 object FrequenciesAndNumRows {
   val COUNT_COL = "graft_count"
+
+  /** Null-safe full outer join of two frequency tables on their grouping
+    * columns, summing the counts.
+    */
+  private[graft] def sumCounts(left: DataFrame, right: DataFrame): DataFrame = {
+    val groupCols = left.columns.filterNot(_ == COUNT_COL).toSeq
+    def l(c: String) = col(s"graft_l.$c")
+    def r(c: String) = col(s"graft_r.$c")
+    val joinCond = groupCols.map(c => l(c) <=> r(c)).reduce(_ && _)
+    left.alias("graft_l").join(right.alias("graft_r"), joinCond, "outer")
+      .select(
+        groupCols.map(c => coalesce(l(c), r(c)).as(c)) :+
+          (coalesce(l(COUNT_COL), lit(0L)) + coalesce(r(COUNT_COL), lit(0L)))
+            .as(COUNT_COL): _*)
+  }
 
   /** SELECT cols, count(*) FROM data WHERE (any col IS NOT NULL) [AND where]
     * GROUP BY cols — reference: analyzers/GroupingAnalyzers.scala:55-109.
@@ -49,20 +52,6 @@ object FrequenciesAndNumRows {
   def compute(data: DataFrame, groupingColumns: Seq[String],
       where: Option[String]): FrequenciesAndNumRows =
     withNumRows(computeFrequenciesOnly(data, groupingColumns, where))
-
-  /** [[compute]] with the frequency table cached BEFORE the numRows action
-    * (so that action populates the cache) — for callers taking multiple
-    * passes over it: the stateful path renders one metric per analyzer
-    * plus optional state persistence, and must not re-run the groupBy for
-    * each (reference capability: AnalysisRunner
-    * `storageLevelOfGroupedDataForMultiplePasses`). Callers unpersist.
-    */
-  def computeCached(data: DataFrame, groupingColumns: Seq[String],
-      where: Option[String]): FrequenciesAndNumRows = {
-    val frequencies = computeFrequenciesOnly(data, groupingColumns, where)
-    frequencies.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    withNumRows(frequencies)
-  }
 
   /** numRows applies the SAME filters as the frequency table (any grouping
     * key non-null + where) — reference GroupingAnalyzers numRows semantics;

@@ -110,6 +110,15 @@ object Histogram {
   private[operators] val BIN_COL = "graft_histogram_bin"
 }
 
+/** Per-bin counts of a [[HistogramBinned]] with the edges that define the
+  * bins (bin b, 1-based, spans edges(b - 1) to edges(b)). Not mergeable:
+  * computed edges are data-dependent.
+  */
+case class BinnedCountsState(counts: Map[Int, Long], edges: Seq[Double])
+    extends NonMergeableState[BinnedCountsState] {
+  def analyzerName: String = "HistogramBinned"
+}
+
 /** Equal-width (or custom-edge) numeric histogram: one min/max pass, then a
   * single groupBy on the computed bin index via `width_bucket`
   * (reference capability: analyzers/HistogramBinned.scala:62).
@@ -119,7 +128,7 @@ case class HistogramBinned(
     binCount: Option[Int] = Some(10),
     customEdges: Option[Seq[Double]] = None,
     where: Option[String] = None
-) extends Analyzer[FrequenciesAndNumRows, HistogramMetric] {
+) extends Analyzer[BinnedCountsState, HistogramMetric] {
 
   val name = "HistogramBinned"
   val entity: Entity = Entity.Column
@@ -149,11 +158,10 @@ case class HistogramBinned(
       }
   }
 
-  override def computeStateFrom(data: DataFrame): Option[FrequenciesAndNumRows] =
-    computeStateWithEdges(data, resolveEdges(data))
-
-  private def computeStateWithEdges(data: DataFrame,
-      edges: Array[Double]): Option[FrequenciesAndNumRows] = {
+  override def computeStateFrom(data: DataFrame): Option[BinnedCountsState] = {
+    // computed edges cost a min/max job, then one groupBy collects the
+    // (at most nBins) bin counts
+    val edges = resolveEdges(data)
     if (edges.isEmpty) return None
     val filtered = where.map(w => data.filter(expr(w))).getOrElse(data)
     val nBins = edges.length - 1
@@ -176,57 +184,32 @@ case class HistogramBinned(
         }, lit(nBins.toLong))
       }
     val inRange = x >= lit(edges.head) && x <= lit(edges.last)
-    val freq = filtered
+    val counts = filtered
       .filter(col(column).isNotNull && inRange)
       .groupBy(bucket.as(Histogram.BIN_COL))
-      .agg(count(lit(1)).as(FrequenciesAndNumRows.COUNT_COL))
-    // in-range row count == the bucket counts' sum: one tiny aggregation
-    // over the groups instead of a second full scan of the source
-    val numRows = freq
-      .agg(coalesce(sum(col(FrequenciesAndNumRows.COUNT_COL)), lit(0L)))
-      .collect().head.getLong(0)
-    Some(FrequenciesAndNumRows(freq, numRows))
+      .agg(count(lit(1)))
+      .collect()
+      .map(r => r.getLong(0).toInt -> r.getLong(1))
+      .toMap
+    Some(BinnedCountsState(counts, edges.toSeq))
   }
 
-  override def calculate(data: DataFrame): HistogramMetric = {
-    try {
-      preconditions.foreach(_(data.schema))
-      // resolve edges ONCE: computed edges cost a min/max job
-      val edges = resolveEdges(data)
-      if (edges.isEmpty) {
-        return HistogramMetric(column,
+  override def computeMetricFrom(state: Option[BinnedCountsState]): HistogramMetric =
+    state match {
+      case Some(BinnedCountsState(counts, edges)) =>
+        // the in-range row count is the bin counts' sum
+        val denom = math.max(counts.values.sum, 1L)
+        val nBins = edges.length - 1
+        val values = (1 to nBins).map { b =>
+          val c = counts.getOrElse(b, 0L)
+          val label = s"[${edges(b - 1)}, ${edges(b)}${if (b == nBins) "]" else ")"}"
+          label -> DistributionValue(c, c.toDouble / denom)
+        }.toMap
+        HistogramMetric(column, Success(Distribution(values, nBins.toLong)))
+      case None =>
+        HistogramMetric(column,
           Failure(new EmptyStateException(s"Empty state for HistogramBinned $column")))
-      }
-      val state = computeStateWithEdges(data, edges)
-      metricWithEdges(state, edges)
-    } catch {
-      case scala.util.control.NonFatal(e) => toFailureMetric(e)
     }
-  }
-
-  private def metricWithEdges(state: Option[FrequenciesAndNumRows],
-      edges: Array[Double]): HistogramMetric = state match {
-    case Some(FrequenciesAndNumRows(freq, numRows)) =>
-      import FrequenciesAndNumRows.COUNT_COL
-      val counts = freq.collect().map { r =>
-        r.getLong(r.fieldIndex(Histogram.BIN_COL)).toInt -> r.getLong(r.fieldIndex(COUNT_COL))
-      }.toMap
-      val denom = math.max(numRows, 1L)
-      val nBins = edges.length - 1
-      val values = (1 to nBins).map { b =>
-        val c = counts.getOrElse(b, 0L)
-        val label = s"[${edges(b - 1)}, ${edges(b)}${if (b == nBins) "]" else ")"}"
-        label -> DistributionValue(c, c.toDouble / denom)
-      }.toMap
-      HistogramMetric(column, Success(Distribution(values, nBins.toLong)))
-    case None =>
-      HistogramMetric(column,
-        Failure(new EmptyStateException(s"Empty state for HistogramBinned $column")))
-  }
-
-  override def computeMetricFrom(state: Option[FrequenciesAndNumRows]): HistogramMetric =
-    HistogramMetric(column, Failure(new MetricCalculationException(
-      "HistogramBinned requires edge context; use calculate()")))
 
   override def toFailureMetric(failure: Throwable): HistogramMetric =
     HistogramMetric(column, Failure(MetricCalculationException.wrap(failure)))

@@ -137,11 +137,11 @@ trait SharedPercentiles { self: ScanShareableAnalyzer[_, _] =>
     requestedQuantiles.map(q => element_at(combined, allQs.indexOf(q) + 1))
   }
 
-  /** Metric from already-computed exact quantile values, ordered by
-    * ascending `requestedQuantiles` — the [[DistributedExactQuantile]]
-    * route for over-budget columns.
+  /** State from already-computed exact quantile values — the
+    * [[DistributedExactQuantile]] route for over-budget columns.
     */
-  def metricFromQuantiles(sortedValues: Seq[Double]): Metric[_]
+  def stateFromQuantiles(byQuantile: Map[Double, Double]): ExactQuantileState =
+    ExactQuantileState(requestedQuantiles.map(byQuantile), name)
 
   final def percentileKey: (String, Option[String]) = (column, where)
 }
@@ -335,12 +335,9 @@ case class ExactQuantile(column: String, quantile: Double, where: Option[String]
   override def computeStateFrom(data: DataFrame): Option[ExactQuantileState] = {
     if (ExactQuantileGuard.overBudget(data, Seq(this)).nonEmpty) {
       DistributedExactQuantile.percentiles(data, column, where, Seq(quantile))
-        .map(m => ExactQuantileState(Seq(m(quantile)), name))
+        .map(stateFromQuantiles)
     } else super.computeStateFrom(data)
   }
-
-  override def metricFromQuantiles(sortedValues: Seq[Double]): Metric[_] =
-    computeMetricFrom(Some(ExactQuantileState(sortedValues, name)))
 
   override def fromAggregationResult(result: Row, offset: Int): Option[ExactQuantileState] =
     doubleAt(result, offset).map(v => ExactQuantileState(Seq(v), name))
@@ -436,12 +433,9 @@ case class InterquartileRange(column: String, where: Option[String] = None)
   override def computeStateFrom(data: DataFrame): Option[ExactQuantileState] = {
     if (ExactQuantileGuard.overBudget(data, Seq(this)).nonEmpty) {
       DistributedExactQuantile.percentiles(data, column, where, requestedQuantiles)
-        .map(m => ExactQuantileState(Seq(m(0.25), m(0.75)), name))
+        .map(stateFromQuantiles)
     } else super.computeStateFrom(data)
   }
-
-  override def metricFromQuantiles(sortedValues: Seq[Double]): Metric[_] =
-    computeMetricFrom(Some(ExactQuantileState(sortedValues, name)))
 
   override def fromAggregationResult(result: Row, offset: Int): Option[ExactQuantileState] =
     for {

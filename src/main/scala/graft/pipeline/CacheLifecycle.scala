@@ -24,8 +24,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * [[withConsumptions]] so the caches survive that many consuming actions,
   * or persist the result themselves. Re-consuming past the declared count
   * recomputes the lineage without the caches — correct (everything is
-  * deterministic), just slower. Delivery rides the async listener bus:
-  * release is eventual, not synchronous with the action.
+  * deterministic), just slower — unless that lineage runs through a
+  * [[truncate]]d frame whose blocks are released: that read fails.
+  * Delivery rides the async listener bus: release is eventual, not
+  * synchronous with the action.
   */
 object CacheLifecycle {
 
@@ -37,10 +39,14 @@ object CacheLifecycle {
     * reference (execution is deduped by the cache; PLAN SIZE is not),
     * and analysis + cache-lookup canonicalization of those trees — not
     * execution — was the measured dominant driver cost (r19 sampling:
-    * ~5 s of a 13 s q136). Pair with [[releaseTruncated]]; semantics are
-    * persist-identical (one deterministic evaluation, downstream reads
-    * the materialized rows). In-query lifetime only — nothing outlives
-    * the query or keys on the input path.
+    * ~5 s of a 13 s q136). Pair with [[releaseTruncated]]. Like a
+    * persist, the upstream evaluates once and downstream reads the
+    * materialized rows; UNLIKE a persist, the cut is not fault-tolerant:
+    * the lineage is gone, so a block lost with an executor (loss,
+    * decommission, dynamic-allocation scale-down) fails every later read
+    * with a checkpoint-block-not-found error instead of recomputing, and
+    * the frame is unusable after [[releaseTruncated]]. In-query lifetime
+    * only — nothing outlives the query or keys on the input path.
     */
   def truncate(df: DataFrame): DataFrame = df.localCheckpoint()
 

@@ -43,9 +43,11 @@ object Classify {
       classLogPrior: DataFrame,
       vocabSize: Long,
       alpha: Double) {
-    /** `termLogProb` is persisted by [[modelFromCounts]] (it is consumed
-      * by every scoring pass); call this when done with the model to
-      * release the cache.
+    /** `termLogProb` is cut by [[modelFromCounts]] with
+      * [[CacheLifecycle.truncate]] (it is consumed by every scoring
+      * pass); call this when done with the model. The model is unusable
+      * afterwards: its blocks cannot be recomputed, so scoring with a
+      * released model fails.
       */
     def release(): Unit = CacheLifecycle.releaseTruncated(termLogProb)
   }

@@ -108,6 +108,11 @@ object Curation {
       caches: Seq[DataFrame],
       releasers: Seq[() => Unit]) {
     lazy val censuses: Seq[(String, Double)] = names.map(n => n -> resolve(n))
+
+    /** Releases the pipeline's lineage cuts and caches. `docs` is unusable
+      * afterwards: it reads [[CacheLifecycle.truncate]]d frames whose
+      * blocks cannot be recomputed, so consuming it after release fails.
+      */
     def release(): Unit = {
       caches.foreach(CacheLifecycle.releaseTruncated)
       releasers.foreach(_())

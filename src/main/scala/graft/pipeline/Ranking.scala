@@ -43,7 +43,11 @@ object Ranking {
     * their own, as in SQL. Columns must be of an orderable primitive
     * type (numeric / string / boolean / date / timestamp).
     *
-    * Returns `df` with `bucketCol` (IntegerType, 1-based) appended.
+    * Returns `df` with `bucketCol` (IntegerType, 1-based) appended. The
+    * result releases its cache after one consuming action (more under
+    * [[CacheLifecycle.withConsumptions]]); consuming it past that count
+    * fails, because its lineage runs through a released local checkpoint
+    * of the input.
     */
   def groupedNtile(
       df: DataFrame,

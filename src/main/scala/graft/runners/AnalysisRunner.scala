@@ -1,12 +1,16 @@
 package graft.runners
 
-import scala.util.Failure
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.core._
 import graft.operators._
+import graft.sketch.KLLSketchAnalyzer
 
 /** Computed metrics keyed by analyzer
   * (reference capability: runners/AnalyzerContext.scala:29-43).
@@ -75,209 +79,122 @@ object AnalyzerContext {
   * across all grouping analyzers
   * (reference capability: runners/AnalysisRunner.scala:101-247,350-380).
   *
-  * Scale design: for N analyzers over 100 TB this issues exactly
+  * Batch and incremental runs are one pipeline: every analyzer family
+  * yields a fresh [[State]] per analyzer, and one finisher loads the
+  * stored state (`aggregateWith`), merges, persists the merged state
+  * (`saveStatesWith`) and renders the metric from it — a batch run is the
+  * merge with the empty state (reference capability:
+  * analyzers/Analyzer.scala:126-147).
+  *
+  * Scale design: for N analyzers over 100 TB a run issues exactly
   *   1 scan (all fused aggregates, map-side partial aggregation)
-  * + 1 shuffle per distinct grouping column-set (hash aggregation)
-  * + 1 tiny aggregation per frequency table (over distinct groups only).
-  * Nothing else touches the data; everything downstream is driver-side.
+  * + 1 scan per distinct WHERE among the KLL sketches
+  * + 1 shuffle per distinct grouping (columns, where) key, whose ONE fused
+  *   aggregation over the (distinct-keys-only) frequency table yields the
+  *   row count and every frequency-based metric
+  * + each standalone analyzer's own plan (Histogram, CustomSql, ...).
+  * An incremental run reads the new data exactly as often. Loaded states
+  * merge without touching the data, except frequency tables: the stored
+  * table is outer-joined with the fresh one before that same aggregation,
+  * and a table that is persisted is cached for the aggregation and written
+  * from the cache — one write per persisted table, no re-run of the
+  * groupBy. The cache is released before `run` returns. Nothing else
+  * touches the data.
   */
 object AnalysisRunner {
 
+  private type Typed = Analyzer[State[_], Metric[_]]
+  private type FreshStates = Seq[(AnyAnalyzer, Try[Option[State[_]]])]
+
   def onData(data: DataFrame): AnalysisRunBuilder = new AnalysisRunBuilder(data)
 
-  def run(data: DataFrame, analyzers: Seq[AnyAnalyzer]): AnalyzerContext =
-    doAnalysisRun(data, analyzers.distinct)
-
-  private[graft] def doAnalysisRun(
-      data: DataFrame,
-      analyzers: Seq[AnyAnalyzer]): AnalyzerContext = {
-
-    if (analyzers.isEmpty) return AnalyzerContext.empty
-
-    val schema = data.schema
-
-    // 1. precondition short-circuit: failing analyzers become failure
-    //    metrics without running any job
-    //    (reference capability: runners/AnalysisRunner.scala:143-152)
-    val (passed, failedWithReason) = {
-      val checked = analyzers.map { a =>
-        a -> scala.util.Try(a.preconditions.foreach(_(schema)))
-      }
-      (checked.collect { case (a, scala.util.Success(_)) => a },
-        checked.collect { case (a, Failure(e)) => a -> e })
-    }
-
-    val failureMetrics: Map[AnyAnalyzer, Metric[_]] =
-      failedWithReason.map { case (a, e) =>
-        (a: AnyAnalyzer) -> a.toFailureMetric(e)
-      }.toMap
-
-    // 2. partition the surviving analyzers by execution strategy
-    val grouping = passed.collect { case g: GroupingAnalyzer[_] => g }
-    val scanShareable = passed.collect {
-      case s: AnyScanAnalyzer if !s.isInstanceOf[GroupingAnalyzer[_]] => s
-    }
-    val others = passed.filterNot(a =>
-      grouping.contains(a) || scanShareable.contains(a))
-
-    // 3. ONE fused scan for all scan-shareable analyzers
-    //    (reference capability: runners/AnalysisRunner.scala:350-380)
-    val scanMetrics: Map[AnyAnalyzer, Metric[_]] =
-      if (scanShareable.isEmpty) Map.empty
-      else runScanShareable(data, scanShareable)
-
-    // 4. one frequency table per (groupingColumns.sorted, where), shared;
-    //    the family's row count (same filters as the frequencies) comes out
-    //    of the SAME fused aggregation over the table — no extra scan
-    //    (reference capability: runners/AnalysisRunner.scala:218-234)
-    val groupingMetrics: Map[AnyAnalyzer, Metric[_]] =
-      grouping
-        .groupBy(_.groupingKey)
-        .flatMap { case (_, analyzersForKey) =>
-          runGroupingFamily(data, analyzersForKey)
-        }
-
-    // 5. all KLL sketches with the same WHERE share ONE RDD pass with
-    //    per-column updaters (reference capability: runners/KLLRunner.scala:89-177)
-    val kllAnalyzers = others.collect { case k: graft.sketch.KLLSketchAnalyzer => k }
-    val kllMetrics: Map[AnyAnalyzer, Metric[_]] =
-      kllAnalyzers.groupBy(_.where).flatMap { case (_, group) =>
-        graft.sketch.KLLSketchAnalyzer.calculateBatch(data, group)
-      }
-
-    // 6. everything else (Histogram, HistogramBinned, MutualInformation via
-    //    its own plan, CustomSql, driver-side analyzers) runs standalone
-    val otherMetrics: Map[AnyAnalyzer, Metric[_]] =
-      others.filterNot(kllAnalyzers.contains(_))
-        .map(a => (a: AnyAnalyzer) -> a.calculate(data)).toMap
-
-    AnalyzerContext(failureMetrics ++ scanMetrics ++ groupingMetrics ++
-      kllMetrics ++ otherMetrics)
-  }
-
-  /** Incremental run: computes states from `data`, merges each with the
-    * state loaded from `aggregateWith` (if any), optionally persists the
-    * merged state, and renders metrics from the MERGED state — the
-    * partition-and-merge algebra that avoids rescanning historic data
-    * (reference capability: analyzers/Analyzer.scala:126-166).
+  /** Computes `analyzers` over `data`. With `aggregateWith`, each fresh
+    * state is merged with the state loaded from it, so the metrics cover
+    * the earlier data too without rescanning it; with `saveStatesWith`,
+    * the merged states are persisted for the next run (reference
+    * capability: analyzers/Analyzer.scala:126-166).
     */
-  def runStateful(
+  def run(
       data: DataFrame,
       analyzers: Seq[AnyAnalyzer],
       aggregateWith: Option[StateLoader] = None,
       saveStatesWith: Option[StatePersister] = None): AnalyzerContext = {
 
     val distinct = analyzers.distinct
+    if (distinct.isEmpty) return AnalyzerContext.empty
+    val incremental = aggregateWith.nonEmpty || saveStatesWith.nonEmpty
 
-    // one fused agg computes the FRESH state of every scan-shareable
-    // analyzer — the streaming/incremental hot path must not pay one scan
-    // per analyzer when batch mode pays one scan total
-    val scanShareable = distinct.collect {
-      // SharedPercentiles are EXCLUDED from the fused agg here: their raw
-      // aggregationFunctions build the unbounded in-buffer percentile,
-      // bypassing ExactQuantileGuard; their per-analyzer computeStateFrom
-      // routes over-budget columns through the distributed selection
-      case s: AnyScanAnalyzer
-          if !s.isInstanceOf[graft.operators.GroupingAnalyzer[_]] &&
-            !s.isInstanceOf[graft.operators.SharedPercentiles] &&
-            scala.util.Try(s.preconditions.foreach(_(data.schema))).isSuccess => s
+    // 1. precondition short-circuit: failing analyzers become failure
+    //    metrics without running any job
+    //    (reference capability: runners/AnalysisRunner.scala:143-152)
+    val checked = distinct.map(a => a -> Try(checkAdmissible(a, data.schema, incremental)))
+    val passed = checked.collect { case (a, Success(_)) => a }
+    val failed = checked.collect { case (a, Failure(e)) => a -> (a.toFailureMetric(e): Metric[_]) }
+
+    // 2. partition the surviving analyzers by execution strategy
+    val grouping = passed.collect { case g: GroupingAnalyzer[_] => g }
+    val scanShareable = passed.collect {
+      case s: AnyScanAnalyzer if !s.isInstanceOf[GroupingAnalyzer[_]] => s
     }
-    val fusedFresh: Map[AnyAnalyzer, Option[State[_]]] =
-      if (scanShareable.isEmpty) Map.empty
-      else fusedScanStates(data, scanShareable)
+    val kll = passed.collect { case k: KLLSketchAnalyzer => k }
+    val standalone = passed.filterNot(a =>
+      grouping.contains(a) || scanShareable.contains(a) || kll.contains(a))
 
-    // grouping analyzers with the same (columns, where) have IDENTICAL
-    // state (the shared frequency table) — compute it once per key, not
-    // once per analyzer (Uniqueness + Entropy on one column must not run
-    // two groupBys on the incremental path when batch mode runs one). The
-    // table is cached when shared: each analyzer still renders its own
-    // metric over it, plus optional state persistence. Computation is
-    // LAZY, so a groupBy that fails at runtime throws inside the
-    // per-analyzer try below and becomes failure metrics for exactly its
-    // group — other analyzers still succeed, as on the per-analyzer path.
-    val cachedFreqs = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val groupingFresh: Map[(Seq[String], Option[String]), () => Option[State[_]]] =
-      distinct
-        .collect { case g: graft.operators.GroupingAnalyzer[_] => g }
-        .groupBy(_.groupingKey)
-        .map { case (key, group) =>
-          val head = group.head
-          lazy val state: Option[State[_]] =
-            if (group.size > 1) {
-              val st = graft.operators.FrequenciesAndNumRows
-                .computeCached(data, head.groupingColumns, head.where)
-              cachedFreqs += st.frequencies
-              Some(st)
-            } else head.computeStateFrom(data).asInstanceOf[Option[State[_]]]
-          key -> (() => state)
-        }
+    // 3. fresh states: ONE fused scan, one pass per KLL WHERE, and a
+    //    standalone computation for everything else (Histogram, CustomSql,
+    //    metadata analyzers), each finished the same way
+    val fresh: FreshStates =
+      scanStates(data, scanShareable) ++
+        kll.groupBy(_.where).values.flatMap(kllStates(data, _)) ++
+        standalone.map(a => a -> Try(a.asInstanceOf[Typed].computeStateFrom(data)))
+    val finished = fresh.map { case (a, state) =>
+      a -> finish(a, aggregateWith.toSeq, saveStatesWith)(state.get)
+    }
 
-    try {
-      val metrics = distinct.map { a =>
-        val metric: Metric[_] =
-          try {
-            a.preconditions.foreach(_(data.schema))
-            val typed = a.asInstanceOf[Analyzer[State[_], Metric[_]]]
-            a match {
-              // non-mergeable BY DESIGN (edges are data-dependent; the
-              // state provider refuses to persist it): in a plain stateful
-              // run compute the metric directly, but under aggregateWith/
-              // saveStatesWith fail LOUDLY — a silent current-batch-only
-              // number mixed into cumulative metrics is exactly the
-              // corruption the persist-side guard exists to prevent
-              case hb: graft.operators.HistogramBinned =>
-                if (aggregateWith.nonEmpty || saveStatesWith.nonEmpty) {
-                  throw new IllegalArgumentException(
-                    "HistogramBinned state is not mergeable across runs " +
-                      "(bin edges are data-dependent) — it cannot " +
-                      "participate in aggregateWith/saveStatesWith " +
-                      "incremental runs; compute it per batch instead")
-                }
-                hb.calculate(data)
-              case _ =>
-                val fresh = fusedFresh.getOrElse(a, a match {
-                  case g: graft.operators.GroupingAnalyzer[_] =>
-                    groupingFresh(g.groupingKey)()
-                  case _ => typed.computeStateFrom(data)
-                })
-                statefulMetric(typed, fresh, aggregateWith, saveStatesWith)
-            }
-          } catch {
-            case scala.util.control.NonFatal(e) => a.toFailureMetric(e)
-          }
-        (a: AnyAnalyzer) -> metric
-      }.toMap
-      AnalyzerContext(metrics)
-    } finally {
-      cachedFreqs.foreach(_.unpersist(blocking = false))
+    // 4. one frequency table per (groupingColumns.sorted, where), shared
+    val groupingMetrics = grouping.groupBy(_.groupingKey).values
+      .flatMap(runGroupingFamily(data, _, aggregateWith, saveStatesWith))
+
+    AnalyzerContext((failed ++ finished ++ groupingMetrics).toMap)
+  }
+
+  /** Preconditions, plus the refusal of HistogramBinned in incremental
+    * runs: its state is not mergeable BY DESIGN (bin edges are
+    * data-dependent), and a current-batch-only number mixed into
+    * cumulative metrics is exactly the corruption the persist-side guard
+    * exists to prevent — fail LOUDLY instead.
+    */
+  private def checkAdmissible(
+      analyzer: AnyAnalyzer,
+      schema: StructType,
+      incremental: Boolean): Unit = {
+    analyzer.preconditions.foreach(_(schema))
+    if (incremental && analyzer.isInstanceOf[HistogramBinned]) {
+      throw new IllegalArgumentException(
+        "HistogramBinned state is not mergeable across runs " +
+          "(bin edges are data-dependent) — it cannot " +
+          "participate in aggregateWith/saveStatesWith " +
+          "incremental runs; compute it per batch instead")
     }
   }
 
-  /** Fresh states for scan-shareable analyzers from ONE fused aggregation. */
-  private def fusedScanStates(
-      data: DataFrame,
-      analyzers: Seq[AnyScanAnalyzer]): Map[AnyAnalyzer, Option[State[_]]] = {
+  /** Load → merge → persist → render for one analyzer. Only NonFatal
+    * errors (including one raised while computing `fresh`) become failure
+    * metrics — an OutOfMemoryError must surface, not masquerade as a
+    * failed check.
+    */
+  private def finish(
+      analyzer: AnyAnalyzer,
+      loaders: Seq[StateLoader],
+      saveStatesWith: Option[StatePersister])(fresh: => Option[State[_]]): Metric[_] = {
+    val typed = analyzer.asInstanceOf[Typed]
     try {
-      // same heavy-analyzer parallelize rule as the batch path — ALSO
-      // keeps randomized sketch aggregates (KLL udaf) on the identical
-      // partitioning, so stateful and batch runs agree bit-for-bit
-      val hasHeavy = analyzers.exists {
-        case _: graft.operators.DataTypeAnalyzer => true
-        case _: graft.operators.ApproxQuantile => true
-        case _: graft.operators.ApproxQuantiles => true
-        case _ => false
-      }
-      val input = if (hasHeavy) ensureParallelism(data) else data
-      val aggregations = analyzers.flatMap(_.aggregationFunctions())
-      val offsets = analyzers.map(_.aggregationFunctions().length).scanLeft(0)(_ + _)
-      val row: Row = input.agg(aggregations.head, aggregations.tail: _*).collect().head
-      analyzers.zip(offsets).map { case (a, offset) =>
-        (a: AnyAnalyzer) ->
-          a.fromAggregationResult(row, offset).asInstanceOf[Option[State[_]]]
-      }.toMap
+      val merged = (fresh +: loaders.map(_.load(typed))).flatten
+        .reduceOption((s1, s2) => s1.mergeUntyped(s2).asInstanceOf[State[_]])
+      merged.foreach(m => saveStatesWith.foreach(_.persist[State[_]](typed, m)))
+      typed.computeMetricFrom(merged)
     } catch {
-      // degrade to per-analyzer (a malformed aggregation must not poison all)
-      case scala.util.control.NonFatal(_) => Map.empty
+      case NonFatal(e) => analyzer.toFailureMetric(e)
     }
   }
 
@@ -287,38 +204,9 @@ object AnalysisRunner {
   def runOnAggregatedStates(
       analyzers: Seq[AnyAnalyzer],
       stateLoaders: Seq[StateLoader],
-      saveStatesWith: Option[StatePersister] = None): AnalyzerContext = {
-
-    val metrics = analyzers.distinct.map { a =>
-      val typed = a.asInstanceOf[Analyzer[State[_], Metric[_]]]
-      val metric: Metric[_] =
-        try {
-          val states: Seq[State[_]] = stateLoaders.flatMap(_.load(typed))
-          val merged: Option[State[_]] =
-            states.reduceOption((s1, s2) => s1.mergeUntyped(s2).asInstanceOf[State[_]])
-          merged.foreach(m => saveStatesWith.foreach(_.persist[State[_]](typed, m)))
-          typed.computeMetricFrom(merged)
-        } catch {
-          case scala.util.control.NonFatal(e) => a.toFailureMetric(e)
-        }
-      (a: AnyAnalyzer) -> metric
-    }.toMap
-    AnalyzerContext(metrics)
-  }
-
-  private def statefulMetric(
-      analyzer: Analyzer[State[_], Metric[_]],
-      fresh: Option[State[_]],
-      aggregateWith: Option[StateLoader],
-      saveStatesWith: Option[StatePersister]): Metric[_] = {
-    val loaded: Option[State[_]] = aggregateWith.flatMap(_.load(analyzer))
-    val merged: Option[State[_]] = (fresh, loaded) match {
-      case (Some(f), Some(l)) => Some(f.mergeUntyped(l).asInstanceOf[State[_]])
-      case (f, l) => f.orElse(l)
-    }
-    merged.foreach(m => saveStatesWith.foreach(_.persist[State[_]](analyzer, m)))
-    analyzer.computeMetricFrom(merged)
-  }
+      saveStatesWith: Option[StatePersister] = None): AnalyzerContext =
+    AnalyzerContext(analyzers.distinct.map(a =>
+      a -> finish(a, stateLoaders, saveStatesWith)(None)).toMap)
 
   /** Heavy per-row aggregations (exact-percentile buffers, per-row regex
     * type inference, KLL sketch updates) are dominated by per-row CPU, not
@@ -329,165 +217,153 @@ object AnalysisRunner {
     graft.core.Parallelism.floor(data)
 
   /** All scan-shareable analyzers → one `df.agg(...)`; each analyzer
-    * decodes its slice of the single result row via offsets.
+    * decodes its state from its slice of the single result row via offsets.
     */
-  private def runScanShareable(
-      rawData: DataFrame,
-      analyzers: Seq[AnyScanAnalyzer])
-    : Map[AnyAnalyzer, Metric[_]] = {
-
+  private def scanStates(rawData: DataFrame, analyzers: Seq[AnyScanAnalyzer]): FreshStates = {
+    if (analyzers.isEmpty) return Seq.empty
     try {
       // per-row-CPU-bound aggregations get cluster-wide parallelism even on
       // degenerate scan layouts; pure-I/O aggregate families never pay the
       // extra exchange
       val hasHeavy = analyzers.exists {
-        case _: graft.operators.SharedPercentiles => true
-        case _: graft.operators.DataTypeAnalyzer => true
+        case _: SharedPercentiles => true
+        case _: DataTypeAnalyzer => true
         // per-row KLL-udaf sketch updates are exactly the CPU-bound case
         // ensureParallelism documents
-        case _: graft.operators.ApproxQuantile => true
-        case _: graft.operators.ApproxQuantiles => true
+        case _: ApproxQuantile => true
+        case _: ApproxQuantiles => true
         case _ => false
       }
       val data = if (hasHeavy) ensureParallelism(rawData) else rawData
       // executor-memory guard BEFORE the scan: exact-percentile buffers
-      // over budget fail fast as per-analyzer metrics (one cheap count job
-      // across all keys, only when such analyzers are present — see
+      // over budget are routed elsewhere (one cheap count job across all
+      // keys, only when such analyzers are present — see
       // ExactQuantileGuard). It reads rawData, not the repartitioned view:
       // the guard job and the fused agg are separate actions, so the
       // parallelize exchange is not reused between them — the HLL estimate
       // is cheap enough per row that rerunning the shuffle for it would
       // cost more than it saves
-      val over = graft.operators.ExactQuantileGuard.overBudget(rawData,
-        analyzers.collect { case s: graft.operators.SharedPercentiles => s })
+      val over = ExactQuantileGuard.overBudget(rawData,
+        analyzers.collect { case s: SharedPercentiles => s })
       val (guarded, runnable) = analyzers.partition {
-        case s: graft.operators.SharedPercentiles => over.contains(s.percentileKey)
+        case s: SharedPercentiles => over.contains(s.percentileKey)
         case _ => false
       }
+      def percentiles(a: AnyScanAnalyzer) = a.asInstanceOf[SharedPercentiles]
       // over-budget exact percentiles run as a distributed selection (every
       // stage bounded by partition size, not column cardinality) instead of
       // the single in-buffer `percentile` aggregate — ONE selection per
-      // (column, where) key serves all its quantile analyzers
-      val guardedMetrics = guarded
-        .groupBy(_.asInstanceOf[graft.operators.SharedPercentiles].percentileKey)
+      // (column, where) key serves all its quantile analyzers. None (no
+      // rows after null/where filtering) is the same empty state the
+      // in-buffer percentile's null result decodes to; a selection error
+      // surfaces as itself, not as the budget-exceeded advice
+      val guardedStates: FreshStates = guarded.groupBy(percentiles(_).percentileKey).toSeq
         .flatMap { case ((column, where), as) =>
-          val allQs = as.flatMap(
-            _.asInstanceOf[graft.operators.SharedPercentiles].requestedQuantiles).distinct
-          val byQ: Either[Throwable, Option[Map[Double, Double]]] =
-            try Right(graft.operators.DistributedExactQuantile
-              .percentiles(rawData, column, where, allQs))
-            catch { case scala.util.control.NonFatal(e) => Left(e) }
-          as.map { a =>
-            val s = a.asInstanceOf[graft.operators.SharedPercentiles]
-            val metric: Metric[_] = byQ match {
-              case Right(Some(m)) => s.metricFromQuantiles(
-                s.requestedQuantiles.sorted.map(m))
-              // no rows after null/where filtering — same empty-state
-              // metric the in-buffer percentile's null result produces
-              case Right(None) => a.computeMetricFrom(None)
-              // a real selection error must surface as itself, not be
-              // rebranded as the budget-exceeded advice
-              case Left(e) => a.toFailureMetric(e)
-            }
-            (a: AnyAnalyzer) -> metric
-          }
-        }.toMap
-      if (runnable.isEmpty) guardedMetrics
+          val byQ = Try(DistributedExactQuantile.percentiles(rawData, column, where,
+            as.flatMap(percentiles(_).requestedQuantiles).distinct))
+          as.map(a => a -> byQ.map(_.map(percentiles(a).stateFromQuantiles)))
+        }
+      if (runnable.isEmpty) guardedStates
       else {
         // fuse exact-percentile requests per (column, where): all quantiles
         // on a column share ONE percentile buffer (Catalyst dedups the
         // identical aggregate), instead of one full value buffer per quantile
         val quantilesByKey: Map[(String, Option[String]), Seq[Double]] = runnable
-          .collect { case s: graft.operators.SharedPercentiles => s }
+          .collect { case s: SharedPercentiles => s }
           .groupBy(_.percentileKey)
-          .map { case (k, ss) =>
-            k -> ss.flatMap(_.requestedQuantiles).distinct.sorted
-          }
-        def aggsFor(a: AnyScanAnalyzer): Seq[org.apache.spark.sql.Column] = a match {
-          case s: graft.operators.SharedPercentiles =>
-            s.aggregationFunctionsFused(quantilesByKey(s.percentileKey))
+          .map { case (k, ss) => k -> ss.flatMap(_.requestedQuantiles).distinct.sorted }
+        def aggsFor(a: AnyScanAnalyzer): Seq[Column] = a match {
+          case s: SharedPercentiles => s.aggregationFunctionsFused(quantilesByKey(s.percentileKey))
           case other => other.aggregationFunctions()
         }
         val aggregations = runnable.flatMap(aggsFor)
-        val offsets = runnable.map(aggsFor(_).length)
-          .scanLeft(0)(_ + _)
+        val offsets = runnable.map(aggsFor(_).length).scanLeft(0)(_ + _)
         val row: Row = data.agg(aggregations.head, aggregations.tail: _*).collect().head
-        guardedMetrics ++ runnable.zip(offsets).map { case (a, offset) =>
-          val metric: Metric[_] =
-            try a.metricFromAggregationResult(row, offset)
-            catch { case scala.util.control.NonFatal(e) => a.toFailureMetric(e) }
-          (a: AnyAnalyzer) -> metric
-        }.toMap
+        guardedStates ++ runnable.zip(offsets).map { case (a, offset) =>
+          a -> Try(a.fromAggregationResult(row, offset): Option[State[_]])
+        }
       }
     } catch {
-      case scala.util.control.NonFatal(_) =>
+      case NonFatal(_) =>
         // one malformed aggregation must not poison the whole fused scan:
-        // degrade to per-analyzer execution so only the offender fails
+        // degrade to per-analyzer states so only the offender fails
         // (fatal JVM errors propagate — retrying in a corrupted JVM or
         // rebranding an OOM as a failure metric hides the real condition)
-        analyzers.map(a => (a: AnyAnalyzer) -> (a.calculate(rawData): Metric[_])).toMap
+        analyzers.map(a => a -> Try(a.computeStateFrom(rawData): Option[State[_]]))
     }
   }
 
-  /** One frequency table for the whole family; frequency-based aggregations
-    * are fused into one agg over it. The table is persisted only when a
-    * second pass over it is needed
-    * (reference capability: runners/AnalysisRunner.scala:574-578).
+  /** All KLL sketches with the same WHERE share ONE pass with per-column
+    * updaters (reference capability: runners/KLLRunner.scala:89-177); if
+    * that pass fails, each sketch is computed alone so one bad column does
+    * not fail the others.
+    */
+  private def kllStates(data: DataFrame, group: Seq[KLLSketchAnalyzer]): FreshStates =
+    Try(KLLSketchAnalyzer.computeSketches(data, group)) match {
+      case Success(states) => group.zip(states.map(Success(_)))
+      case Failure(_) => group.map(a => a -> Try(a.computeStateFrom(data)))
+    }
+
+  /** One frequency table serves the whole (columns, where) family. The
+    * family shares one state: the fresh table is merged with the stored
+    * table of the first member that has one (the reference loads its
+    * sample analyzer's), ONE fused aggregation over the merged table
+    * yields numRows plus every frequency-based metric, and the merged
+    * table is persisted under every member. The table is cached only when
+    * a second pass over it follows — a persist or a non-frequency-based
+    * analyzer (reference capability: runners/AnalysisRunner.scala:218-234,
+    * 574-578) — and released before this returns.
     */
   private def runGroupingFamily(
       data: DataFrame,
-      analyzers: Seq[GroupingAnalyzer[_ <: Metric[_]]]): Map[AnyAnalyzer, Metric[_]] = {
+      analyzers: Seq[GroupingAnalyzer[_ <: Metric[_]]],
+      aggregateWith: Option[StateLoader],
+      saveStatesWith: Option[StatePersister]): Seq[(AnyAnalyzer, Metric[_])] = {
 
     val head = analyzers.head
+    val freqBased = analyzers.collect { case f: FrequencyBasedAnalyzer => f }
+    var cached: Option[DataFrame] = None
     try {
-      val frequencies = FrequenciesAndNumRows.computeFrequenciesOnly(
+      val fresh = FrequenciesAndNumRows.computeFrequenciesOnly(
         data, head.groupingColumns, head.where)
-
-      val freqBased = analyzers.collect { case f: FrequencyBasedAnalyzer => f }
-      val nonShareable = analyzers.filterNot(freqBased.contains(_))
-
-      // all freq-based analyzers fuse into ONE agg job over the table, so
-      // persistence only pays when a non-shareable analyzer forces a
-      // genuine second pass (reference: runners/AnalysisRunner.scala:574-578)
-      val needsPersist = nonShareable.nonEmpty
-      if (needsPersist) frequencies.persist(StorageLevel.MEMORY_AND_DISK)
+      val loaded = aggregateWith.flatMap(loader =>
+        analyzers.iterator.flatMap(loader.load(_)).nextOption())
+      val frequencies = loaded.fold(fresh)(l => FrequenciesAndNumRows.sumCounts(fresh, l.frequencies))
+      if (saveStatesWith.nonEmpty || freqBased.size < analyzers.size) {
+        frequencies.persist(StorageLevel.MEMORY_AND_DISK)
+        cached = Some(frequencies)
+      }
 
       // slot 0 of the fused agg derives numRows = SUM(count): the family's
       // row count under the same (non-null keys AND where) filters as the
-      // frequencies themselves — reference numRows semantics, no extra scan
-      import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
-      val numRowsAgg =
-        coalesce(sum(col(FrequenciesAndNumRows.COUNT_COL)), lit(0L)) :: Nil
-      // aggregation expressions are numRows-independent (numRows only feeds
+      // frequencies themselves — reference numRows semantics, no extra scan.
+      // Aggregation expressions are numRows-independent (numRows only feeds
       // the decode step), so 0 is a safe placeholder while building them
-      val aggs = numRowsAgg ++ freqBased.flatMap(_.aggregationFunctionsOverFrequencies(0L))
+      val aggs = coalesce(sum(col(FrequenciesAndNumRows.COUNT_COL)), lit(0L)) +:
+        freqBased.flatMap(_.aggregationFunctionsOverFrequencies(0L))
       val offsets = freqBased.map(_.aggregationFunctionsOverFrequencies(0L).length)
-        .scanLeft(numRowsAgg.length)(_ + _)
+        .scanLeft(1)(_ + _)
       val row = frequencies.agg(aggs.head, aggs.tail: _*).collect().head
-      val numRows = row.getLong(0)
+      val state = FrequenciesAndNumRows(frequencies, row.getLong(0))
+      val offsetOf = freqBased.zip(offsets).toMap
 
-      val fused: Map[AnyAnalyzer, Metric[_]] =
-        freqBased.zip(offsets).map { case (a, offset) =>
-          val metric: Metric[_] =
-            try a.metricFromRow(row, offset, numRows)
-            catch { case scala.util.control.NonFatal(e) => a.toFailureMetric(e) }
-          (a: AnyAnalyzer) -> metric
-        }.toMap
-
-      val state = FrequenciesAndNumRows(frequencies, numRows)
-      val standalone: Map[AnyAnalyzer, Metric[_]] = nonShareable.map { a =>
+      analyzers.map { a =>
         val metric: Metric[_] =
-          try a.asInstanceOf[Analyzer[FrequenciesAndNumRows, Metric[_]]]
-            .computeMetricFrom(Some(state))
-          catch { case scala.util.control.NonFatal(e) => a.toFailureMetric(e) }
+          try {
+            saveStatesWith.foreach(_.persist(a, state))
+            a match {
+              case f: FrequencyBasedAnalyzer => f.metricFromRow(row, offsetOf(f), state.numRows)
+              case other => other.computeMetricFrom(Some(state))
+            }
+          } catch {
+            case NonFatal(e) => a.toFailureMetric(e)
+          }
         (a: AnyAnalyzer) -> metric
-      }.toMap
-
-      if (needsPersist) frequencies.unpersist()
-      fused ++ standalone
+      }
     } catch {
-      case scala.util.control.NonFatal(e) =>
-        analyzers.map(a => (a: AnyAnalyzer) -> a.toFailureMetric(e)).toMap
+      case NonFatal(e) => analyzers.map(a => (a: AnyAnalyzer) -> (a.toFailureMetric(e): Metric[_]))
+    } finally {
+      cached.foreach(_.unpersist(blocking = true))
     }
   }
 }
@@ -523,7 +399,10 @@ class AnalysisRunBuilder(data: DataFrame) {
     this
   }
 
-  /** Skip analyzers whose metrics are already stored under `key`. */
+  /** Skip analyzers whose metrics are already stored under `key`; with
+    * `failIfResultsMissing`, fail unless the stored result covers every
+    * analyzer.
+    */
   def reuseExistingResultsForKey(
       key: graft.repository.ResultKey,
       failIfResultsMissing: Boolean = false): AnalysisRunBuilder = {
@@ -571,51 +450,14 @@ class AnalysisRunBuilder(data: DataFrame) {
 
   def run(): AnalyzerContext = {
     val distinct = analyzers.distinct
-
-    val cached: Map[AnyAnalyzer, Metric[_]] = (repository, reuseKey) match {
-      case (Some(repo), Some(key)) =>
-        val loaded = repo.loadByKey(key).map(_.metricMap).getOrElse {
-          if (failIfResultsMissing) {
-            throw new IllegalStateException(s"No stored results for $key")
-          }
-          Map.empty[AnyAnalyzer, Metric[_]]
-        }
-        loaded.filter { case (a, _) => distinct.contains(a) }
-      case _ =>
-        if (reuseKey.isDefined) {
-          throw new IllegalStateException(
-            "useRepository() must be called before reuseExistingResultsForKey")
-        }
-        Map.empty
-    }
-
-    val toCompute = distinct.filterNot(cached.contains)
-    val computed =
-      if (stateLoader.isDefined || statePersister.isDefined) {
-        AnalysisRunner.runStateful(data, toCompute,
-          aggregateWith = stateLoader, saveStatesWith = statePersister)
-      } else {
-        AnalysisRunner.run(data, toCompute)
-      }
+    val cached = RunResults.reused(repository, reuseKey, failIfResultsMissing, distinct)
+    val computed = AnalysisRunner.run(data, distinct.filterNot(cached.contains),
+      aggregateWith = stateLoader, saveStatesWith = statePersister)
     val context = AnalyzerContext(cached ++ computed.metricMap)
-
-    for {
-      repo <- repository
-      key <- saveKey
-    } {
-      val existing = repo.loadByKey(key).map(_.metricMap).getOrElse(Map.empty)
-      repo.save(key, AnalyzerContext(existing ++ context.metricMap))
-    }
-
-    successMetricsPath.foreach { path =>
-      val spark = outputSession.getOrElse(data.sparkSession)
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (overwriteFiles || !fs.exists(fsPath)) {
-        graft.checks.VerificationResult.saveJsonToPath(
-          spark, path, AnalyzerContext.successMetricsAsJson(context))
-      }
-    }
+    RunResults.saveOrAppend(repository, saveKey, context.metricMap)
+    successMetricsPath.foreach(path => RunResults.writeJson(
+      outputSession.getOrElse(data.sparkSession), path, overwriteFiles,
+      AnalyzerContext.successMetricsAsJson(context)))
     context
   }
 }

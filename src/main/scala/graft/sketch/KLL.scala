@@ -113,18 +113,29 @@ class KLLSketch(
 
   def quantiles(n: Int): Seq[Double] = (0 to n).map(i => quantile(i.toDouble / n))
 
-  /** Even-width bucket counts over [min, max]
+  /** Even-width bucket counts over [min, max]: bucket b holds the items
+    * in [lo, hi), the last one also its upper edge max
     * (reference capability: metrics/BucketDistribution).
+    *
+    * Every interior edge reads one cumulative rank — the sketch's weight
+    * below the edge, scaled from its total weight to the exact `count` —
+    * so the counts telescope to `count` exactly. Compactions make the
+    * total weight drift from `count`; mixing the two scales would not sum
+    * to n. `min` and `max` are exact, so when they differ the first and
+    * the last bucket each keep at least one item.
     */
   def buckets(numBuckets: Int): Seq[BucketValue] = {
     if (count == 0) return Seq.empty
     val width = if (max > min) (max - min) / numBuckets else 1.0
+    val totalWeight = rank(Double.PositiveInfinity)
+    def below(edge: Double): Long = {
+      val scaled = math.round(rank(math.nextDown(edge)).toDouble * count / totalWeight)
+      if (max > min) math.min(math.max(scaled, 1L), count - 1) else scaled
+    }
+    val cumulative = 0L +: (1 until numBuckets).map(b => below(min + b * width)) :+ count
     (0 until numBuckets).map { b =>
-      val lo = min + b * width
       val hi = if (b == numBuckets - 1) max else min + (b + 1) * width
-      val below = if (b == 0) 0L else rank(math.nextDown(lo))
-      val upTo = if (b == numBuckets - 1) count else rank(hi)
-      BucketValue(lo, hi, math.max(upTo - below, 0L))
+      BucketValue(min + b * width, hi, cumulative(b + 1) - cumulative(b))
     }
   }
 

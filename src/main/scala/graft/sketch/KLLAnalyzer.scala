@@ -104,23 +104,6 @@ object KLLSketchAnalyzer {
       .treeReduce((a, b) => Array.tabulate(n)(i => a(i).merge(b(i))), depth = 2)
     sketches.toSeq.map(s => if (s.count == 0L) None else Some(KLLState(s)))
   }
-
-  /** Batch entry used by the AnalysisRunner: metrics for a same-WHERE group. */
-  private[graft] def calculateBatch(
-      data: DataFrame,
-      group: Seq[KLLSketchAnalyzer]): Map[AnyAnalyzer, Metric[_]] = {
-    try {
-      group.foreach(a => a.preconditions.foreach(_(data.schema)))
-      val states = computeSketches(data, group)
-      group.zip(states).map { case (a, st) =>
-        (a: AnyAnalyzer) -> (a.computeMetricFrom(st): Metric[_])
-      }.toMap
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        // fall back to per-analyzer so one bad column doesn't fail the batch
-        group.map(a => (a: AnyAnalyzer) -> (a.calculate(data): Metric[_])).toMap
-    }
-  }
 }
 
 /** Distribution distance measures — driver-side over sketches/histograms

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.checks.{Check, CheckStatus, VerificationResult}
+import graft.checks.{Check, VerificationResult, VerificationSuite}
 import graft.core._
 import graft.runners.AnalysisRunner
 
@@ -27,13 +27,10 @@ class StreamingVerifier(
   /** Processes one micro-batch; returns the cumulative verification result. */
   def processBatch(batch: DataFrame): VerificationResult = {
     val all = (analyzers ++ checks.flatMap(_.requiredAnalyzers())).distinct
-    val ctx = AnalysisRunner.runStateful(
+    val ctx = AnalysisRunner.run(
       batch, all, aggregateWith = Some(provider), saveStatesWith = Some(provider))
     truncateGroupingLineage(all)
-    val checkResults = checks.map(c => c -> c.evaluate(ctx))
-    val status = checkResults.map(_._2.status)
-      .foldLeft(CheckStatus.Success: CheckStatus)(CheckStatus.max)
-    val result = VerificationResult(status, checkResults, ctx.metricMap)
+    val result = VerificationSuite.evaluate(checks, ctx)
     lastResult = Some(result)
     result
   }

@@ -49,9 +49,9 @@ object Demo {
       Seq(Size(), Mean("l_quantity"), Uniqueness(Seq("l_orderkey")))
     val pLeft = new InMemoryStateProvider
     val pRight = new InMemoryStateProvider
-    AnalysisRunner.runStateful(df.filter("l_quantity <= 25"), analyzers,
+    AnalysisRunner.run(df.filter("l_quantity <= 25"), analyzers,
       saveStatesWith = Some(pLeft))
-    AnalysisRunner.runStateful(df.filter("l_quantity > 25"), analyzers,
+    AnalysisRunner.run(df.filter("l_quantity > 25"), analyzers,
       saveStatesWith = Some(pRight))
     val mergedCtx = AnalysisRunner.runOnAggregatedStates(analyzers, Seq(pLeft, pRight))
     val fullCtx = AnalysisRunner.run(df, analyzers)

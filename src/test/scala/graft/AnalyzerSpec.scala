@@ -321,7 +321,7 @@ class AnalyzerSpec extends AnyWordSpec with Matchers with SparkSpec {
       // that must become a failure metric for exactly this analyzer, while
       // every other analyzer (including other grouping keys) still succeeds
       val bad = Uniqueness(Seq("name"), Some("no_such_col > 0"))
-      val ctx = graft.runners.AnalysisRunner.runStateful(df,
+      val ctx = graft.runners.AnalysisRunner.run(df,
         Seq[AnyAnalyzer](Size(), bad, Entropy("group")))
       metricValue(ctx.metric(Size()).get) shouldBe 6.0
       ctx.metric(bad).get.value.isFailure shouldBe true

@@ -110,15 +110,53 @@ class FusionJobCountSpec extends AnyWordSpec with Matchers with SparkSpec {
       val df = data
       df.count()
       val one = countJobs {
-        AnalysisRunner.runStateful(df, Seq[AnyAnalyzer](Uniqueness(Seq("grp"))))
+        AnalysisRunner.run(df, Seq[AnyAnalyzer](Uniqueness(Seq("grp"))))
       }
       val three = countJobs {
-        AnalysisRunner.runStateful(df, Seq[AnyAnalyzer](
+        AnalysisRunner.run(df, Seq[AnyAnalyzer](
           Uniqueness(Seq("grp")), Entropy("grp"), Distinctness(Seq("grp"))))
       }
-      // the frequency groupBy runs ONCE and is cached; each extra analyzer
-      // adds only a tiny aggregation over the cached table
+      // the frequency groupBy runs ONCE; the extra analyzers fuse into the
+      // same aggregation over the table
       three should be <= (one + 2)
+    }
+
+    "read the input once per family in an incremental run with a filesystem provider" in {
+      import org.apache.spark.sql.functions.{col, concat, lit, udf}
+      // every row the plan reads passes this counter once per pass
+      val reads = spark.sparkContext.longAccumulator("graft_input_reads")
+      val tick = udf { (x: Long) => reads.add(1); x }.asNondeterministic()
+      def day(from: Long) = spark.range(from, from + 1000).select(tick(col("id")).as("t"))
+        .select(col("t").as("id"), (col("t") % 7).as("grp"),
+          concat(lit("v"), (col("t") % 13).cast("string")).as("cat"),
+          (col("t") / 3.0).as("value"))
+      // the incremental suite's mix: a scan family, a KLL sketch and two
+      // single-analyzer grouping keys
+      val analyzers = Seq[AnyAnalyzer](Size(), Completeness("value"),
+        Compliance("v>=0", "value >= 0"), Sum("value"), Mean("value"),
+        Minimum("value"), Maximum("value"), StandardDeviation("value"),
+        ApproxCountDistinct("grp"), graft.sketch.KLLSketchAnalyzer("value"),
+        Uniqueness(Seq("id")), CountDistinct(Seq("cat")))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-fusion-states").toString
+      def provider(d: Int) = new HdfsStateProvider(spark, s"$tmp/day$d/state")
+      AnalysisRunner.run(day(0), analyzers, saveStatesWith = Some(provider(1)))
+
+      reads.reset()
+      var ctx: graft.runners.AnalyzerContext = null
+      val jobs = countJobs {
+        ctx = AnalysisRunner.run(day(1000), analyzers,
+          aggregateWith = Some(provider(1)), saveStatesWith = Some(provider(2)))
+      }
+      ctx.metric(Size()).get.value.get shouldBe 2000.0
+      ctx.metric(Uniqueness(Seq("id"))).get.value.get shouldBe 1.0
+      ctx.metric(CountDistinct(Seq("cat"))).get.value.get shouldBe 13.0
+      // scan family + KLL + one pass per grouping key — not three groupBys
+      // per key (row count, persist and metric each re-running it)
+      reads.value shouldBe 4 * 1000L
+      // per key: one stored-table schema read, one fused aggregation and
+      // one write of the merged table from its cache; plus the fused scan
+      // and the KLL pass
+      jobs should be <= 2 + 2 * 3
     }
 
     "skip the scan entirely when all metrics are cached in a repository" in {

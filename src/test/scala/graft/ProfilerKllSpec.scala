@@ -195,6 +195,35 @@ class ProfilerKllSpec extends AnyWordSpec with Matchers with SparkSpec {
       merged.max shouldBe 10000.0
     }
 
+    "keep bucket counts summing to n after multi-partition compactions" in {
+      // a skewed bulk plus three far outliers: most buckets are empty and
+      // the bucket holding the maximum is thin
+      val values = (0 until 60000).map(i => (i % 1000) * (i % 1000) / 1000.0) ++
+        Seq(5000.0, 5000.0, 5000.0)
+      val n = values.size.toLong
+      val eps = 0.01 // the default sketch size's rank error
+      // per-partition sketches merged as the distributed path does, over
+      // several seed sets: the compaction coin flips move the sketch's
+      // total weight above or below n
+      (0 until 6).foreach { trial =>
+        val parts = Array.tabulate(8)(p => new KLLSketch(seed = (trial.toLong << 20) + p))
+        values.zipWithIndex.foreach { case (v, i) => parts(i % 8).update(v) }
+        val sketch = parts.reduce(_ merge _)
+        val buckets = sketch.buckets(10)
+        withClue(s"trial $trial, buckets $buckets: ") {
+          sketch.data.size should be > 1 // compacted at least once
+          buckets.map(_.count).sum shouldBe n
+          buckets.last.count should be > 0L
+          // exact counts over the same [lo, hi) buckets, the last closed
+          buckets.zipWithIndex.foreach { case (b, i) =>
+            val exact = values.count(v => v >= b.lowValue &&
+              (if (i == buckets.size - 1) v <= b.highValue else v < b.highValue))
+            math.abs(b.count - exact).toDouble should be <= 2 * eps * n
+          }
+        }
+      }
+    }
+
     "round-trip serialization" in {
       val s = new KLLSketch(128)
       (1 to 1000).foreach(i => s.update(i.toDouble))

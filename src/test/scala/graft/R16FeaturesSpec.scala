@@ -383,7 +383,7 @@ class R16FeaturesSpec extends AnyWordSpec with Matchers with SparkSpec {
         .createTempDirectory("graft-r16-serde").toString
       try {
         val provider = new graft.core.HdfsStateProvider(spark, s"$tmp/state")
-        graft.runners.AnalysisRunner.runStateful(frame, Seq(analyzer),
+        graft.runners.AnalysisRunner.run(frame, Seq(analyzer),
           saveStatesWith = Some(provider))
         val restored = graft.runners.AnalysisRunner
           .runOnAggregatedStates(Seq(analyzer), Seq(provider))

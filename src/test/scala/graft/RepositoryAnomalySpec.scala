@@ -296,8 +296,8 @@ class RepositoryAnomalySpec extends AnyWordSpec with Matchers with SparkSpec {
 
       val p1 = new InMemoryStateProvider
       val p2 = new InMemoryStateProvider
-      AnalysisRunner.runStateful(left, analyzers, saveStatesWith = Some(p1))
-      AnalysisRunner.runStateful(right, analyzers, saveStatesWith = Some(p2))
+      AnalysisRunner.run(left, analyzers, saveStatesWith = Some(p1))
+      AnalysisRunner.run(right, analyzers, saveStatesWith = Some(p2))
 
       val merged = AnalysisRunner.runOnAggregatedStates(analyzers, Seq(p1, p2))
       val full = AnalysisRunner.run(df, analyzers)
@@ -319,7 +319,7 @@ class RepositoryAnomalySpec extends AnyWordSpec with Matchers with SparkSpec {
         Size(), Mean("l_quantity"), ApproxCountDistinct("l_partkey"),
         Uniqueness(Seq("l_orderkey")), ApproxQuantile("l_extendedprice", 0.5))
 
-      AnalysisRunner.runStateful(df, analyzers, saveStatesWith = Some(provider))
+      AnalysisRunner.run(df, analyzers, saveStatesWith = Some(provider))
       val restored = AnalysisRunner.runOnAggregatedStates(analyzers, Seq(provider))
       val direct = AnalysisRunner.run(df, analyzers)
 
@@ -340,7 +340,7 @@ class RepositoryAnomalySpec extends AnyWordSpec with Matchers with SparkSpec {
       val analyzers: Seq[AnyAnalyzer] = Seq(
         ColumnCount(), ColumnExists("l_quantity"),
         CustomSql("SELECT sum(l_quantity) FROM graft_prov_v"))
-      AnalysisRunner.runStateful(df, analyzers, saveStatesWith = Some(provider))
+      AnalysisRunner.run(df, analyzers, saveStatesWith = Some(provider))
       val restored = AnalysisRunner.runOnAggregatedStates(analyzers,
         Seq(new HdfsStateProvider(spark, s"$tmp/state")))
       val direct = AnalysisRunner.run(df, analyzers)
@@ -364,7 +364,7 @@ class RepositoryAnomalySpec extends AnyWordSpec with Matchers with SparkSpec {
       // was ever persisted under that key) so an aggregateWith run still
       // computes fresh instead of surfacing a failure metric
       provider.load(h) shouldBe None
-      val ctx = AnalysisRunner.runStateful(df, Seq(h),
+      val ctx = AnalysisRunner.run(df, Seq(h),
         aggregateWith = Some(provider))
       ctx.metric(h).get.value.isSuccess shouldBe true
     }
@@ -373,14 +373,14 @@ class RepositoryAnomalySpec extends AnyWordSpec with Matchers with SparkSpec {
       val df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       val hb = HistogramBinned("l_quantity", binCount = Some(3))
       // plain stateful run (no cross-run state): per-batch metric is fine
-      val plain = AnalysisRunner.runStateful(df, Seq(hb))
+      val plain = AnalysisRunner.run(df, Seq(hb))
       plain.metric(hb).get.value.isSuccess shouldBe true
       // cumulative run: a current-batch-only number silently mixed into
       // cumulative metrics is corruption — must surface as a failure
-      val agg = AnalysisRunner.runStateful(df, Seq(hb),
+      val agg = AnalysisRunner.run(df, Seq(hb),
         aggregateWith = Some(new InMemoryStateProvider))
       agg.metric(hb).get.value.isFailure shouldBe true
-      val save = AnalysisRunner.runStateful(df, Seq(hb),
+      val save = AnalysisRunner.run(df, Seq(hb),
         saveStatesWith = Some(new InMemoryStateProvider))
       save.metric(hb).get.value.isFailure shouldBe true
     }
@@ -453,6 +453,30 @@ class RepositoryAnomalySpec extends AnyWordSpec with Matchers with SparkSpec {
         .addCheck(Check(CheckLevel.Error, "covered").hasSize(_ == 2))
         .run()
       ok.status shouldBe CheckStatus.Success
+    }
+
+    "fail strict analysis reuse when the stored result is only partial" in {
+      val s = spark
+      import s.implicits._
+      val df = Seq((1, 2.0), (2, 3.0)).toDF("id", "v")
+      val repo = new InMemoryMetricsRepository
+      val key = ResultKey(10L)
+      repo.save(key, AnalyzerContext(Map[AnyAnalyzer, Metric[_]](
+        Size() -> DoubleMetric(Entity.Dataset, "Size", "*",
+          scala.util.Success(2.0)))))
+      an[IllegalStateException] should be thrownBy {
+        AnalysisRunner.onData(df)
+          .useRepository(repo)
+          .reuseExistingResultsForKey(key, failIfResultsMissing = true)
+          .addAnalyzers(Seq(Size(), Completeness("v")))
+          .run()
+      }
+      // a FULLY covered request reuses the stored metric
+      AnalysisRunner.onData(df)
+        .useRepository(repo)
+        .reuseExistingResultsForKey(key, failIfResultsMissing = true)
+        .addAnalyzer(Size())
+        .run().metric(Size()).get.value.get shouldBe 2.0
     }
 
     "flatten keyed and histogram metrics into success-metric rows" in {

@@ -149,7 +149,7 @@ class SketchStateChecksSpec extends AnyWordSpec with Matchers with SparkSpec {
         .createTempDirectory("graft-fromstate").toString
       try {
         val provider = new graft.core.HdfsStateProvider(spark, s"$tmp/state")
-        graft.runners.AnalysisRunner.runStateful(frame, analyzers,
+        graft.runners.AnalysisRunner.run(frame, analyzers,
           saveStatesWith = Some(provider))
         val restored = graft.runners.AnalysisRunner
           .runOnAggregatedStates(analyzers, Seq(provider))
@@ -210,7 +210,7 @@ class SketchStateChecksSpec extends AnyWordSpec with Matchers with SparkSpec {
       try {
         val provider = new graft.core.HdfsStateProvider(spark, s"$tmp/st")
         val analyzers: Seq[graft.core.AnyAnalyzer] = Seq(drift, shiftA, ratio)
-        graft.runners.AnalysisRunner.runStateful(
+        graft.runners.AnalysisRunner.run(
           frame, analyzers, saveStatesWith = Some(provider))
         val restored = graft.runners.AnalysisRunner
           .runOnAggregatedStates(analyzers, Seq(provider))

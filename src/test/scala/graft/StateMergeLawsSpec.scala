@@ -181,7 +181,7 @@ class StateMergeLawsSpec extends AnyWordSpec with Matchers with SparkSpec {
     }
   }
 
-  "runStateful with a provider" should {
+  "run with a provider" should {
     "equal a single run over the concatenation" in {
       val s = spark
       import s.implicits._
@@ -189,12 +189,16 @@ class StateMergeLawsSpec extends AnyWordSpec with Matchers with SparkSpec {
       val batch2 = (300 to 900).map(_.toDouble).toDF("v")
       val whole = ((1 to 500) ++ (300 to 900)).map(_.toDouble).toDF("v")
 
+      // Entropy shares Uniqueness's frequency table; the two KLL sketches
+      // share one pass and stay below their compaction threshold (exact)
       val analyzers = Seq[AnyAnalyzer](Size(), Mean("v"), StandardDeviation("v"),
-        Minimum("v"), Uniqueness(Seq("v")))
+        Minimum("v"), Uniqueness(Seq("v")), Entropy("v"),
+        graft.sketch.KLLSketchAnalyzer("v"),
+        graft.sketch.KLLSketchAnalyzer("v", graft.sketch.KLLParameters(numberOfBuckets = 4)))
       val provider = new InMemoryStateProvider
-      AnalysisRunner.runStateful(batch1, analyzers,
+      AnalysisRunner.run(batch1, analyzers,
         aggregateWith = Some(provider), saveStatesWith = Some(provider))
-      val incremental = AnalysisRunner.runStateful(batch2, analyzers,
+      val incremental = AnalysisRunner.run(batch2, analyzers,
         aggregateWith = Some(provider), saveStatesWith = Some(provider))
       val full = AnalysisRunner.run(whole, analyzers)
 
@@ -203,6 +207,8 @@ class StateMergeLawsSpec extends AnyWordSpec with Matchers with SparkSpec {
         val ful = full.metric(a).get.value.get
         (inc, ful) match {
           case (i: Double, f: Double) => math.abs(i - f) should be <= 1e-9
+          case (i: graft.sketch.BucketDistribution, f: graft.sketch.BucketDistribution) =>
+            i.buckets shouldBe f.buckets
           case (i, f) => i shouldBe f
         }
       }
