@@ -6,7 +6,9 @@ Usage: python3 scripts/check_oracle.py <verify_out_dir> [sf_dir]
 Reads every <out>/<name>/ parquet result written by graft.Verify, replays the
 matching SQL from <out>/oracle_sql.json in DuckDB against the sf parquet
 tables, and diffs values (columns sorted by name, rows sorted by all columns,
-exact equality — same as a hash compare would see).
+exact equality — same as a hash compare would see). An oracle_sql.json key
+with no result dir (its query threw in graft.Verify) is reported MISSING and
+fails the run.
 """
 import json
 import sys
@@ -26,6 +28,9 @@ def main():
 
     oracles = json.loads((out / "oracle_sql.json").read_text())
     results = {}
+    for name in oracles:
+        if not (out / name).is_dir():
+            results[name] = "MISSING no result dir (the query failed in graft.Verify)"
     for qdir in sorted(p for p in out.iterdir() if p.is_dir()):
         name = qdir.name
         spark_rows = con.execute(f"SELECT * FROM '{qdir}/*.parquet'").fetchall()

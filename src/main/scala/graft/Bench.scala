@@ -219,20 +219,10 @@ object Bench {
     // query with zero successful reps would only re-fail it, and its
     // requery failures would conflate with the in-suite counts. Requery
     // failures that DO happen are recorded under a distinct _requery key.
-    // Requery set (r17): the slowest 3 PLUS the q96/q136 pair pinned
-    // back-to-back at the end — the q136-vs-q96 ratio bar is only
-    // meaningful same-conditions, and in-suite positions are 40 queries
-    // apart. Each requery's last rep records its per-job decomposition
-    // (the `jobs` field) so a driver-box slow reading names its own
-    // serializing stage instead of demanding another round of
-    // re-measurement.
-    // only requery names with at least one successful in-suite rep — the
-    // slowest-3 selection already guarantees this, and the pinned pair
-    // must match it (a query that failed every rep would only re-fail,
-    // spending wall time and adding _requery failure noise)
-    val succeededNames = results.filter(_._2 >= 0).map(_._1).toSet
-    val pinnedPair = Seq("q96_curation_v2", "q136_curation_builder")
-      .filter(SparkEntry.queries.contains).filter(succeededNames.contains)
+    // Requery set: the slowest 3. Each requery's last rep records its
+    // per-job decomposition (the `jobs` field) so a driver-box slow
+    // reading names its own serializing stage instead of demanding
+    // another round of re-measurement.
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(3)
     // Regression-triggered requeries (r18): queries that moved vs the
     // prior round's driver artifact get a same-conditions re-reading +
@@ -269,9 +259,7 @@ object Bench {
         } catch { case scala.util.control.NonFatal(_) => Seq.empty }
       }
     }
-    val requeryNames =
-      (slowest.map(_._1) ++ regressed).distinct
-        .filterNot(pinnedPair.contains) ++ pinnedPair
+    val requeryNames = (slowest.map(_._1) ++ regressed).distinct
     val requeried = requeryNames.map { name =>
       name -> medianOf(name + "_requery", SparkEntry.queries(name),
         captureJobsAs = Some(name))

@@ -168,6 +168,38 @@ object SparkEntry {
     }
   }
 
+  /** Runs `body` over a fresh temp dir and removes the dir afterwards, on
+    * the failure path too. `body` must not return a frame that still
+    * reads from the dir. */
+  private[graft] def withTempDir[T](prefix: String)(body: String => T): T = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(tmp) finally rmTree(tmp)
+  }
+
+  /** Stages `df` as `nFiles` parquet files under `$tmp/in` (one write
+    * job), then ingests them through a real file stream, one file per
+    * micro-batch, into `onBatch`; returns once every file is processed.
+    * The streaming twins fold batch-agnostic monoids, so only the number
+    * of micro-batches matters, not which rows each one holds. */
+  private[graft] def streamStaged(s: SparkSession, df: DataFrame, nFiles: Int,
+      tmp: String)(onBatch: (DataFrame, Long) => Unit): Unit = {
+    df.repartition(nFiles).write.parquet(s"$tmp/in")
+    val query = s.readStream.schema(df.schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
+      .writeStream.option("checkpointLocation", s"$tmp/ckpt")
+      .foreachBatch(onBatch).start()
+    try query.processAllAvailable() finally query.stop()
+  }
+
+  /** Collects `out` into a local frame over the same schema, running
+    * `release` (the caches `out` was computed from) afterwards, also when
+    * the collect throws. */
+  private[graft] def collectReleasing(s: SparkSession, out: DataFrame)(
+      release: => Unit): DataFrame = {
+    val rows = try out.collect() finally release
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+  }
+
   /** Single-row DataFrame of named double values. */
   private def metricRow(s: SparkSession, cols: Seq[(String, Double)]): DataFrame = {
     val schema = StructType(cols.map { case (n, _) => StructField(n, DoubleType, nullable = false) })
@@ -326,6 +358,79 @@ object SparkEntry {
         case (acc, ((l, _), i)) => acc.when(sel === i, lit(l))
       }
     (textCase, langCase)
+  }
+
+  /** q85's messy URL per doc_id: five ids per page in five disguises
+    * (www + uppercase scheme + default port + trailing slash + userinfo
+    * + tracking params + fragment + unsorted content params); doc_id%97
+    * rows are unparseable. The oracles of q85 and q96/q136 replay it. */
+  private def disguisedUrl: Column = {
+    val g = floor(col("doc_id") / 5).cast(LongType)
+    val host = concat(lit("s"), pmod(g, lit(20)).cast(StringType),
+      lit(".example.com"))
+    val path = concat(lit("/p/"), g.cast(StringType))
+    val m5 = pmod(col("doc_id"), lit(5))
+    when(pmod(col("doc_id"), lit(97)) === 0, lit("page moved"))
+      .when(m5 === 0, concat(lit("https://www."), host, path))
+      .when(m5 === 1, concat(lit("HTTPS://"), host, lit(":443"), path, lit("/")))
+      .when(m5 === 2, concat(lit("https://user:pw@"), host, path,
+        lit("?utm_source=x&fbclid="), col("doc_id").cast(StringType)))
+      .when(m5 === 3, concat(lit("https://"), host, path, lit("?b=2&a=1#frag")))
+      .otherwise(concat(lit("https://"), host, path,
+        lit("?a=1&utm_medium=y&b=2")))
+  }
+
+  /** End-to-end curation v2 (q96, and q136 under the builder's name): the
+    * public Curation.pipeline builder over (1) per-source footer
+    * boilerplate removal (q89 injection), (2) parity markers appended
+    * AFTER cleaning, so the rule can't eat them, (3) an NB quality gate
+    * trained on a 20% seed, (4) CCNet perplexity terciles per source,
+    * keeping head+middle, (5) canonical-URL dedup over q85's disguises,
+    * then (6) deterministic shard stats of the final kept set. Every pin
+    * is an exact integer, replayed by ONE chained oracle. */
+  private def curationV2(s: SparkSession, dir: String): DataFrame = {
+    import graft.pipeline.{Curation, Mixing}
+    import org.apache.spark.sql.functions.concat_ws
+    val docs = table(s, dir, "documents").where(col("doc_id").isNotNull)
+    val withFooter = docs.select(col("doc_id"), col("source"),
+      when(pmod(col("doc_id"), lit(3)) =!= 2,
+        concat(col("text"), lit("\nFOOTER "), col("source"),
+          lit(" all rights reserved"))).otherwise(col("text")).as("text"))
+    val isKeep = pmod(col("doc_id"), lit(2)) === 0
+    val marker = when(isKeep,
+      lit("qkeepa qkeepb qkeepa qkeepb qkeepa qkeepb"))
+      .otherwise(lit("qtossa qtossb qtossa qtossb qtossa qtossb"))
+    val r = Curation.pipeline(withFooter, "doc_id", "text", Seq(
+      Curation.RemoveBoilerplate("source", maxDocFrac = 0.4, minDocs = 5),
+      Curation.MapText("mark", concat_ws(" ", col("text"), marker)),
+      Curation.QualityClassifier(
+        labelExpr = when(isKeep, lit("keep")).otherwise(lit("toss")),
+        seedPredicate = pmod(col("doc_id"), lit(10)) < 2),
+      Curation.PerplexityKeep("source", nBuckets = 3, keepMaxBucket = 2),
+      Curation.UrlDedup(disguisedUrl)),
+      // the input is a cheap projection over the source scan
+      persistInput = false)
+    val shardAgg = Mixing.shardStats(r.docs, "doc_id", "text", 8)
+      .agg(count(lit(1)),
+        coalesce(sum(col("n_docs")), lit(0L)),
+        coalesce(sum(col("n_tokens")), lit(0L)),
+        coalesce(sum(col("id_sum")), lit(0L)),
+        coalesce(max(col("n_docs")), lit(0L)),
+        coalesce(min(col("n_docs")), lit(0L)))
+      .collect().head
+    val c = r.censuses.toMap
+    r.release()
+    metricRow(s, Seq(
+      "n_input" -> c("input_docs"),
+      "boiler_removed" -> c("boiler_removed_lines"),
+      "nb_kept" -> c("quality_kept"),
+      "perp_kept" -> c("perplexity_kept"),
+      "final_docs" -> shardAgg.getLong(1).toDouble,
+      "final_tokens" -> shardAgg.getLong(2).toDouble,
+      "final_id_sum" -> shardAgg.getLong(3).toDouble,
+      "shards_nonempty" -> shardAgg.getLong(0).toDouble,
+      "max_shard_docs" -> shardAgg.getLong(4).toDouble,
+      "min_shard_docs" -> shardAgg.getLong(5).toDouble))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1240,7 +1345,7 @@ object SparkEntry {
         Minimum("o_totalprice"), Maximum("o_totalprice"),
         Uniqueness(Seq("o_orderstatus")), Entropy("o_orderstatus"), kll)
 
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q43").toString
+      withTempDir("graft_q43") { tmp =>
       val direct = AnalysisRunner.run(orders, analyzers,
         saveStatesWith = Some(new graft.core.HdfsStateProvider(s, s"$tmp/state")))
       // fresh provider instance: metrics re-rendered from loaded states
@@ -1352,11 +1457,6 @@ object SparkEntry {
       val mergedSketch = merged.metric(kll).get
         .asInstanceOf[KLLMetric].value.get.sketch
 
-      // every metric below is a plain double by now — the temp state/repo
-      // dirs can go before the row is built (a bench run does 3 medians x
-      // 5 stateful runs; leaking the dirs was r8's orphan-tempdir source)
-      rmTree(tmp)
-
       metricRow(s, Seq(
         "size_reloaded" -> dv(reloaded, Size()),
         "completeness_custkey_reloaded" -> dv(reloaded, Completeness("o_custkey")),
@@ -1383,6 +1483,7 @@ object SparkEntry {
         "merged_kll_n" -> mergedSketch.count.toDouble,
         "merged_kll_min" -> mergedSketch.min,
         "merged_kll_max" -> mergedSketch.max))
+      }
     }),
 
     // Distribution-distance measures, value-checked: categorical L-inf,
@@ -2426,11 +2527,9 @@ object SparkEntry {
       val docs = table(s, dir, "documents")
       val old = docs.filter(col("doc_id") < 300)
       val batch = docs.filter(col("doc_id") >= 250)
-      val statePath =
-        java.nio.file.Files.createTempDirectory("graft_seen").toString
-      Dedup.seenTextKeys(old, "text")
-        .write.mode("overwrite").parquet(statePath)
-      try {
+      withTempDir("graft_seen") { statePath =>
+        Dedup.seenTextKeys(old, "text")
+          .write.mode("overwrite").parquet(statePath)
         val seen = s.read.parquet(statePath)
         val surv = Dedup.exactDedupIncremental(batch, "text", "doc_id", seen)
         val r = surv.agg(count(lit(1)), sum(col("doc_id"))).collect().head
@@ -2439,7 +2538,7 @@ object SparkEntry {
           "survivor_id_sum" ->
             (if (r.isNullAt(1)) 0.0 else r.getLong(1).toDouble),
           "state_keys" -> seen.count().toDouble))
-      } finally rmTree(statePath)
+      }
     }),
 
     // Temperature-weighted mixture: per-source token budgets ~ n^0.5 over
@@ -2765,10 +2864,10 @@ object SparkEntry {
           coalesce(col("graft_blk"), lit(0L)).cast(DoubleType).as("blocked"),
           coalesce(col("graft_kept"), lit(0L)).cast(DoubleType).as("kept_docs"))
         .orderBy(col("domain"))
-      val materialized = out.collect()
-      blocked.unpersist(blocking = false)
-      stats.unpersist(blocking = false)
-      s.createDataFrame(java.util.Arrays.asList(materialized: _*), out.schema)
+      collectReleasing(s, out) {
+        blocked.unpersist(blocking = false)
+        stats.unpersist(blocking = false)
+      }
     }),
 
     // Interpolated Kneser-Ney bigram LM scoring (the CCNet/KenLM-style
@@ -2848,9 +2947,7 @@ object SparkEntry {
         .filter(org.apache.spark.sql.functions.size(
           TextAnalysis.normalizedTokens(col("text"))) >= 30)
         .select(col("doc_id"), junked.as("text"))
-      val statePath =
-        java.nio.file.Files.createTempDirectory("graft_lshstate").toString
-      try {
+      withTempDir("graft_lshstate") { statePath =>
         // the full state algebra: two half-states merged, persisted,
         // reloaded — exactly what a daily pipeline folding batches does
         val half0 = Dedup.lshState(old.filter(col("doc_id") < 150),
@@ -2868,7 +2965,7 @@ object SparkEntry {
           "survivors" -> r.getLong(0).toDouble,
           "survivor_id_sum" -> r.getLong(1).toDouble,
           "state_docs" -> state.signatures.count().toDouble))
-      } finally rmTree(statePath)
+      }
     }),
 
     // CCNet-style perplexity bucketing (Wenzek et al. 2020): per source,
@@ -2928,25 +3025,9 @@ object SparkEntry {
     // every normalization step.
     "q85_url_dedup" -> ((s, dir) => {
       import graft.pipeline.Domains
-      import org.apache.spark.sql.functions.floor
       val docs = table(s, dir, "documents").where(col("doc_id").isNotNull)
-      val g = floor(col("doc_id") / 5).cast(LongType)
-      val dS = pmod(g, lit(20)).cast(StringType)
-      val gS = g.cast(StringType)
-      val idS = col("doc_id").cast(StringType)
-      val m = pmod(col("doc_id"), lit(5))
-      val host = concat(lit("s"), dS, lit(".example.com"))
-      val path = concat(lit("/p/"), gS)
-      val url = when(pmod(col("doc_id"), lit(97)) === 0, lit("page moved"))
-        .when(m === 0, concat(lit("https://www."), host, path))
-        .when(m === 1, concat(lit("HTTPS://"), host, lit(":443"), path, lit("/")))
-        .when(m === 2, concat(lit("https://user:pw@"), host, path,
-          lit("?utm_source=x&fbclid="), idS))
-        .when(m === 3, concat(lit("https://"), host, path, lit("?b=2&a=1#frag")))
-        .otherwise(concat(lit("https://"), host, path,
-          lit("?a=1&utm_medium=y&b=2")))
       val dd = Domains.dedupByCanonicalUrl(
-        docs.select(col("doc_id"), url.as("url")), "url", "doc_id")
+        docs.select(col("doc_id"), disguisedUrl.as("url")), "url", "doc_id")
       dd.agg(
         count(lit(1)).cast(DoubleType).as("n_out"),
         count(when(col("canonical_url").isNull, 1)).cast(DoubleType)
@@ -2996,9 +3077,7 @@ object SparkEntry {
           // cross-engine score noise is ~1e-12
           when(fmin(col("margin")) >= 10.0, lit(1.0)).otherwise(lit(0.0))
             .as("margin_ok"))
-      val materialized = out.collect()
-      model.release()
-      s.createDataFrame(java.util.Arrays.asList(materialized: _*), out.schema)
+      collectReleasing(s, out)(model.release())
     }),
 
     // HTML → text extraction (the raw-crawl step before every text
@@ -3194,9 +3273,7 @@ object SparkEntry {
       // reads it back, merges its own, and re-derives the model from
       // counts; the oracle's full-seed train matching proves the whole
       // persist→read→merge→derive chain, not just the in-memory monoid
-      val stateDir =
-        java.nio.file.Files.createTempDirectory("graft_nbstate").toString
-      try {
+      withTempDir("graft_nbstate") { stateDir =>
       Classify.writeCountState(
         Classify.countState(halfA, "doc_id", "text", "label"),
         s"$stateDir/day1")
@@ -3221,10 +3298,8 @@ object SparkEntry {
             .as("margin_ok"))
         .withColumn("merge_exact",
           lit(if (mismatches == 0L) 1.0 else 0.0))
-      val materialized = out.collect()
-      model.release()
-      s.createDataFrame(java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(stateDir)
+      collectReleasing(s, out)(model.release())
+      }
     }),
 
     // SentencePiece-style unigram tokenizer (Viterbi apply; Kudo 2018)
@@ -3307,143 +3382,9 @@ object SparkEntry {
         "id_sum")
     }),
 
-    // End-to-end curation v2 — the session's operators composed as one
-    // pipeline, every stage value-pinned through ONE oracle replay:
-    // (1) per-source footer boilerplate removal (q89 injection), (2) NB
-    // quality filter trained on a 20% parity-marked seed of the CLEANED
-    // corpus (markers added AFTER boilerplate removal so the rule can't
-    // eat them), (3) CCNet perplexity terciles per source over the
-    // NB-kept set, keep head+middle, (4) canonical-URL dedup (q85's
-    // five disguises), (5) deterministic shard stats of the final kept
-    // set. Every pin is an exact integer.
-    "q96_curation_v2" -> ((s, dir) => {
-      import graft.pipeline.{Classify, Domains, Mixing}
-      import org.apache.spark.sql.functions.{concat_ws, floor}
-      val docs = table(s, dir, "documents").where(col("doc_id").isNotNull)
-      // Per-stage counts ride OBSERVATIONS on the stage frames instead of
-      // dedicated count() actions: each observation fires during the
-      // first job that consumes its frame (stage 1+2's during the NB
-      // training/scoring jobs, stage 3's during the perplexity ranking,
-      // stage 4's during the final shard aggregate), so the whole query
-      // runs the stages' own materializing jobs and nothing else — the
-      // q53 action-fusion precedent applied end to end.
-      val obsClean = org.apache.spark.sql.Observation()
-      val obsNb = org.apache.spark.sql.Observation()
-      val obsPerp = org.apache.spark.sql.Observation()
-      // stage 1: boilerplate
-      val withFooter = docs.select(col("doc_id"), col("source"),
-        when(pmod(col("doc_id"), lit(3)) =!= 2,
-          concat(col("text"), lit("\nFOOTER "), col("source"),
-            lit(" all rights reserved"))).otherwise(col("text")).as("text"))
-      // consumed exactly once (by `marked`, which persists) — no persist:
-      // caching a full text copy here doubled the spill surface under
-      // memory pressure (the r13 driver-box 3-5x variance); the
-      // observation rides into marked's plan and fires on its
-      // materialization
-      val cleaned = TextAnalysis
-        .removeBoilerplateLines(withFooter, "doc_id", "text", "source",
-          maxDocFrac = 0.4, minDocs = 5)
-        .observe(obsClean, count(lit(1)).as("n"),
-          coalesce(sum(col("removed_lines")), lit(0L)).as("rm"))
-      // stage 2: NB filter (markers post-cleaning)
-      val isKeep = pmod(col("doc_id"), lit(2)) === 0
-      val marker = when(isKeep,
-        lit("qkeepa qkeepb qkeepa qkeepb qkeepa qkeepb"))
-        .otherwise(lit("qtossa qtossb qtossa qtossb qtossa qtossb"))
-      // truncate (localCheckpoint), not persist, for every cached frame
-      // in this chain: a persist dedups execution but each reference
-      // re-inlines the frame's whole analyzed lineage, and the trees
-      // multiply stage over stage until driver-side PLANNING dominates
-      // (the r19 sampling finding; same discipline as Curation.pipeline)
-      val marked = graft.pipeline.CacheLifecycle.truncate(
-        cleaned.select(col("doc_id"), col("source"),
-          concat_ws(" ", col("text"), marker).as("text")))
-      // ONE tokenize for stages 2+3: NB training (the seed subset), NB
-      // scoring (the whole corpus), and the LM ranking all consume the
-      // same persisted (doc, term, tf) frame — the featurizer/
-      // precomputedTf fusion hooks; previously each pass re-tokenized
-      val tfAll = graft.pipeline.CacheLifecycle.truncate(
-        TextAnalysis.termFrequencies(marked, "doc_id", "text"))
-      val fromTfAll: Classify.Featurizer = (_, _, _) => tfAll
-      val seedTf: Classify.Featurizer =
-        (_, _, _) => tfAll.where(pmod(col("doc_id"), lit(10)) < 2)
-      val model = Classify.trainNaiveBayes(
-        marked.where(pmod(col("doc_id"), lit(10)) < 2)
-          .select(col("doc_id"), col("text"),
-            when(isKeep, lit("keep")).otherwise(lit("toss")).as("label")),
-        "doc_id", "text", "label", alpha = 1.0, seedTf)
-      // SLIM persisted state from here on: only doc_id survivor sets are
-      // cached (ints, not text) — the text frames re-derive lazily as a
-      // cheap join against the one persisted `marked` copy. Before r14
-      // nbKept and perpKept each cached their own full-text subset on top
-      // of cleaned+marked — four overlapping text copies whose serial
-      // spills explained the driver-box 3-5x q96 variance.
-      val nbKeptIds = graft.pipeline.CacheLifecycle.truncate(Classify
-        .scoreNaiveBayes(marked, "doc_id", "text", model, fromTfAll)
-        .where(col("predicted") === "keep").select(col("doc_id"))
-        .observe(obsNb, count(lit(1)).as("n")))
-      val nbKept = marked.join(nbKeptIds, Seq("doc_id"))
-      // stage 3: perplexity head+middle per source (tf restricted to the
-      // NB survivors — identical to re-tokenizing nbKept)
-      val tfNb = graft.pipeline.CacheLifecycle.truncate(tfAll
-        .join(nbKeptIds, Seq("doc_id"), "left_semi"))
-      val perpKeptIds = graft.pipeline.CacheLifecycle.truncate(TextAnalysis
-        .perplexityBuckets(nbKept, "doc_id", "text", "source", 3,
-          precomputedTf = Some(tfNb))
-        .where(col("bucket") <= 2).select(col("doc_id"))
-        .observe(obsPerp, count(lit(1)).as("n")))
-      // perpKeptIds ⊆ nbKeptIds, so one join reconstitutes the survivors
-      val perpKept = marked.join(perpKeptIds, Seq("doc_id"))
-      // stage 4: canonical-URL dedup (q85 disguises)
-      val g = floor(col("doc_id") / 5).cast(LongType)
-      val host = concat(lit("s"), pmod(g, lit(20)).cast(StringType),
-        lit(".example.com"))
-      val path = concat(lit("/p/"), g.cast(StringType))
-      val m5 = pmod(col("doc_id"), lit(5))
-      val idS = col("doc_id").cast(StringType)
-      val url = when(pmod(col("doc_id"), lit(97)) === 0, lit("page moved"))
-        .when(m5 === 0, concat(lit("https://www."), host, path))
-        .when(m5 === 1, concat(lit("HTTPS://"), host, lit(":443"), path, lit("/")))
-        .when(m5 === 2, concat(lit("https://user:pw@"), host, path,
-          lit("?utm_source=x&fbclid="), idS))
-        .when(m5 === 3, concat(lit("https://"), host, path, lit("?b=2&a=1#frag")))
-        .otherwise(concat(lit("https://"), host, path,
-          lit("?a=1&utm_medium=y&b=2")))
-      // consumed exactly once by the shard aggregate below — no persist
-      // (the dedup union references perpKept twice, but each reference is
-      // a cheap marked-cache ⋈ perpKeptIds-cache join)
-      val dd = Domains.dedupByCanonicalUrl(
-        perpKept.withColumn("url", url), "url", "doc_id")
-      // stage 5: shards
-      val shardAgg = Mixing.shardStats(dd, "doc_id", "text", 8)
-        .agg(count(lit(1)),
-          coalesce(sum(col("n_docs")), lit(0L)),
-          coalesce(sum(col("n_tokens")), lit(0L)),
-          coalesce(sum(col("id_sum")), lit(0L)),
-          coalesce(org.apache.spark.sql.functions.max(col("n_docs")), lit(0L)),
-          coalesce(org.apache.spark.sql.functions.min(col("n_docs")), lit(0L)))
-        .collect().head
-      // every observation has fired by now (the shard aggregate is the
-      // last job and consumes the whole chain); get() just reads
-      val nInput = obsClean.get("n").asInstanceOf[Long]
-      val boilerRemoved = obsClean.get("rm").asInstanceOf[Long]
-      val nNbKept = obsNb.get("n").asInstanceOf[Long]
-      val nPerpKept = obsPerp.get("n").asInstanceOf[Long]
-      Seq(marked, tfAll, tfNb, nbKeptIds, perpKeptIds)
-        .foreach(graft.pipeline.CacheLifecycle.releaseTruncated)
-      model.release()
-      metricRow(s, Seq(
-        "n_input" -> nInput.toDouble,
-        "boiler_removed" -> boilerRemoved.toDouble,
-        "nb_kept" -> nNbKept.toDouble,
-        "perp_kept" -> nPerpKept.toDouble,
-        "final_docs" -> shardAgg.getLong(1).toDouble,
-        "final_tokens" -> shardAgg.getLong(2).toDouble,
-        "final_id_sum" -> shardAgg.getLong(3).toDouble,
-        "shards_nonempty" -> shardAgg.getLong(0).toDouble,
-        "max_shard_docs" -> shardAgg.getLong(4).toDouble,
-        "min_shard_docs" -> shardAgg.getLong(5).toDouble))
-    }),
+    // End-to-end curation v2: the session's operators composed as one
+    // pipeline; see curationV2.
+    "q96_curation_v2" -> (curationV2 _),
 
     // fastText-style char-n-gram language ID (Joulin et al. 2016), the
     // q86 NB machinery with the char-gram featurizer: every document
@@ -3478,9 +3419,8 @@ object SparkEntry {
           // noise is ~1e-12
           when(fmin(col("margin")) >= 3.0, lit(1.0)).otherwise(lit(0.0))
             .as("margin_ok"))
-      val materialized = out.collect()
       // no release: the default model is session-shared
-      s.createDataFrame(java.util.Arrays.asList(materialized: _*), out.schema)
+      collectReleasing(s, out)(())
     }),
 
     // Interpolated Kneser-Ney TRIGRAM LM (the rung above q78's bigram):
@@ -3847,9 +3787,7 @@ object SparkEntry {
       val emb = table(s, dir, "embeddings")
       val init = Clustering.initMinIdQuantized(emb, "vec_id", "embedding", 4)
       val valid = emb.where(col("embedding").isNotNull)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q107").toString
-      try {
+      withTempDir("graft-q107") { tmp =>
       Clustering.writeCellState(
         Clustering.cellStateQuantized(
           valid.where(pmod(col("vec_id"), lit(2)) === 0), "embedding", init),
@@ -3882,7 +3820,7 @@ object SparkEntry {
         (cell, n, sumAll, sq, norm2, if (mergeOk) 1L else 0L)
       }.toDF("cell", "n_docs", "sum_all", "sum_sq", "c_norm2",
         "merge_ok")
-      } finally rmTree(tmp)
+      }
     }),
 
     // q108: DoReMi-style domain reweighting (Xie et al. 2023, simplified
@@ -4749,9 +4687,7 @@ object SparkEntry {
         expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
         col("event_type"), col("event_id"))
       val cutUs = 1705276800000000L // 2024-01-15 00:00:00 UTC
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q132").toString
-      try {
+      withTempDir("graft-q132") { tmp =>
       Scd.scdType2(changes.where(col("ts_us") <= cutUs), Seq("user_id"),
           "ts_us", Seq("event_type"), tiebreakCols = Seq("event_id"))
         .write.mode("overwrite").parquet(tmp)
@@ -4779,11 +4715,8 @@ object SparkEntry {
         sum(when(col("valid_from") > cutUs, 1L).otherwise(0L))
           .cast(DoubleType).as("batch_opened"),
         lit(if (mergeOk) 1.0 else 0.0).as("merge_ok"))
-      val materialized = out.collect()
-      merged.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(merged.unpersist(blocking = false))
+      }
     }),
 
     // q133: INCREMENTAL fuzzy paragraph dedup — q104's packed-id space
@@ -4811,9 +4744,7 @@ object SparkEntry {
       val batch = paraDocs
         .where(col("doc_id") >= 250 && col("doc_id") < 350)
         .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val statePath = java.nio.file.Files
-        .createTempDirectory("graft-q133").toString
-      try {
+      withTempDir("graft-q133") { statePath =>
         // ONE tokenize pass per corpus side (guide §1.2): the history
         // occurrences feed both half-state builds AND the exact-replay
         // key set; the batch occurrences feed the incremental engine
@@ -4881,7 +4812,7 @@ object SparkEntry {
           "recrawl_kept" -> g.getLong(4).toDouble,
           "kept_id_sum" -> g.getLong(5).toDouble,
           "parity_ok" -> flag(mismatches == 0L)))
-      } finally rmTree(statePath)
+      }
     }),
 
     // q134: BYTE-level BPE (the GPT-2/Llama tokenizer family; q77's
@@ -4947,71 +4878,8 @@ object SparkEntry {
       }.toDF("source", "budget", "kept_docs", "kept_bbpe_tokens", "id_sum")
     }),
 
-    // q136: the PUBLIC Curation.pipeline builder running exactly q96's
-    // stage list (boilerplate → marker MapText → NB quality gate →
-    // perplexity head+middle → canonical-URL dedup → shard census) and
-    // pinned against the IDENTICAL oracle — the builder's fusion
-    // discipline (one tokenize per text epoch, slim id-set persists)
-    // must reproduce the hand-rolled composition number for number.
-    "q136_curation_builder" -> ((s, dir) => {
-      import graft.pipeline.{Curation, Mixing}
-      import org.apache.spark.sql.functions.{concat_ws, floor}
-      val docs = table(s, dir, "documents").where(col("doc_id").isNotNull)
-      val withFooter = docs.select(col("doc_id"), col("source"),
-        when(pmod(col("doc_id"), lit(3)) =!= 2,
-          concat(col("text"), lit("\nFOOTER "), col("source"),
-            lit(" all rights reserved"))).otherwise(col("text")).as("text"))
-      val isKeep = pmod(col("doc_id"), lit(2)) === 0
-      val marker = when(isKeep,
-        lit("qkeepa qkeepb qkeepa qkeepb qkeepa qkeepb"))
-        .otherwise(lit("qtossa qtossb qtossa qtossb qtossa qtossb"))
-      val g = floor(col("doc_id") / 5).cast(LongType)
-      val host = concat(lit("s"), pmod(g, lit(20)).cast(StringType),
-        lit(".example.com"))
-      val path = concat(lit("/p/"), g.cast(StringType))
-      val m5 = pmod(col("doc_id"), lit(5))
-      val idS = col("doc_id").cast(StringType)
-      val url = when(pmod(col("doc_id"), lit(97)) === 0, lit("page moved"))
-        .when(m5 === 0, concat(lit("https://www."), host, path))
-        .when(m5 === 1, concat(lit("HTTPS://"), host, lit(":443"), path, lit("/")))
-        .when(m5 === 2, concat(lit("https://user:pw@"), host, path,
-          lit("?utm_source=x&fbclid="), idS))
-        .when(m5 === 3, concat(lit("https://"), host, path, lit("?b=2&a=1#frag")))
-        .otherwise(concat(lit("https://"), host, path,
-          lit("?a=1&utm_medium=y&b=2")))
-      val r = Curation.pipeline(withFooter, "doc_id", "text", Seq(
-        Curation.RemoveBoilerplate("source", maxDocFrac = 0.4, minDocs = 5),
-        Curation.MapText("mark", concat_ws(" ", col("text"), marker)),
-        Curation.QualityClassifier(
-          labelExpr = when(isKeep, lit("keep")).otherwise(lit("toss")),
-          seedPredicate = pmod(col("doc_id"), lit(10)) < 2),
-        Curation.PerplexityKeep("source", nBuckets = 3, keepMaxBucket = 2),
-        Curation.UrlDedup(url)),
-        // the input is a cheap projection over the source scan — the
-        // same no-input-cache call the hand-rolled q96 makes
-        persistInput = false)
-      val shardAgg = Mixing.shardStats(r.docs, "doc_id", "text", 8)
-        .agg(count(lit(1)),
-          coalesce(sum(col("n_docs")), lit(0L)),
-          coalesce(sum(col("n_tokens")), lit(0L)),
-          coalesce(sum(col("id_sum")), lit(0L)),
-          coalesce(org.apache.spark.sql.functions.max(col("n_docs")), lit(0L)),
-          coalesce(org.apache.spark.sql.functions.min(col("n_docs")), lit(0L)))
-        .collect().head
-      val c = r.censuses.toMap
-      r.release()
-      metricRow(s, Seq(
-        "n_input" -> c("input_docs"),
-        "boiler_removed" -> c("boiler_removed_lines"),
-        "nb_kept" -> c("quality_kept"),
-        "perp_kept" -> c("perplexity_kept"),
-        "final_docs" -> shardAgg.getLong(1).toDouble,
-        "final_tokens" -> shardAgg.getLong(2).toDouble,
-        "final_id_sum" -> shardAgg.getLong(3).toDouble,
-        "shards_nonempty" -> shardAgg.getLong(0).toDouble,
-        "max_shard_docs" -> shardAgg.getLong(4).toDouble,
-        "min_shard_docs" -> shardAgg.getLong(5).toDouble))
-    }),
+    // q136: q96's body under the builder's name (see curationV2).
+    "q136_curation_builder" -> (curationV2 _),
 
     // q137: INCREMENTAL sessionization — q127's persisted-state twin
     // (the q132 convention at session granularity): the first half of
@@ -5034,9 +4902,7 @@ object SparkEntry {
         Sessionize.sessionize(e, Seq("user_id"), "ts_us", gapUs,
           tiebreakCols = Seq("event_id")),
         Seq("user_id"), "ts_us")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q137").toString
-      try {
+      withTempDir("graft-q137") { tmp =>
       statsOf(changes.where(col("ts_us") <= cutUs))
         .write.mode("overwrite").parquet(tmp)
       val merged = Sessionize.applySessions(s.read.parquet(tmp),
@@ -5059,11 +4925,8 @@ object SparkEntry {
         sum(when(col("session_start") > cutUs, 1L).otherwise(0L))
           .cast(DoubleType).as("batch_opened"),
         lit(if (mergeOk) 1.0 else 0.0).as("merge_ok"))
-      val materialized = out.collect()
-      merged.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(merged.unpersist(blocking = false))
+      }
     }),
 
     // q138: INCREMENTAL cohort retention — q129's persisted-state twin,
@@ -5081,9 +4944,7 @@ object SparkEntry {
         expr("unix_micros(cast(ts as timestamp))").as("ts_us"))
       val cutUs = 1705276800000000L
       val per = (_: Column) => expr("(ts_us div 86400000000) div 7")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q138").toString
-      try {
+      withTempDir("graft-q138") { tmp =>
       EventAnalytics.activityState(
           base.where(col("ts_us") <= cutUs), Seq("user_id"), "ts_us", per)
         .write.mode("overwrite").parquet(tmp)
@@ -5113,7 +4974,7 @@ object SparkEntry {
         "max_offset" -> g.getLong(4).toDouble,
         "state_rows" -> stateRows.toDouble,
         "merge_ok" -> flag(mergeOk)))
-      } finally rmTree(tmp)
+      }
     }),
 
     // q139: INCREMENTAL key-skew census — q121's persisted-state twin:
@@ -5132,9 +4993,7 @@ object SparkEntry {
           lit(null).cast(LongType))
           .otherwise(col("o_custkey")).as("k"),
         col("o_orderdate"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q139").toString
-      try {
+      withTempDir("graft-q139") { tmp =>
       SkewCensus.keyCountState(
           keyed.where(col("o_orderdate") <= lit("1995-01-01"))
             .select("k"), "k")
@@ -5151,11 +5010,8 @@ object SparkEntry {
         .withColumn("merge_ok", lit(if (mergeOk) 1.0 else 0.0))
       // materialize BEFORE the state dir is deleted — the census frame
       // reads the parquet state lazily through `merged`
-      val materialized = out.collect()
-      merged.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(merged.unpersist(blocking = false))
+      }
     }),
 
     // q140: per-group approximate-distinct state (HLL) — the third
@@ -5174,9 +5030,7 @@ object SparkEntry {
     "q140_hll_distinct_state" -> ((s, dir) => {
       import graft.sketch.HllState
       val orders = table(s, dir, "orders")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q140").toString
-      try {
+      withTempDir("graft-q140") { tmp =>
       HllState.writeState(
         HllState.distinctState(
           orders.where(col("o_orderdate") <= lit("1995-01-01")),
@@ -5207,10 +5061,8 @@ object SparkEntry {
         .orderBy(col("o_orderpriority"))
       // materialize BEFORE the state dir is deleted — `est` reads the
       // parquet state lazily through readState
-      val materialized = out.collect()
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(())
+      }
     }),
 
     // q141: deterministic CONSISTENT sampling state — per source, the 8
@@ -5224,9 +5076,7 @@ object SparkEntry {
       import graft.pipeline.Sampling
       val docs = table(s, dir, "documents").where(col("doc_id").isNotNull)
       val k = 8
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q141").toString
-      try {
+      withTempDir("graft-q141") { tmp =>
       Sampling.bottomKSample(
           docs.where(pmod(col("doc_id"), lit(2)) === 0), Seq("source"),
           "doc_id", k)
@@ -5245,11 +5095,8 @@ object SparkEntry {
         .withColumn("doc_id", col("doc_id").cast(DoubleType))
         .withColumn("rank", col("rank").cast(DoubleType))
         .orderBy(col("source"), col("rank"))
-      val materialized = out.collect()
-      merged.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(merged.unpersist(blocking = false))
+      }
     }),
 
     // q142: theta-sketch snapshot overlap — per source, how many
@@ -5267,9 +5114,7 @@ object SparkEntry {
         .where(col("doc_id").isNotNull && col("text").isNotNull)
       val a = docs.where(pmod(col("doc_id"), lit(3)) =!= 0)
       val b = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q142").toString
-      try {
+      withTempDir("graft-q142") { tmp =>
       Theta.writeState(
         Theta.thetaState(a, Seq("source"), Seq("text")), tmp)
       val ov = Theta.overlap(
@@ -5305,12 +5150,11 @@ object SparkEntry {
           okFlag("est_intersect", "x_i", 0.10).as("intersect_ok"),
           okFlag("est_a_not_b", "x_d", 0.10).as("diff_ok"))
         .orderBy(col("source"))
-      val materialized = out.collect()
-      ta.unpersist(blocking = false)
-      tb.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out) {
+        ta.unpersist(blocking = false)
+        tb.unpersist(blocking = false)
+      }
+      }
     }),
 
     // q143: the persisted-sketch family wired into the CHECK/DQDL
@@ -5330,9 +5174,7 @@ object SparkEntry {
         .where(col("doc_id").isNotNull && col("text").isNotNull)
       val a = docs.where(pmod(col("doc_id"), lit(3)) =!= 0)
       val b = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q143").toString
-      try {
+      withTempDir("graft-q143") { tmp =>
       // stage the three states through parquet (the production shape)
       HllState.writeState(
         HllState.distinctState(docs, Seq("source"), Seq("text")),
@@ -5397,7 +5239,7 @@ object SparkEntry {
         "hll_check_ok" -> flag(hllOk),
         "theta_check_ok" -> flag(thetaOk),
         "dqdl_passed" -> dqdlPassed.toDouble))
-      } finally rmTree(tmp)
+      }
     }),
 
     // q144: per-group KLL quantile state — the QUANTILE member of the
@@ -5413,9 +5255,7 @@ object SparkEntry {
       import graft.checks.{Check, CheckLevel, CheckStatus, VerificationSuite}
       import graft.sketch.KllGroupState
       val li = table(s, dir, "lineitem")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q144").toString
-      try {
+      withTempDir("graft-q144") { tmp =>
       val sz = 4096
       val cut = lit("1995-06-01")
       KllGroupState.writeState(
@@ -5466,11 +5306,8 @@ object SparkEntry {
           lit(if (checkOk) 1.0 else 0.0).as("check_ok"),
           lit(if (dqdlOk) 1.0 else 0.0).as("dqdl_ok"))
         .orderBy(col("l_returnflag"))
-      val materialized = out.collect()
-      merged.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(merged.unpersist(blocking = false))
+      }
     }),
 
     // q145: per-group Misra-Gries frequent-items state — the FREQUENCY
@@ -5497,9 +5334,7 @@ object SparkEntry {
           explode(graft.pipeline.TextAnalysis.tokens(lower(col("text"))))
             .as("item"))
         .persist()
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q145").toString
-      try {
+      withTempDir("graft-q145") { tmp =>
       val kBig = 64
       val kSmall = 16
       val phi = 0.04
@@ -5571,13 +5406,12 @@ object SparkEntry {
           lit(if (checkOk) 1.0 else 0.0).as("check_ok"),
           lit(if (dqdlOk) 1.0 else 0.0).as("dqdl_ok"))
         .orderBy(col("source"))
-      val materialized = out.collect()
-      merged.unpersist(blocking = false)
-      exact.unpersist(blocking = false)
-      toks.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out) {
+        merged.unpersist(blocking = false)
+        exact.unpersist(blocking = false)
+        toks.unpersist(blocking = false)
+      }
+      }
     }),
 
     // q146: incremental funnel over the bounded per-(key, step) state —
@@ -5599,9 +5433,7 @@ object SparkEntry {
       val steps = Seq(col("event_type") === "signup",
         col("event_type") === "view", col("event_type") === "click",
         col("event_type") === "purchase")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q146").toString
-      try {
+      withTempDir("graft-q146") { tmp =>
       val cap = 64
       def state(df: DataFrame, c: Int) =
         EventAnalytics.funnelState(df, Seq("user_id"), "ts_us", steps, c)
@@ -5649,13 +5481,12 @@ object SparkEntry {
           lit(if (batchOk) 1.0 else 0.0).as("batch_ok"),
           lit(if (scNoOvercount) 1.0 else 0.0).as("cap2_no_overcount"),
           lit(if (scExactMatch) 1.0 else 0.0).as("cap2_exact_match"))
-      val materialized = out.collect()
-      rep.unpersist(blocking = false)
-      batch.unpersist(blocking = false)
-      sc.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out) {
+        rep.unpersist(blocking = false)
+        batch.unpersist(blocking = false)
+        sc.unpersist(blocking = false)
+      }
+      }
     }),
 
     // q147: the persisted dedup state maintained by a REAL Structured
@@ -5671,24 +5502,13 @@ object SparkEntry {
       val docs = table(s, dir, "documents")
         .where(col("doc_id").isNotNull && col("text").isNotNull)
         .select(col("doc_id"), col("text"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q147").toString
-      try {
-      val in = s"$tmp/in"
-      val statePath = s"$tmp/state"
+      withTempDir("graft-q147") { tmp =>
+      val ingest = new StreamingOps.DedupIngest(s"$tmp/state", "text", "doc_id")
       // ONE staging job writing 4 part files (round-robin) instead of 4
       // filtered passes over the corpus: the ingest fold is a commutative
       // monoid pinned streamed == one-shot, so batch membership is
       // immaterial — only that several micro-batches exist.
-      docs.repartition(4).write.parquet(in)
-      val ingest = new StreamingOps.DedupIngest(statePath, "text", "doc_id")
-      val query = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch(ingest.asForeachBatch())
-        .start()
-      try query.processAllAvailable() finally query.stop()
+      streamStaged(s, docs, 4, tmp)(ingest.asForeachBatch())
       val surv = ingest.survivors(s).persist()
       val survIds = surv.select(col("graft_min_id").as("doc_id"))
       val batchIds = graft.pipeline.Dedup.exact(docs, Seq("text"), "doc_id")
@@ -5700,11 +5520,8 @@ object SparkEntry {
         .select(lit(docs.count().toDouble).as("n_docs"),
           col("n_survivors"), col("id_sum"),
           lit(if (parityOk) 1.0 else 0.0).as("parity_ok"))
-      val materialized = out.collect()
-      surv.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(surv.unpersist(blocking = false))
+      }
     }),
 
     // q148: incremental IVF index maintenance — the production ANN shape:
@@ -5717,9 +5534,7 @@ object SparkEntry {
     // q27's completeness/recall bars against exact brute force.
     "q148_ivf_index_state" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q148").toString
-      try {
+      withTempDir("graft-q148") { tmp =>
       val trained = Similarity.trainIvfCentroids(emb, "embedding", nlist = 8)
       Similarity.ivfModelFrame(s, trained)
         .write.mode("overwrite").parquet(s"$tmp/model")
@@ -5764,7 +5579,7 @@ object SparkEntry {
         "state_parity_ok" -> flag(parityOk),
         "ivf_complete_ok" -> flag(nIvf == nBf),
         "ivf_recall_ok" -> flag(nBf == 0 || matched.toDouble / nBf >= 0.8)))
-      } finally rmTree(tmp)
+      }
     }),
 
     // q149: incremental PQ index maintenance — the compressed sibling of
@@ -5779,9 +5594,7 @@ object SparkEntry {
       val emb = table(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 8L)
       val k = 10
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q149").toString
-      try {
+      withTempDir("graft-q149") { tmp =>
       val trained = Similarity.trainPq(emb, "embedding", m = 16, ksub = 64)
       Similarity.pqModelFrame(s, trained)
         .write.mode("overwrite").parquet(s"$tmp/model")
@@ -5832,7 +5645,7 @@ object SparkEntry {
         "serve_parity_ok" -> flag(serveOk),
         "pq_complete_ok" -> flag(nServed == nBf),
         "pq_recall_ok" -> flag(nBf == 0 || matched.toDouble / nBf >= 0.8)))
-      } finally rmTree(tmp)
+      }
     }),
 
     // q150: the composed IVF-PQ index as a persisted state — coarse
@@ -5846,9 +5659,7 @@ object SparkEntry {
       val emb = table(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 8L)
       val k = 10
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q150").toString
-      try {
+      withTempDir("graft-q150") { tmp =>
       val (coarse0, pq0) = Similarity.trainIvfPq(emb, "embedding",
         nlist = 16, m = 16, ksub = 64)
       Similarity.ivfModelFrame(s, coarse0)
@@ -5907,7 +5718,7 @@ object SparkEntry {
         "serve_parity_ok" -> flag(serveOk),
         "ivfpq_complete_ok" -> flag(nServed == nBf),
         "ivfpq_recall_ok" -> flag(nBf == 0 || matched.toDouble / nBf >= 0.9)))
-      } finally rmTree(tmp)
+      }
     }),
 
     // q151: the Curation builder's DedupAgainstState stage — the public
@@ -5921,9 +5732,7 @@ object SparkEntry {
       val docs = table(s, dir, "documents")
         .where(col("doc_id").isNotNull && col("text").isNotNull)
         .select(col("doc_id"), col("text"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q151").toString
-      try {
+      withTempDir("graft-q151") { tmp =>
       val state = s"$tmp/seen"
       val gate = Curation.KeepWhere("nonempty", length(col("text")) > 0)
       def run(batch: DataFrame, id: String) = {
@@ -5962,7 +5771,7 @@ object SparkEntry {
       ids2.unpersist(blocking = false)
       survivors.unpersist(blocking = false)
       out
-      } finally rmTree(tmp)
+      }
     }),
 
     // q152: the snapshot drift report composed from the persisted sketch
@@ -5983,9 +5792,7 @@ object SparkEntry {
       val snapB = docs.where(pmod(col("doc_id"), lit(3)) =!= 1)
       def lens(d: DataFrame) = d.select(col("source"),
         length(col("text")).cast(DoubleType).as("len"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q152").toString
-      try {
+      withTempDir("graft-q152") { tmp =>
       def stage(name: String, df: DataFrame): DataFrame = {
         df.write.mode("overwrite").parquet(s"$tmp/$name")
         s.read.parquet(s"$tmp/$name")
@@ -6050,11 +5857,8 @@ object SparkEntry {
           col("new_items").cast(DoubleType).as("new_items"),
           col("lost_items").cast(DoubleType).as("lost_items"))
         .orderBy(col("source"))
-      val materialized = out.collect()
-      tokCounts.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(tokCounts.unpersist(blocking = false))
+      }
     }),
 
     // q153: drift as a CHECK — the q152 report's signals evaluated by
@@ -6075,9 +5879,7 @@ object SparkEntry {
       val snapB = docs.where(pmod(col("doc_id"), lit(3)) =!= 1)
       def lens(d: DataFrame) = d.select(col("source"),
         length(col("text")).cast(DoubleType).as("len"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q153").toString
-      try {
+      withTempDir("graft-q153") { tmp =>
       def stage(name: String, df: DataFrame): DataFrame = {
         df.write.mode("overwrite").parquet(s"$tmp/$name")
         s.read.parquet(s"$tmp/$name")
@@ -6169,7 +5971,7 @@ object SparkEntry {
         "shift_ok" -> flag(shiftOk),
         "check_ok" -> flag(checkOk),
         "dqdl_ok" -> flag(dqdlOk)))
-      } finally rmTree(tmp)
+      }
     }),
 
     // q154: the drift-ALARM loop end to end — four daily snapshots'
@@ -6305,10 +6107,7 @@ object SparkEntry {
           min(when(col("n_m") === col("n_f"), 1.0).otherwise(0.0))
             .as("n_ok"))
         .orderBy(col("source"))
-      val materialized = out.collect()
-      toks.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
+      collectReleasing(s, out)(toks.unpersist(blocking = false))
     }),
 
     // q156: streaming maintenance for the drift-state families — the
@@ -6328,12 +6127,7 @@ object SparkEntry {
       val docs = table(s, dir, "documents")
         .where(col("doc_id").isNotNull && col("text").isNotNull)
         .select(col("source"), col("doc_id"), col("text"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q156").toString
-      try {
-      val in = s"$tmp/in"
-      // one staging job, 4 files (see q147: folds are batch-agnostic)
-      docs.repartition(4).write.parquet(in)
+      withTempDir("graft-q156") { tmp =>
       def toks(d: DataFrame) = d.select(col("source"),
         explode(graft.pipeline.TextAnalysis.tokens(lower(col("text"))))
           .as("item"))
@@ -6349,17 +6143,12 @@ object SparkEntry {
       val hllIngest = new StreamingOps.SketchStateIngest(s"$tmp/hll",
         b => HllState.distinctState(b, Seq("source"), Seq("text")),
         parts => HllState.foldState(parts))
-      val query = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          mgIngest.processBatch(b, id)
-          kllIngest.processBatch(b, id)
-          hllIngest.processBatch(b, id)
-        }
-        .start()
-      try query.processAllAvailable() finally query.stop()
+      // 4 files (see q147: folds are batch-agnostic)
+      streamStaged(s, docs, 4, tmp) { (b, id) =>
+        mgIngest.processBatch(b, id)
+        kllIngest.processBatch(b, id)
+        hllIngest.processBatch(b, id)
+      }
 
       def mgCells(st: DataFrame, tag: String) = st.select(col("source"),
         col("mg.n").as(s"n_$tag"),
@@ -6416,7 +6205,7 @@ object SparkEntry {
         "mg_parity_ok" -> flag(mgOk),
         "hll_ok" -> flag(hllPre),
         "post_compact_ok" -> flag(postOk)))
-      } finally rmTree(tmp)
+      }
     }),
 
     // q157: the drift-alarm HISTORY on the constraint surface — where
@@ -6540,9 +6329,7 @@ object SparkEntry {
     "q158_streaming_ivf_ingest" -> ((s, dir) => {
       import graft.streaming.StreamingOps
       val emb = table(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q158").toString
-      try {
+      withTempDir("graft-q158") { tmp =>
       val trained = Similarity.trainIvfCentroids(emb, "embedding", nlist = 8)
       Similarity.ivfModelFrame(s, trained)
         .write.mode("overwrite").parquet(s"$tmp/model")
@@ -6551,18 +6338,11 @@ object SparkEntry {
         trained.zip(centroids).forall { case (a, b) =>
           java.util.Arrays.equals(a, b) }
       val src = emb.select(col("vec_id"), col("embedding"))
-      // one staging job, 4 files (see q147: folds are batch-agnostic)
-      src.repartition(4).write.parquet(s"$tmp/in")
       val ingest = new StreamingOps.SketchStateIngest(s"$tmp/post",
         b => Similarity.ivfIndexState(b, "vec_id", "embedding", centroids),
         parts => parts) // bag union: the fold is identity
-      val query = s.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch(ingest.asForeachBatch())
-        .start()
-      try query.processAllAvailable() finally query.stop()
+      // 4 files (see q147: folds are batch-agnostic)
+      streamStaged(s, src, 4, tmp)(ingest.asForeachBatch())
       val slimOne = Similarity
         .ivfIndexState(src, "vec_id", "embedding", centroids)
         .select(col("graft_cell"), col("neighbor_id")).persist()
@@ -6605,7 +6385,7 @@ object SparkEntry {
         "ivf_complete_ok" -> flag(nIvf == nBf),
         "ivf_recall_ok" -> flag(nBf == 0 || matched.toDouble / nBf >= 0.8),
         "post_compact_ok" -> flag(postCompactOk)))
-      } finally rmTree(tmp)
+      }
     }),
 
     // q159: dataset release manifest — the reproducibility primitive: a
@@ -6642,10 +6422,7 @@ object SparkEntry {
           coalesce(col("status"), lit("ok")).as("status"),
           lit(if (selfClean) 1.0 else 0.0).as("self_diff_empty"))
         .orderBy(col("shard"))
-      val materialized = out.collect()
-      m1.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
+      collectReleasing(s, out)(m1.unpersist(blocking = false))
     }),
 
     // q160: STREAMING manifest maintenance — q159's streaming twin,
@@ -6663,20 +6440,13 @@ object SparkEntry {
       import graft.streaming.StreamingOps
       val base = table(s, dir, "documents").where(col("doc_id").isNotNull)
         .select(col("doc_id"), col("source"), col("text"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q160").toString
-      try {
-      // one staging job, 4 files (see q147: folds are batch-agnostic)
-      base.repartition(4).write.parquet(s"$tmp/in")
+      withTempDir("graft-q160") { tmp =>
       val ingest = new StreamingOps.SketchStateIngest(s"$tmp/m",
         b => DatasetManifest.build(b, "doc_id", Seq("source", "text"),
           shards = 16),
         parts => DatasetManifest.foldManifests(parts))
-      val query = s.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-        .writeStream.option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch(ingest.asForeachBatch()).start()
-      try query.processAllAvailable() finally query.stop()
+      // 4 files (see q147: folds are batch-agnostic)
+      streamStaged(s, base, 4, tmp)(ingest.asForeachBatch())
       val oneShot = DatasetManifest.build(
         base, "doc_id", Seq("source", "text"), shards = 16).persist()
       val streamed = ingest.state(s).persist()
@@ -6697,12 +6467,11 @@ object SparkEntry {
           lit(if (streamedOk) 1.0 else 0.0).as("streamed_eq_oneshot"),
           lit(if (compactedOk) 1.0 else 0.0).as("compacted_eq_oneshot"))
         .orderBy(col("shard"))
-      val materialized = out.collect()
-      streamed.unpersist(blocking = false)
-      oneShot.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out) {
+        streamed.unpersist(blocking = false)
+        oneShot.unpersist(blocking = false)
+      }
+      }
     }),
 
     // q161: dataset-release parity on the CONSTRAINT surface — the
@@ -6793,10 +6562,7 @@ object SparkEntry {
         .select(col("id"), col("status"),
           lit(if (completeOk) 1.0 else 0.0).as("complete_ok"))
         .orderBy(col("id"))
-      val materialized = out.collect()
-      named.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
+      collectReleasing(s, out)(named.unpersist(blocking = false))
     }),
 
     // q163: the release audit with PHYSICAL pruning — both releases ship
@@ -6819,9 +6585,7 @@ object SparkEntry {
             .when(col("doc_id") === 41, lit(null: String))
             .otherwise(col("text")))
         .unionByName(base.where(col("doc_id") === 33))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q163").toString
-      try {
+      withTempDir("graft-q163") { tmp =>
       DatasetManifest.writeSharded(base, s"$tmp/rel1", "doc_id", 16)
       DatasetManifest.writeSharded(tampered, s"$tmp/rel2", "doc_id", 16)
       val r1 = s.read.parquet(s"$tmp/rel1")
@@ -6845,11 +6609,8 @@ object SparkEntry {
           lit(if (prunedOk) 1.0 else 0.0).as("pruned_ok"),
           lit(if (sameOk) 1.0 else 0.0).as("matches_unsharded"))
         .orderBy(col("id"))
-      val materialized = out.collect()
-      named.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(named.unpersist(blocking = false))
+      }
     }),
 
     // q164: COLUMN-level drift localization from KB manifests — the
@@ -6884,10 +6645,7 @@ object SparkEntry {
           coalesce(col("drifted_columns"), lit("")).as("drifted_columns"),
           lit(if (selfClean) 1.0 else 0.0).as("self_diff_empty"))
         .orderBy(col("shard"))
-      val materialized = out.collect()
-      m1.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
+      collectReleasing(s, out)(m1.unpersist(blocking = false))
     }),
 
     // q165: streaming twin for the LAST persisted-state family without
@@ -6908,22 +6666,12 @@ object SparkEntry {
       val emb = table(s, dir, "embeddings")
       val init = Clustering.initMinIdQuantized(emb, "vec_id", "embedding", 4)
       val valid = emb.where(col("embedding").isNotNull)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q165").toString
-      try {
-      val in = s"$tmp/in"
-      // one staging job, 4 files (see q147: folds are batch-agnostic)
-      valid.repartition(4).write.parquet(in)
+      withTempDir("graft-q165") { tmp =>
       val ingest = new StreamingOps.SketchStateIngest(s"$tmp/cells",
         b => Clustering.cellStateQuantized(b, "embedding", init),
         parts => Clustering.foldCellStatesQuantized(parts))
-      val query = s.readStream.schema(valid.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch(ingest.asForeachBatch())
-        .start()
-      try query.processAllAvailable() finally query.stop()
+      // 4 files (see q147: folds are batch-agnostic)
+      streamStaged(s, valid, 4, tmp)(ingest.asForeachBatch())
 
       def snapshot(st: org.apache.spark.sql.DataFrame) = st.collect()
         .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2),
@@ -6955,7 +6703,7 @@ object SparkEntry {
           if (streamOk) 1L else 0L, if (postOk) 1L else 0L)
       }.toDF("cell", "n_docs", "sum_all", "sum_sq", "c_norm2",
         "stream_ok", "post_compact_ok")
-      } finally rmTree(tmp)
+      }
     }),
 
     // q166: cross-release manifest LINEAGE — "which release introduced
@@ -7013,9 +6761,7 @@ object SparkEntry {
       val half = valid.where(
         floor(element_at(col("embedding"), 1).cast(DoubleType) * 1000 + 0.5)
           <= 0)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q167").toString
-      try {
+      withTempDir("graft-q167") { tmp =>
       Clustering.writeCellState(
         Clustering.cellStateQuantized(valid, "embedding", init), s"$tmp/a")
       Clustering.writeCellState(
@@ -7049,11 +6795,8 @@ object SparkEntry {
           lit(if (checkGate) 1L else 0L).as("check_gate"),
           lit(if (dqdlGate) 1L else 0L).as("dqdl_gate"))
         .orderBy(col("cell"))
-      val materialized = out.collect()
-      drift.unpersist(blocking = false)
-      s.createDataFrame(
-        java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+      collectReleasing(s, out)(drift.unpersist(blocking = false))
+      }
     }),
 
     // q168: the embedding-drift ALARM LOOP — q154's repository pattern
@@ -7170,21 +6913,14 @@ object SparkEntry {
       val tagged = chain.map { case (rid, df) =>
         df.withColumn("release", lit(rid))
       }.reduce(_ unionByName _)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q170").toString
-      try {
-        // one staging job, 6 files (see q147: the keyed-manifest fold is
-        // batch-agnostic) — was 6 filtered passes over the 4-release union
-        tagged.repartition(6).write.parquet(s"$tmp/in")
+      withTempDir("graft-q170") { tmp =>
         val ingest = new StreamingOps.SketchStateIngest(s"$tmp/m",
           b => DatasetManifest.buildKeyed(
             b, "release", "doc_id", Seq("source", "text"), shards = 16),
           parts => DatasetManifest.foldKeyedManifests(parts))
-        val query = s.readStream.schema(tagged.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          .writeStream.option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch(ingest.asForeachBatch()).start()
-        try query.processAllAvailable() finally query.stop()
+        // 6 files (see q147: the keyed-manifest fold is batch-agnostic;
+        // batches slice several releases at once)
+        streamStaged(s, tagged, 6, tmp)(ingest.asForeachBatch())
         val streamed = DatasetManifest
           .lineageFromKeyed(ingest.state(s)).persist()
         val oneShot = DatasetManifest.lineage(chain.map { case (rid, df) =>
@@ -7201,12 +6937,11 @@ object SparkEntry {
           .withColumn("compacted_eq_oneshot",
             lit(if (compactedOk) 1L else 0L))
           .orderBy(col("shard"), col("release"))
-        val materialized = out.collect()
-        streamed.unpersist(blocking = false)
-        oneShot.unpersist(blocking = false)
-        s.createDataFrame(
-          java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+        collectReleasing(s, out) {
+          streamed.unpersist(blocking = false)
+          oneShot.unpersist(blocking = false)
+        }
+      }
     }),
 
     // q171: eval-suite x shard contamination census from PERSISTED
@@ -7251,9 +6986,7 @@ object SparkEntry {
           lit(0L))).collect().head.getLong(0)
       val (bits, k) = graft.sketch.Bloom.sizeFor(
         math.max(64L, corpusGrams / shards), 0.01)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q171").toString
-      try {
+      withTempDir("graft-q171") { tmp =>
         TextAnalysis.shardGramBloomStates(
           docs, "doc_id", "text", shards, bits, k)
           .write.parquet(s"$tmp/st")
@@ -7289,13 +7022,12 @@ object SparkEntry {
             lit(if (fpPairs <= shards) 1L else 0L).as("fp_bounded"),
             lit(if (restrictedOk) 1L else 0L).as("restricted_eq_full"))
           .orderBy(col("shard"), col("suite"))
-        val materialized = out.collect()
-        suiteGramsDf.unpersist(blocking = false)
-        cand.unpersist(blocking = false)
-        full.unpersist(blocking = false)
-        s.createDataFrame(
-          java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+        collectReleasing(s, out) {
+          suiteGramsDf.unpersist(blocking = false)
+          cand.unpersist(blocking = false)
+          full.unpersist(blocking = false)
+        }
+      }
     }),
 
     // q172: the bloom-state family's STREAMING twin, closing the loop
@@ -7320,21 +7052,13 @@ object SparkEntry {
           lit(0L))).collect().head.getLong(0)
       val (bits, k) = graft.sketch.Bloom.sizeFor(
         math.max(64L, corpusGrams / shards), 0.01)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q172").toString
-      try {
-        // one staging job, 4 files (see q147: the bloom OR-fold is
-        // batch-agnostic)
-        docs.repartition(4).write.parquet(s"$tmp/in")
+      withTempDir("graft-q172") { tmp =>
         val ingest = new StreamingOps.SketchStateIngest(s"$tmp/st",
           b => TextAnalysis.shardGramBloomStates(
             b, "doc_id", "text", shards, bits, k),
           parts => TextAnalysis.foldShardGramBlooms(parts))
-        val query = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          .writeStream.option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch(ingest.asForeachBatch()).start()
-        try query.processAllAvailable() finally query.stop()
+        // 4 files (see q147: the bloom OR-fold is batch-agnostic)
+        streamStaged(s, docs, 4, tmp)(ingest.asForeachBatch())
         val streamed = ingest.state(s).persist()
         val oneShot = TextAnalysis.shardGramBloomStates(
           docs, "doc_id", "text", shards, bits, k).persist()
@@ -7365,10 +7089,8 @@ object SparkEntry {
           .orderBy(col("shard"))
         streamed.unpersist(blocking = false)
         oneShot.unpersist(blocking = false)
-        val materialized = out.collect()
-        s.createDataFrame(
-          java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+        collectReleasing(s, out)(())
+      }
     }),
 
     // q173: the curriculum RELEASE — q169's deterministic epoch order
@@ -7391,9 +7113,7 @@ object SparkEntry {
       val assigned = Mixing
         .curriculumAssign(docs, "doc_id", epochs = 1, nShards = 8)
         .persist()
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q173").toString
-      try {
+      withTempDir("graft-q173") { tmp =>
         assigned.write.partitionBy("shard").mode("overwrite")
           .parquet(s"$tmp/rel")
         val back = s.read.parquet(s"$tmp/rel").persist()
@@ -7413,12 +7133,11 @@ object SparkEntry {
         val out = manifest.join(witness, Seq("shard"))
           .withColumn("roundtrip_ok", lit(if (roundtripOk) 1L else 0L))
           .orderBy(col("shard"))
-        val materialized = out.collect()
-        assigned.unpersist(blocking = false)
-        back.unpersist(blocking = false)
-        s.createDataFrame(
-          java.util.Arrays.asList(materialized: _*), out.schema)
-      } finally rmTree(tmp)
+        collectReleasing(s, out) {
+          assigned.unpersist(blocking = false)
+          back.unpersist(blocking = false)
+        }
+      }
     })
   )
 
@@ -7806,9 +7525,8 @@ object SparkEntry {
        |ORDER BY shard, release""".stripMargin
   }
 
-  // q136 runs the PUBLIC Curation.pipeline builder over exactly the
-  // q96 stage list, so it pins against the identical oracle — sharing
-  // the string means the two replays cannot drift.
+  // q136 runs q96's body (curationV2) under the builder's name, so it
+  // pins against the identical oracle string.
   def oracleSql: Map[String, String] =
     oracleBase + ("q136_curation_builder" -> oracleBase("q96_curation_v2"))
 

@@ -7,9 +7,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [onlyQueryPrefix] — the third arg is a local
     // pre-flight convenience (run one query against check_oracle.py); the
-    // driver always passes exactly two.
+    // driver always passes exactly two. oracle_sql.json lists only the
+    // selected queries, so check_oracle.py reports a selected query that
+    // wrote no result as MISSING.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.lift(2)
+    def selected(name: String): Boolean = only.forall(name.startsWith)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -20,7 +23,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(name.startsWith) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -40,7 +43,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

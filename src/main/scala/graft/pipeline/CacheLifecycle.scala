@@ -47,8 +47,28 @@ object CacheLifecycle {
     * with a checkpoint-block-not-found error instead of recomputing, and
     * the frame is unusable after [[releaseTruncated]]. In-query lifetime
     * only — nothing outlives the query or keys on the input path.
+    * If materializing fails, the RDD it marked is released before the
+    * exception propagates.
     */
-  def truncate(df: DataFrame): DataFrame = df.localCheckpoint()
+  def truncate(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    // localCheckpoint returns no handle on the RDD it marked when its job
+    // fails. A unique call site names that RDD (RDD.toString is
+    // "<class>[<id>] at <creation site>"), so the catch can release it.
+    val site = s"graft truncate #${truncations.incrementAndGet()}"
+    val prevSite = sc.getLocalProperty(CallSiteShort)
+    sc.setCallSite(site)
+    try df.localCheckpoint()
+    catch { case e: Throwable =>
+      sc.getPersistentRDDs.values.filter(_.toString.endsWith(s"] at $site"))
+        .foreach(_.unpersist(blocking = false))
+      throw e
+    } finally sc.setLocalProperty(CallSiteShort, prevSite)
+  }
+
+  private val truncations = new java.util.concurrent.atomic.AtomicLong()
+  // SparkContext.setCallSite's local property (org.apache.spark.util.CallSite)
+  private val CallSiteShort = "callSite.short"
 
   /** Release a frame produced by [[truncate]] (the blocks hang off the
     * checkpointed RDD, which Dataset.unpersist does not reach); falls

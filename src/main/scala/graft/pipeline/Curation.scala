@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The end-to-end curation pipeline as a PUBLIC, composable surface —
-  * the product face of what q53/q96/q112 hand-roll: a declared list of
-  * standard stages (boilerplate removal, text transforms, quality
-  * classification, perplexity filtering, URL dedup, arbitrary
-  * predicates) executed with the fusion discipline those queries
+  * the product face of what q53/q112 hand-roll (q96/q136 run it): a
+  * declared list of standard stages (boilerplate removal, text
+  * transforms, quality classification, perplexity filtering, URL dedup,
+  * arbitrary predicates) executed with the fusion discipline those queries
   * established, so a caller gets the efficient composition without
   * hand-managing it:
   *
@@ -28,8 +28,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * 100 TB shape: every stage is map-side-combinable aggregation +
   * broadcast-model scoring + slim-key semi-joins; nothing shuffles the
-  * text except the boilerplate line rebuild (one line-level exchange,
-  * the same job the hand-rolled pipelines run).
+  * text except the boilerplate line rebuild (one line-level exchange).
   */
 object Curation {
 
@@ -105,26 +104,23 @@ object Curation {
       val docs: DataFrame,
       names: Seq[String],
       resolve: String => Double,
-      caches: Seq[DataFrame],
-      releasers: Seq[() => Unit]) {
+      releaseAll: () => Unit) {
     lazy val censuses: Seq[(String, Double)] = names.map(n => n -> resolve(n))
 
     /** Releases the pipeline's lineage cuts and caches. `docs` is unusable
       * afterwards: it reads [[CacheLifecycle.truncate]]d frames whose
       * blocks cannot be recomputed, so consuming it after release fails.
       */
-    def release(): Unit = {
-      caches.foreach(CacheLifecycle.releaseTruncated)
-      releasers.foreach(_())
-    }
+    def release(): Unit = releaseAll()
   }
 
   /** `persistInput = false` skips caching the input frame: the right
-    * call when it is a cheap projection over a source scan (the
-    * hand-rolled q96 makes exactly this choice) — the first
+    * call when it is a cheap projection over a source scan (as in
+    * q96/q136) — the first
     * text-producing stage re-reads it up to three times instead of
     * paying a full-text cache write. Leave true for expensive input
-    * lineage.
+    * lineage. If a stage throws, the cuts, caches and models the earlier
+    * stages made are released before the exception propagates.
     */
   def pipeline(
       docs: DataFrame,
@@ -165,8 +161,7 @@ object Curation {
     // Survivor sets are NESTED by construction (stage n's ids are
     // computed from a frame already restricted by stage n-1's), so the
     // current frame is always epochBase ⋈ the LATEST survivor set — ONE
-    // slim join, never a growing join chain (the hand-rolled q96 trick,
-    // generalized).
+    // slim join, never a growing join chain.
     // caches are TRUNCATING (localCheckpoint, CacheLifecycle.truncate),
     // not plain persists: a persist dedups execution but every reference
     // still re-inlines the frame's whole analyzed lineage, and in this
@@ -211,7 +206,11 @@ object Curation {
       latestKept = kept
     }
 
-    stages.foreach {
+    def releaseAll(): Unit = {
+      caches.foreach(CacheLifecycle.releaseTruncated)
+      releasers.foreach(_())
+    }
+    def runStage(stage: Stage): Unit = stage match {
       case RemoveBoilerplate(groupCol, maxDocFrac, minDocs) =>
         // drop the census column BEFORE the persist: the cache is the
         // pipeline's one full-text copy and every later stage scans it —
@@ -250,21 +249,20 @@ object Curation {
           frame.where(seedPred).select(col(idCol), col(textCol),
             labelExpr.as("graft_label")),
           idCol, textCol, "graft_label", alpha, seedTf)
+        // the scoring job runs lazily inside a LATER stage's (or the
+        // caller's) materialization — the model's broadcast state must
+        // outlive this stage, so it releases with the Result
+        releasers += (() => model.release())
         val keptIds = Classify
           .scoreNaiveBayes(frame, idCol, textCol, model, allTf)
           .where(col("predicted") === keepLabel)
           .select(col(idCol))
         applySurvivors("quality_kept", keptIds)
-        // the scoring job runs lazily inside a LATER stage's (or the
-        // caller's) materialization — the model's broadcast state must
-        // outlive this stage, so it releases with the Result
-        releasers += (() => model.release())
 
       case PerplexityKeep(groupCol, nBuckets, keepMax) =>
         // persist the restricted tf when a restriction exists: the LM
         // scorer consumes its tf several times (T/V totals, term
-        // counts, the per-doc rollup) — q96 persists its tfNb for
-        // exactly this reason
+        // counts, the per-doc rollup)
         val tfP = sharedTf() match {
           case t if t eq tfBase => t
           case t =>
@@ -323,7 +321,10 @@ object Curation {
             .select(col(idCol)))
     }
 
-    new Result(frame, names.toSeq, n => thunks(n)(), caches.toSeq,
-      releasers.toSeq)
+    // a throwing stage leaves no materialized cut behind: release what
+    // the earlier stages registered, then rethrow
+    try stages.foreach(runStage)
+    catch { case e: Throwable => releaseAll(); throw e }
+    new Result(frame, names.toSeq, n => thunks(n)(), () => releaseAll())
   }
 }

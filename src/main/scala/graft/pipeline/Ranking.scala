@@ -87,18 +87,16 @@ object Ranking {
     // persisted is used as-is (and not released).
     val callerCached =
       df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    // localCheckpoint, not persist: beyond the cache (both evaluate the
-    // upstream once), the checkpoint TRUNCATES the logical plan to a
-    // LogicalRDD leaf. The `.rdd` conversion below and the count/assign
-    // passes each re-plan this subtree, and in the curation chains the
-    // analyzed tree behind `df` is huge (every cached frame's full
-    // lineage re-inlined at each reference) — planning, not execution,
-    // was the measured cost (~3 s of driver RUNNABLE time in q136's
-    // perplexity stage). The checkpointed blocks release with the RDD
-    // via the ContextCleaner once the returned frame's cache drops.
+    // truncate, not persist: beyond the cache (both evaluate the
+    // upstream once), the cut TRUNCATES the logical plan to a LogicalRDD
+    // leaf. The `.rdd` conversion below and the count/assign passes each
+    // re-plan this subtree, and in the curation chains the analyzed tree
+    // behind `df` is huge (every cached frame's full lineage re-inlined
+    // at each reference) — planning, not execution, was the measured
+    // cost (~3 s of driver RUNNABLE time in q136's perplexity stage).
     val input =
       if (callerCached) df
-      else df.localCheckpoint()
+      else CacheLifecycle.truncate(df)
     val sorted = input
       .repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
@@ -180,15 +178,7 @@ object Ranking {
         cached.select(cached.columns.map(col).toSeq: _*), Seq(cached))
     } finally {
       sorted.unpersist(blocking = false)
-      // a localCheckpointed frame's blocks hang off the RDD, not the
-      // CacheManager — unpersist the RDD itself (Dataset.unpersist would
-      // be a no-op and the blocks would wait for the ContextCleaner)
-      if (!callerCached) input.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => input.unpersist(blocking = false)
-      }
-      ()
+      if (!callerCached) CacheLifecycle.releaseTruncated(input)
     }
   }
 

@@ -13,7 +13,7 @@ object ProfileAb {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
     val names = sys.env.getOrElse("SPARK_GRAFT_ONLY",
-      "q96_curation_v2,q136_curation_builder").split(",").toSeq
+      "q136_curation_builder").split(",").toSeq
     var b = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

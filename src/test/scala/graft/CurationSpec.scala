@@ -7,9 +7,9 @@ import org.scalatest.wordspec.AnyWordSpec
 import graft.pipeline.Curation
 
 /** The public pipeline builder: stage composition, censuses, tf-epoch
-  * invalidation on text mutation. q136 pins the full five-stage
-  * composition against the q96 oracle; this spec covers the generic
-  * pieces in isolation.
+  * invalidation on text mutation, release on a failing stage. q96/q136
+  * pin the full five-stage composition against their DuckDB oracle; this
+  * spec covers the generic pieces in isolation.
   */
 class CurationSpec extends AnyWordSpec with Matchers with SparkSpec {
 
@@ -35,6 +35,28 @@ class CurationSpec extends AnyWordSpec with Matchers with SparkSpec {
       r.censuses shouldBe Seq(
         "input_docs" -> 4.0, "min_len_kept" -> 3.0, "no_spam_kept" -> 2.0)
       r.release()
+    }
+
+    "release its caches when a stage throws" in {
+      val sc = spark.sparkContext
+      // delta-based: other suites share this session and may hold caches
+      val before = sc.getPersistentRDDs.keySet
+      // raises when the KeepWhere survivor set materializes, after the
+      // input cut has been registered
+      val boom = Curation.KeepWhere("boom",
+        when(col("doc_id") === 3L, raise_error(lit("boom")))
+          .otherwise(lit(true)))
+      val e = intercept[Exception] {
+        Curation.pipeline(docs, "doc_id", "text", Seq(boom),
+          persistInput = true)
+      }
+      e.getMessage should include ("boom")
+      // unpersist is non-blocking: allow the block manager to catch up
+      def leaked = sc.getPersistentRDDs.keySet -- before
+      val deadline = System.currentTimeMillis() + 15000
+      while (leaked.nonEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      leaked shouldBe empty
     }
 
     "dedup each ingest batch against the persisted seen-state" in {
