@@ -13,7 +13,8 @@
 # edit and the commit. This script makes the ritual one command:
 #
 #   ./scripts/preflight.sh            # compile + ManifestSpec + the
-#                                     # benchmark smoke run
+#                                     # state specs + the benchmark
+#                                     # smoke run
 #   ./scripts/preflight.sh q142       # ... then spot-check one query
 #                                     # end-to-end against DuckDB at
 #                                     # sf0.001 (needs graft.Verify)
@@ -27,8 +28,12 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "[preflight] sbt Test/compile + ManifestSpec..."
-sbt -batch "Test/compile" "testOnly graft.ManifestSpec"
+# StateMergeLawsSpec and FusionJobCountSpec pin the stored-state format
+# (delta appends, runs, job counts): a state-format change breaks them,
+# not ManifestSpec.
+echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, FusionJobCountSpec..."
+sbt -batch "Test/compile" \
+  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.FusionJobCountSpec"
 
 echo "[preflight] perfbench smoke run..."
 python3 perfbench/run.py --smoke

@@ -5,46 +5,68 @@ import scala.util.{Failure, Success}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
 import graft.core.Preconditions._
 
-/** Shared frequency table: one `groupBy(columns).count()` serves every
+/** A frequency table: one `groupBy(columns).count()` serves every
   * grouping analyzer over the same (columns, where)
   * (reference capability: analyzers/GroupingAnalyzers.scala:55-109).
   *
-  * The state merge of two frequency tables is a null-safe full outer join
-  * summing counts (reference: analyzers/GroupingAnalyzers.scala:163-192) —
-  * at scale this is a shuffle on the grouping key, which Catalyst plans as
-  * a sort-merge or hash join; partial aggregation has already collapsed
-  * each side to distinct keys.
+  * `frequencies` is the whole table, one row per distinct key. A stored
+  * state keeps it as key-sorted parquet `runs` (see
+  * [[graft.core.HdfsStateProvider]]); `frequencies` is then their union
+  * summed by key, and `fresh` is the part no run holds yet (the day just
+  * appended). Without runs, the whole table is unstored. `sums` holds, per frequency-based analyzer, its slot
+  * values of the family's fused aggregation over the whole table — what
+  * lets the runner append a day from the day's keys alone
+  * (see [[FrequencyBasedAnalyzer]]).
+  *
+  * Merging two states sums their tables by key: a union plus a
+  * null-safe `groupBy` (reference: the null-safe full outer join of
+  * analyzers/GroupingAnalyzers.scala:163-192). Sums over keys do not add
+  * across tables that share keys, so a merged state carries none.
   */
-case class FrequenciesAndNumRows(frequencies: DataFrame, numRows: Long)
+case class FrequenciesAndNumRows(
+    frequencies: DataFrame,
+    numRows: Long,
+    runs: Seq[FrequencyRun] = Nil,
+    fresh: Option[DataFrame] = None,
+    sums: Map[AnyAnalyzer, Seq[Any]] = Map.empty)
     extends State[FrequenciesAndNumRows] {
 
-  override def merge(other: FrequenciesAndNumRows): FrequenciesAndNumRows =
+  /** The part of the table that no run holds: all of it without runs. */
+  def unstored: Option[DataFrame] = if (runs.isEmpty) Some(frequencies) else fresh
+
+  override def merge(other: FrequenciesAndNumRows): FrequenciesAndNumRows = {
+    import FrequenciesAndNumRows.summed
+    val parts = unstored.toSeq ++ other.unstored
     FrequenciesAndNumRows(
-      FrequenciesAndNumRows.sumCounts(frequencies, other.frequencies),
-      numRows + other.numRows)
+      summed(Seq(frequencies, other.frequencies)),
+      numRows + other.numRows,
+      runs ++ other.runs,
+      if (parts.isEmpty) None else Some(summed(parts)))
+  }
 }
 
 object FrequenciesAndNumRows {
   val COUNT_COL = "graft_count"
 
-  /** Null-safe full outer join of two frequency tables on their grouping
-    * columns, summing the counts.
+  /** Key columns of a frequency table. */
+  private[graft] def keyColumns(table: DataFrame): Seq[String] =
+    table.columns.filterNot(_ == COUNT_COL).toSeq
+
+  /** Tables over the same key columns as one table: their union with the
+    * counts summed per key (`groupBy` groups null keys together, so the
+    * sum is null-safe). One table is returned as it is.
     */
-  private[graft] def sumCounts(left: DataFrame, right: DataFrame): DataFrame = {
-    val groupCols = left.columns.filterNot(_ == COUNT_COL).toSeq
-    def l(c: String) = col(s"graft_l.$c")
-    def r(c: String) = col(s"graft_r.$c")
-    val joinCond = groupCols.map(c => l(c) <=> r(c)).reduce(_ && _)
-    left.alias("graft_l").join(right.alias("graft_r"), joinCond, "outer")
-      .select(
-        groupCols.map(c => coalesce(l(c), r(c)).as(c)) :+
-          (coalesce(l(COUNT_COL), lit(0L)) + coalesce(r(COUNT_COL), lit(0L)))
-            .as(COUNT_COL): _*)
-  }
+  private[graft] def summed(tables: Seq[DataFrame]): DataFrame =
+    if (tables.size == 1) tables.head else sumByKey(tables.reduce(_ unionByName _))
+
+  /** Rows of frequency tables, a key possibly in several, as one table. */
+  private[graft] def sumByKey(rows: DataFrame): DataFrame =
+    rows.groupBy(keyColumns(rows).map(col): _*).agg(sum(col(COUNT_COL)).as(COUNT_COL))
 
   /** SELECT cols, count(*) FROM data WHERE (any col IS NOT NULL) [AND where]
     * GROUP BY cols — reference: analyzers/GroupingAnalyzers.scala:55-109.
@@ -77,6 +99,65 @@ object FrequenciesAndNumRows {
   }
 }
 
+/** One stored part of a frequency table: a parquet directory holding
+  * distinct keys with their counts, sorted by key within each file.
+  * `rows` is its number of keys; `range` bounds them when the table has
+  * one orderable key column.
+  */
+case class FrequencyRun(path: String, rows: Long, range: Option[KeyRange])
+
+/** Bounds of the keys of a frequency table with one orderable key column.
+  * `min` and `max` are ordinals: a `Long` for integral keys, days for
+  * dates and microseconds for timestamps, the string itself for
+  * (binary-collated) strings, which compare as UTF-8 bytes as Spark
+  * orders them. Both are null when no key is non-null.
+  */
+case class KeyRange(min: Any, max: Any, hasNull: Boolean) {
+
+  private def cmp(a: Any, b: Any): Int = (a, b) match {
+    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+    case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case _ => throw new IllegalArgumentException(s"incomparable key bounds $a and $b")
+  }
+
+  /** Whether a key of `other` may also be a key of this range. */
+  def overlaps(other: KeyRange): Boolean =
+    (hasNull && other.hasNull) ||
+      (min != null && other.min != null &&
+        cmp(min, other.max) <= 0 && cmp(other.min, max) <= 0)
+}
+
+object KeyRange {
+
+  /** The ordinal of the key of `schema`'s frequency table, when it has
+    * exactly one key column of an orderable type.
+    */
+  private def ordinal(schema: StructType): Option[(String, Column)] =
+    schema.fields.filterNot(_.name == FrequenciesAndNumRows.COUNT_COL) match {
+      case Array(key) =>
+        val c = col(key.name)
+        (key.dataType match {
+          case ByteType | ShortType | IntegerType | LongType => Some(c.cast(LongType))
+          case DateType => Some(unix_date(c).cast(LongType))
+          case TimestampType => Some(unix_micros(c))
+          case StringType => Some(c)
+          case _ => None
+        }).map(key.name -> _)
+      case _ => None
+    }
+
+  /** min, max and has-null aggregations over a table whose key has an
+    * ordinal; [[fromRow]] decodes them.
+    */
+  def aggregates(schema: StructType): Option[Seq[Column]] =
+    ordinal(schema).map { case (key, o) =>
+      Seq(min(o), max(o), coalesce(max(col(key).isNull), lit(false)))
+    }
+
+  def fromRow(row: Row, offset: Int): KeyRange =
+    KeyRange(row.get(offset), row.get(offset + 1), row.getBoolean(offset + 2))
+}
+
 /** Analyzer consuming a shared frequency table. Its aggregations run over
   * the (already small) frequency DataFrame and are fused with all other
   * grouping analyzers on the same column set by the runner.
@@ -99,6 +180,19 @@ trait GroupingAnalyzer[M <: Metric[_]] extends Analyzer[FrequenciesAndNumRows, M
 
 /** Grouping analyzer whose metric is a fused aggregation over the
   * frequency table (everything except Histogram / MutualInformation).
+  *
+  * Sums-over-keys contract: every column of
+  * [[aggregationFunctionsOverFrequencies]] is a sum or a count over the
+  * table's rows of a function of the row's count, built the same for any
+  * `numRows` (the runner builds them with 0), and [[fromFrequencyAggregate]]
+  * reads only those slot values and `numRows`. The slot values of a table
+  * then change on an append by F(new counts of the touched keys) −
+  * F(old counts of the touched keys), F being the aggregation over just
+  * those keys' rows — so the runner appends a day from the day's keys
+  * alone and keeps the slot values in the state's `sums`. Uniqueness,
+  * Distinctness, UniqueValueRatio, CountDistinct, Entropy (Σ c·ln c) and
+  * DuplicateRowCount all keep it; an analyzer that does not (a max over
+  * counts, say) must not extend this class.
   */
 abstract class FrequencyBasedAnalyzer(
     val name: String,
@@ -109,16 +203,21 @@ abstract class FrequencyBasedAnalyzer(
   val entity: Entity = if (groupingColumns.size == 1) Entity.Column else Entity.Multicolumn
   val instance: String = groupingColumns.mkString(",")
 
-  /** Aggregations over the frequency table; numRows available for ratios. */
+  /** Aggregations over the frequency table (see the class contract). */
   def aggregationFunctionsOverFrequencies(numRows: Long): Seq[Column]
 
   def fromFrequencyAggregate(result: Row, offset: Int, numRows: Long): Option[Double]
 
+  /** From the state's stored slot values when it has them, else one
+    * aggregation over its table.
+    */
   override def computeMetricFrom(state: Option[FrequenciesAndNumRows]): DoubleMetric =
     state match {
       case Some(s) =>
-        val aggs = aggregationFunctionsOverFrequencies(s.numRows)
-        val row = s.frequencies.agg(aggs.head, aggs.tail: _*).collect().head
+        val row = s.sums.get(this).map(Row.fromSeq).getOrElse {
+          val aggs = aggregationFunctionsOverFrequencies(s.numRows)
+          s.frequencies.agg(aggs.head, aggs.tail: _*).collect().head
+        }
         metricFromRow(row, 0, s.numRows)
       case None =>
         DoubleMetric(entity, name, instance,
@@ -296,10 +395,11 @@ case class MutualInformation(columns: Seq[String], override val where: Option[St
 
   override def computeMetricFrom(state: Option[FrequenciesAndNumRows]): DoubleMetric =
     state match {
-      case Some(FrequenciesAndNumRows(freq, numRows)) if numRows > 0 =>
+      case Some(s) if s.numRows > 0 =>
         import FrequenciesAndNumRows.COUNT_COL
+        val freq = s.frequencies
         val Seq(c1, c2) = columns
-        val n = lit(numRows.toDouble)
+        val n = lit(s.numRows.toDouble)
         // null-safe joins: frequency rows may carry a null in ONE of the two
         // columns (they pass the any-key-non-null filter); a plain equi-join
         // would drop them from the joint sum while the marginals and n still

@@ -71,8 +71,9 @@ case class Histogram(
 
   override def computeMetricFrom(state: Option[FrequenciesAndNumRows]): HistogramMetric =
     state match {
-      case Some(FrequenciesAndNumRows(freq, numRows)) =>
+      case Some(state) =>
         import FrequenciesAndNumRows.COUNT_COL
+        val freq = state.frequencies
         // two actions follow (bin count + top-K): cache the frequency plan
         // so the source groupBy does not re-execute per action
         freq.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -86,7 +87,7 @@ case class Histogram(
             freq.unpersist(blocking = false)
             ()
           }
-        val denom = math.max(numRows, 1L)
+        val denom = math.max(state.numRows, 1L)
         val values = topBins.map { row =>
           val value = row.getString(row.fieldIndex(Histogram.BIN_COL))
           val countIdx = row.fieldIndex(COUNT_COL)

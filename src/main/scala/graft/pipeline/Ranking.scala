@@ -84,9 +84,15 @@ object Ranking {
     // OWN internal caches after one consumption (the CacheLifecycle
     // convention, e.g. the LM scorers' tf frame) would recompute from
     // the raw corpus on the second pass. A frame the caller already
-    // persisted is used as-is (and not released).
+    // persisted, or cut with CacheLifecycle.truncate (a LogicalRDD leaf
+    // over a persisted RDD), is used as-is (and not released).
     val callerCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+        (df.queryExecution.analyzed match {
+          case lr: org.apache.spark.sql.execution.LogicalRDD =>
+            lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+          case _ => false
+        })
     // truncate, not persist: beyond the cache (both evaluate the
     // upstream once), the cut TRUNCATES the logical plan to a LogicalRDD
     // leaf. The `.rdd` conversion below and the count/assign passes each

@@ -4,7 +4,7 @@ import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+import org.apache.spark.sql.functions.{array, coalesce, col, count, explode, lit, struct, sum}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -94,12 +94,17 @@ object AnalyzerContext {
   *   row count and every frequency-based metric
   * + each standalone analyzer's own plan (Histogram, CustomSql, ...).
   * An incremental run reads the new data exactly as often. Loaded states
-  * merge without touching the data, except frequency tables: the stored
-  * table is outer-joined with the fresh one before that same aggregation,
-  * and a table that is persisted is cached for the aggregation and written
-  * from the cache — one write per persisted table, no re-run of the
-  * groupBy. The cache is released before `run` returns. Nothing else
-  * touches the data.
+  * merge without touching the data. A frequency state is stored as runs
+  * with each frequency-based analyzer's fused slot values, so appending a
+  * day touches only the day's keys: the fused aggregation over the fresh
+  * table (plus its key range), one lookup of the day's keys in just the
+  * stored runs whose key range can hold them (none for a day of new
+  * keys), and one write of the fresh table as a new run, shared by the
+  * family — state I/O grows with the day, not with the history. Families
+  * whose metric needs the whole table (MutualInformation, Histogram) sum
+  * the stored table with the fresh one before the aggregation. The fresh
+  * table is cached for these passes and released before `run` returns.
+  * Nothing else touches the data.
   */
 object AnalysisRunner {
 
@@ -304,15 +309,31 @@ object AnalysisRunner {
       case Failure(_) => group.map(a => a -> Try(a.computeStateFrom(data)))
     }
 
-  /** One frequency table serves the whole (columns, where) family. The
-    * family shares one state: the fresh table is merged with the stored
-    * table of the first member that has one (the reference loads its
-    * sample analyzer's), ONE fused aggregation over the merged table
-    * yields numRows plus every frequency-based metric, and the merged
-    * table is persisted under every member. The table is cached only when
-    * a second pass over it follows — a persist or a non-frequency-based
-    * analyzer (reference capability: runners/AnalysisRunner.scala:218-234,
-    * 574-578) — and released before this returns.
+  /** One frequency table serves the whole (columns, where) family, and
+    * the family shares one state. Slot 0 of the family's fused
+    * aggregation F is numRows = SUM(count) — the row count under the same
+    * (non-null keys AND where) filters as the table itself, the reference
+    * numRows semantics with no extra scan — and every further slot is a
+    * frequency-based member's (reference capability:
+    * runners/AnalysisRunner.scala:218-234, 574-578).
+    *
+    * Without a stored state, F runs over the day's fresh table. When
+    * every member is frequency-based and has its slot values stored
+    * (`sums`), the append touches only the day's keys: new slots = stored
+    * + F(new counts of the touched keys) − F(old counts of the touched
+    * keys), the old counts looked up null-safely in only those stored
+    * runs whose key range can hold a key of the day — pruned on the
+    * driver from the runs' recorded ranges, so a day of new keys reads no
+    * stored row at all. When that lookup would read every stored run and
+    * they hold no more keys than the day, the whole table is merged and
+    * persisted as one run instead (see `appended`). Otherwise
+    * (MutualInformation, Histogram, a member with no stored slots) F and
+    * every metric run over the whole table, the stored table summed with
+    * the fresh one by key, and the fresh table is persisted as a new run.
+    *
+    * The fresh table is cached when a second pass over it follows (a
+    * persist, a stored state, a non-frequency-based member) and released
+    * before this returns; a persist writes it once for the family.
     */
   private def runGroupingFamily(
       data: DataFrame,
@@ -322,29 +343,60 @@ object AnalysisRunner {
 
     val head = analyzers.head
     val freqBased = analyzers.collect { case f: FrequencyBasedAnalyzer => f }
-    var cached: Option[DataFrame] = None
+    // aggregation expressions are numRows-independent (numRows only feeds
+    // the decode step), so 0 is a safe placeholder while building them
+    val slots = freqBased.map(_.aggregationFunctionsOverFrequencies(0L))
+    val aggs = coalesce(sum(col(FrequenciesAndNumRows.COUNT_COL)), lit(0L)) +: slots.flatten
+    val offsets = slots.map(_.length).scanLeft(1)(_ + _)
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      cached += df
+      df
+    }
+    def fused(table: DataFrame): Row = table.agg(aggs.head, aggs.tail: _*).collect().head
     try {
-      val fresh = FrequenciesAndNumRows.computeFrequenciesOnly(
+      val loaded = aggregateWith.toSeq.flatMap(l => analyzers.flatMap(l.load(_)))
+      val computed = FrequenciesAndNumRows.computeFrequenciesOnly(
         data, head.groupingColumns, head.where)
-      val loaded = aggregateWith.flatMap(loader =>
-        analyzers.iterator.flatMap(loader.load(_)).nextOption())
-      val frequencies = loaded.fold(fresh)(l => FrequenciesAndNumRows.sumCounts(fresh, l.frequencies))
-      if (saveStatesWith.nonEmpty || freqBased.size < analyzers.size) {
-        frequencies.persist(StorageLevel.MEMORY_AND_DISK)
-        cached = Some(frequencies)
-      }
+      val fresh =
+        if (saveStatesWith.nonEmpty || loaded.nonEmpty || freqBased.size < analyzers.size) {
+          cache(computed)
+        } else computed
 
-      // slot 0 of the fused agg derives numRows = SUM(count): the family's
-      // row count under the same (non-null keys AND where) filters as the
-      // frequencies themselves — reference numRows semantics, no extra scan.
-      // Aggregation expressions are numRows-independent (numRows only feeds
-      // the decode step), so 0 is a safe placeholder while building them
-      val aggs = coalesce(sum(col(FrequenciesAndNumRows.COUNT_COL)), lit(0L)) +:
-        freqBased.flatMap(_.aggregationFunctionsOverFrequencies(0L))
-      val offsets = freqBased.map(_.aggregationFunctionsOverFrequencies(0L).length)
-        .scanLeft(1)(_ + _)
-      val row = frequencies.agg(aggs.head, aggs.tail: _*).collect().head
-      val state = FrequenciesAndNumRows(frequencies, row.getLong(0))
+      val stored = loaded.headOption
+      val storedSums = loaded.flatMap(_.sums).toMap
+      val appendable = stored.exists { s =>
+        freqBased.size == analyzers.size && loaded.size == analyzers.size &&
+          loaded.forall(sameTable(_, s)) &&
+          freqBased.zip(slots).forall { case (f, fs) => storedSums.get(f).exists(_.size == fs.size) }
+      }
+      val (view, row, runs) = stored match {
+        case None => (fresh, fused(fresh), Nil)
+        case Some(s) =>
+          val view = FrequenciesAndNumRows.summed(Seq(s.frequencies, fresh))
+          val delta =
+            if (appendable) appended(s, s.numRows +: freqBased.flatMap(storedSums), fresh, aggs)
+            else None
+          delta match {
+            case Some(slotValues) => (view, Row.fromSeq(slotValues), s.runs)
+            case None =>
+              // the whole table: persisted as one run when the append
+              // path chose it, otherwise with the fresh table as a new run
+              if ((appendable && saveStatesWith.nonEmpty) || freqBased.size < analyzers.size) {
+                cache(view)
+              }
+              (view, fused(view), if (appendable) Nil else s.runs)
+          }
+      }
+      // slot values are kept only when they are all sums the next append
+      // can add to
+      val sums: Map[AnyAnalyzer, Seq[Any]] = freqBased.zip(offsets).zip(slots)
+        .map { case ((f, o), s) => f -> row.toSeq.slice(o, o + s.size) }
+        .collect { case (f, v) if v.forall(x => x.isInstanceOf[Long] || x.isInstanceOf[Double]) =>
+          f -> v
+        }.toMap
+      val state = FrequenciesAndNumRows(view, row.getLong(0), runs, Some(fresh), sums)
       val offsetOf = freqBased.zip(offsets).toMap
 
       analyzers.map { a =>
@@ -365,6 +417,82 @@ object AnalysisRunner {
     } finally {
       cached.foreach(_.unpersist(blocking = true))
     }
+  }
+
+  /** Whether two members' loaded states hold the same table. */
+  private def sameTable(a: FrequenciesAndNumRows, b: FrequenciesAndNumRows): Boolean =
+    a.numRows == b.numRows &&
+      (if (a.runs.nonEmpty || b.runs.nonEmpty) a.runs == b.runs
+       else a.frequencies eq b.frequencies)
+
+  /** The fused slot values `before` of `stored` after appending `fresh`:
+    * before + F(new counts of the touched keys) − F(old counts of the
+    * touched keys). Stored runs are pruned by key range first when the
+    * key has one; with no run left every key of the day is new, and the
+    * delta is F(fresh). None when the lookup would read every stored run
+    * and they hold no more keys than the day's table: merging and
+    * rewriting the whole table then costs no more than the day, and it
+    * leaves one run for the next lookup (a key set that stops growing,
+    * such as a category, would otherwise add a run to read per append).
+    */
+  private def appended(
+      stored: FrequenciesAndNumRows,
+      before: Seq[Any],
+      fresh: DataFrame,
+      aggs: Seq[Column]): Option[Seq[Any]] = {
+    val rangeAggs = KeyRange.aggregates(fresh.schema).getOrElse(Nil)
+    // F over the day's keys, their number and their key range
+    lazy val freshRow = {
+      val all = aggs ++ (count(lit(1)) +: rangeAggs)
+      fresh.agg(all.head, all.tail: _*).collect().head
+    }
+    lazy val freshRange = KeyRange.fromRow(freshRow, aggs.size + 1)
+    val live = stored.runs.filter(_.rows > 0)
+    lazy val candidates =
+      live.filter(r => rangeAggs.isEmpty || r.range.forall(_.overlaps(freshRange)))
+    if (stored.runs.isEmpty) Some(lookedUp(before, fresh, stored.frequencies, aggs))
+    else if (candidates.isEmpty) Some(before.zip(freshRow.toSeq).map { case (b, d) => plus(b, d, 1) })
+    else if (candidates.size == live.size && live.map(_.rows).sum <= freshRow.getLong(aggs.size)) None
+    else Some(lookedUp(before, fresh,
+      FrequencyRuns.read(fresh.sparkSession, stored.frequencies.schema, candidates), aggs))
+  }
+
+  /** `before` + F(new counts) − F(old counts) of the keys of `fresh`,
+    * their old counts summed (null-safely, by `groupBy`) from `old`.
+    */
+  private def lookedUp(
+      before: Seq[Any],
+      fresh: DataFrame,
+      old: DataFrame,
+      aggs: Seq[Column]): Seq[Any] = {
+    import FrequenciesAndNumRows.COUNT_COL
+    val keys = FrequenciesAndNumRows.keyColumns(fresh).map(col)
+    val (f, s) = ("graft_fresh", "graft_side")
+    val touched = fresh.select(keys :+ col(COUNT_COL).as(f) :+ lit(0L).as(COUNT_COL): _*)
+      .unionByName(old.select(keys :+ lit(0L).as(f) :+ col(COUNT_COL): _*))
+      .groupBy(keys: _*)
+      .agg(sum(col(f)).as(f), sum(col(COUNT_COL)).as(COUNT_COL))
+      .where(col(f) > 0)
+    // each touched key once with its new count (side 1) and, if it was
+    // stored, once with its old count (side -1)
+    val sides = touched
+      .select(keys :+ explode(array(
+        struct(lit(1).as(s), (col(f) + col(COUNT_COL)).as(COUNT_COL)),
+        struct(lit(-1).as(s), col(COUNT_COL).as(COUNT_COL)))).as("graft_e"): _*)
+      .select(keys :+ col(s"graft_e.$s") :+ col(s"graft_e.$COUNT_COL"): _*)
+      .where(col(s) === 1 || col(COUNT_COL) > 0)
+      .groupBy(s).agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getInt(0) -> r.toSeq.tail).toMap
+    before.indices.map { i =>
+      Seq(1, -1).foldLeft(before(i))((v, side) => sides.get(side).fold(v)(d => plus(v, d(i), side)))
+    }
+  }
+
+  /** a + sign * b for two slot values of one kind (Long or Double). */
+  private def plus(a: Any, b: Any, sign: Int): Any = (a, b) match {
+    case (x: Long, y: Long) => x + sign * y
+    case (x: Double, y: Double) => x + sign * y
+    case _ => throw new IllegalStateException(s"slot values $a and $b are not sums")
   }
 }
 

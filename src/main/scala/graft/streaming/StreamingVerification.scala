@@ -23,14 +23,22 @@ class StreamingVerifier(
   private val provider = new InMemoryStateProvider
   @volatile private var lastResult: Option[VerificationResult] = None
   @volatile private var lastBatchId: Long = -1L
+  // lineage cuts of the frequency tables the provider holds (`live`) and
+  // of the batch in flight (`pending`); a cut is released only once the
+  // batch that replaced it has committed
+  private var liveCuts: Seq[DataFrame] = Nil
+  private var pendingCuts: Seq[DataFrame] = Nil
 
   /** Processes one micro-batch; returns the cumulative verification result. */
-  def processBatch(batch: DataFrame): VerificationResult = {
+  def processBatch(batch: DataFrame): VerificationResult = synchronized {
     val all = (analyzers ++ checks.flatMap(_.requiredAnalyzers())).distinct
     val ctx = AnalysisRunner.run(
       batch, all, aggregateWith = Some(provider), saveStatesWith = Some(provider))
     truncateGroupingLineage(all)
     val result = VerificationSuite.evaluate(checks, ctx)
+    liveCuts.foreach(graft.pipeline.CacheLifecycle.releaseTruncated)
+    liveCuts = pendingCuts
+    pendingCuts = Nil
     lastResult = Some(result)
     result
   }
@@ -57,7 +65,11 @@ class StreamingVerifier(
         r
       } catch {
         case e: Throwable =>
+          // the snapshot still holds the live cuts; the failed batch's own
+          // cuts are held by nothing once it is restored
           provider.replaceContents(beforeBatch)
+          pendingCuts.foreach(graft.pipeline.CacheLifecycle.releaseTruncated)
+          pendingCuts = Nil
           throw e
       }
     }
@@ -68,20 +80,28 @@ class StreamingVerifier(
     */
   def resetBatchTracking(): Unit = synchronized { lastBatchId = -1L }
 
-  /** Cumulative frequency-table states merge via outer joins; after each
-    * batch the merged plan is cut with a local checkpoint so batch N does
-    * not re-execute N stacked joins over every earlier micro-batch's
-    * (possibly no-longer-readable) DataFrame.
+  /** Cumulative frequency tables grow by one union per batch; after each
+    * batch every family's table is cut once with
+    * [[graft.pipeline.CacheLifecycle.truncate]] (the one lineage-cut
+    * policy), so batch N does not re-execute N stacked unions over every
+    * earlier micro-batch's (possibly no-longer-readable) DataFrame. The
+    * members of a family share one table, and so one cut.
     */
   private def truncateGroupingLineage(all: Seq[AnyAnalyzer]): Unit = {
+    val cutOf = new java.util.IdentityHashMap[DataFrame, DataFrame]()
     all.foreach {
       case g: graft.operators.GroupingAnalyzer[_] =>
         val typed = g.asInstanceOf[graft.core.Analyzer[
           graft.core.State[_], graft.core.Metric[_]]]
         provider.load(typed).foreach {
           case f: graft.operators.FrequenciesAndNumRows =>
-            provider.persist(typed, f.copy(
-              frequencies = f.frequencies.localCheckpoint(true)))
+            val cut = Option(cutOf.get(f.frequencies)).getOrElse {
+              val c = graft.pipeline.CacheLifecycle.truncate(f.frequencies)
+              cutOf.put(f.frequencies, c)
+              pendingCuts :+= c
+              c
+            }
+            provider.persist(typed, f.copy(frequencies = cut))
           case _ => ()
         }
       case _ => ()

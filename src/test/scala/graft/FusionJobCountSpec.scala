@@ -153,10 +153,30 @@ class FusionJobCountSpec extends AnyWordSpec with Matchers with SparkSpec {
       // scan family + KLL + one pass per grouping key — not three groupBys
       // per key (row count, persist and metric each re-running it)
       reads.value shouldBe 4 * 1000L
-      // per key: one stored-table schema read, one fused aggregation and
-      // one write of the merged table from its cache; plus the fused scan
-      // and the KLL pass
-      jobs should be <= 2 + 2 * 3
+      // the fused scan and the KLL pass; per key, the fused aggregation
+      // over the day's table (with its key range) and one write of it as
+      // a new run, plus for `cat` alone, whose keys every stored run can
+      // hold, one lookup of the day's keys. Loading a state starts no job
+      jobs should be <= 2 + 2 * 2 + 1
+    }
+
+    "write a family's table once per append, as one run" in {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-fusion-runs").toString
+      def provider(d: Int) = new HdfsStateProvider(spark, s"$tmp/day$d/state")
+      // parquet tables written under a day's location
+      def tables(d: Int): Int = {
+        import scala.jdk.CollectionConverters._
+        org.apache.commons.io.FileUtils.listFiles(new java.io.File(s"$tmp/day$d"), null, true)
+          .asScala.count(_.getName == "_SUCCESS")
+      }
+      val family = Seq[AnyAnalyzer](
+        Uniqueness(Seq("grp")), Distinctness(Seq("grp")), Entropy("grp"))
+      AnalysisRunner.run(data, family, saveStatesWith = Some(provider(1)))
+      tables(1) shouldBe 1
+      val ctx = AnalysisRunner.run(data, family,
+        aggregateWith = Some(provider(1)), saveStatesWith = Some(provider(2)))
+      tables(2) shouldBe 1
+      ctx.metric(Distinctness(Seq("grp"))).get.value.get shouldBe 7.0 / 2000
     }
 
     "skip the scan entirely when all metrics are cached in a repository" in {

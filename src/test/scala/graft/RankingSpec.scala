@@ -56,5 +56,46 @@ class RankingSpec extends AnyWordSpec with Matchers with SparkSpec {
       an[IllegalArgumentException] should be thrownBy
         Ranking.groupedNtile(df, "grp", Seq("k"), 0)
     }
-  }
+  
+
+    "use a truncated input as it is: no second cut, the same tiles" in {
+      import graft.pipeline.CacheLifecycle
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+      val s = spark
+      import s.implicits._
+      val df = (0 until 120).map(i => (i.toLong, s"g${i % 3}", (i * 7919L) % 101))
+        .toDF("id", "grp", "k")
+      def tiles(in: org.apache.spark.sql.DataFrame) =
+        Ranking.groupedNtile(in, "grp", Seq("k", "id"), 4)
+          .select("id", "bucket").as[(Long, Int)].collect().toMap
+      val want = tiles(df)
+      val sc = spark.sparkContext
+      val cut = CacheLifecycle.truncate(df)
+      val before = sc.getPersistentRDDs.keySet
+      // a cut runs its job under the call site "graft truncate #n"
+      val cutJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+              .exists(_.startsWith("graft truncate"))) cutJobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      val got =
+        try {
+          val t = tiles(cut)
+          Thread.sleep(1000) // let the listener bus drain
+          t
+        } finally sc.removeSparkListener(listener)
+      got shouldBe want
+      cutJobs.get shouldBe 0
+      // the result's own cache is released after its consumption; the
+      // caller's cut stays
+      val deadline = System.nanoTime() + 10000000000L
+      while (sc.getPersistentRDDs.keySet != before && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+      }
+      sc.getPersistentRDDs.keySet shouldBe before
+      CacheLifecycle.releaseTruncated(cut)
+    }
+}
 }

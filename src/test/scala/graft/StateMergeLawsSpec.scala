@@ -214,4 +214,136 @@ class StateMergeLawsSpec extends AnyWordSpec with Matchers with SparkSpec {
       }
     }
   }
+
+  "delta appends through HdfsStateProvider" should {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+
+    def location(tmp: String, day: Int) = f"$tmp/day-$day%02d/state"
+
+    /** 400 rows: `mono` is near-monotonic (each day's range overlaps only
+      * the previous day's by 50 keys), `ov` overlaps every day, `nk` has
+      * nulls and forms a two-column key with `a`, and `flag` feeds a
+      * WHERE filter.
+      */
+    def day(d: Int): DataFrame = {
+      val s = spark
+      import s.implicits._
+      val rnd = new scala.util.Random(d)
+      (0 until 400).map { i =>
+        (d * 350L + i + (if (rnd.nextInt(20) == 0) 1 else 0),
+          if (rnd.nextInt(10) == 0) null else s"k${rnd.nextInt(60)}",
+          rnd.nextInt(500), rnd.nextInt(7),
+          if (rnd.nextInt(8) == 0) null else s"b${rnd.nextInt(5)}",
+          rnd.nextInt(3))
+      }.toDF("mono", "nk", "ov", "a", "b", "flag")
+    }
+
+    def value(m: Metric[_]): Any = m.value.get
+
+    def closeTo(inc: Any, ful: Any): Boolean = (inc, ful) match {
+      case (i: Double, f: Double) => i == f || math.abs(i - f) <= 1e-9 * math.abs(f)
+      case (i, f) => i == f
+    }
+
+    "equal a single run over the concatenated days, with flat state bytes per append" in {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-delta-days").toString
+      val inWhere = Some("flag = 1")
+      val analyzers = Seq[AnyAnalyzer](
+        Uniqueness(Seq("mono")), Distinctness(Seq("mono")), DuplicateRowCount(Seq("mono")),
+        UniqueValueRatio(Seq("nk")), CountDistinct(Seq("nk")), Entropy("nk"),
+        Uniqueness(Seq("ov"), inWhere), Distinctness(Seq("ov"), inWhere),
+        Entropy("ov", inWhere),
+        Uniqueness(Seq("nk", "a")), CountDistinct(Seq("nk", "a")),
+        DuplicateRowCount(Seq("nk", "a")), UniqueValueRatio(Seq("a", "nk")),
+        // MutualInformation's family takes the full path
+        Uniqueness(Seq("a", "b")), MutualInformation(Seq("a", "b")),
+        Histogram("nk"))
+      var all: DataFrame = null
+      // past the run limit, so that one append compacts
+      val appends = (1 to FrequencyRuns.MaxInheritedRuns + 2).map { d =>
+        val today = day(d)
+        all = if (all == null) today else all.unionByName(today)
+        val loader = if (d == 1) None else Some(new HdfsStateProvider(spark, location(tmp, d - 1)))
+        val inc = AnalysisRunner.run(today, analyzers, aggregateWith = loader,
+          saveStatesWith = Some(new HdfsStateProvider(spark, location(tmp, d))))
+        val full = AnalysisRunner.run(all, analyzers)
+        analyzers.foreach { a =>
+          withClue(s"day $d, $a: ") {
+            closeTo(value(inc.metric(a).get), value(full.metric(a).get)) shouldBe true
+          }
+        }
+        val stored = new HdfsStateProvider(spark, location(tmp, d))
+        // the delta path's precondition: every frequency-based member
+        // stores its slot values
+        analyzers.collect { case f: FrequencyBasedAnalyzer => f }
+          .foreach(f => stored.load(f).get.sums.keySet shouldBe Set(f))
+        val runs = stored.load(Uniqueness(Seq("mono"))).get.runs.size
+        val bytes = org.apache.commons.io.FileUtils.sizeOfDirectory(
+          new java.io.File(location(tmp, d)).getParentFile)
+        (runs, bytes)
+      }
+      // one run more per append, or one compacted run
+      val runCounts = appends.map(_._1)
+      runCounts.head shouldBe 1
+      runCounts.indices.tail.foreach { i =>
+        Seq(runCounts(i - 1) + 1, 1) should contain(runCounts(i))
+      }
+      runCounts.max should be <= FrequencyRuns.MaxInheritedRuns
+      val compactions = runCounts.indices.tail.filter(i => runCounts(i) <= runCounts(i - 1))
+      compactions should not be empty
+      appends.indices.filterNot(compactions.contains).foreach { i =>
+        withClue(s"day ${i + 1} wrote ${appends(i)._2} bytes, day 1 ${appends.head._2}: ") {
+          appends(i)._2 should be <= 2 * appends.head._2
+        }
+      }
+    }
+
+    "read no stored run for a day of keys outside every stored range" in {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-delta-prune").toString
+      val analyzers = Seq[AnyAnalyzer](Uniqueness(Seq("mono")), Entropy("mono"),
+        CountDistinct(Seq("mono")))
+      AnalysisRunner.run(day(1), analyzers,
+        saveStatesWith = Some(new HdfsStateProvider(spark, location(tmp, 1))))
+      // make every stored run unreadable: a job that reads one fails
+      val runs = new HdfsStateProvider(spark, location(tmp, 1)).load(Entropy("mono")).get.runs
+      runs.foreach { r =>
+        new java.io.File(r.path).listFiles
+          .filter(_.getName.endsWith(".parquet"))
+          .foreach(f => java.nio.file.Files.write(f.toPath, "not parquet".getBytes))
+      }
+      val later = day(3) // keys 1050..1450, outside day 1's 350..750
+      val inc = AnalysisRunner.run(later, analyzers,
+        aggregateWith = Some(new HdfsStateProvider(spark, location(tmp, 1))),
+        saveStatesWith = Some(new HdfsStateProvider(spark, location(tmp, 2))))
+      val full = AnalysisRunner.run(day(1).unionByName(later), analyzers)
+      analyzers.foreach { a =>
+        withClue(s"$a: ") {
+          closeTo(value(inc.metric(a).get), value(full.metric(a).get)) shouldBe true
+        }
+      }
+      // an overlapping day must read the run, so the corruption shows
+      val overlapping = AnalysisRunner.run(day(2), analyzers,
+        aggregateWith = Some(new HdfsStateProvider(spark, location(tmp, 1))))
+      overlapping.metric(Entropy("mono")).get.value.isFailure shouldBe true
+    }
+
+    "fail loudly, naming the run, when an inherited run is deleted" in {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-delta-lost").toString
+      val analyzers = Seq[AnyAnalyzer](Uniqueness(Seq("mono")))
+      AnalysisRunner.run(day(1), analyzers,
+        saveStatesWith = Some(new HdfsStateProvider(spark, location(tmp, 1))))
+      // day 3's keys miss day 1's run: the append inherits it
+      AnalysisRunner.run(day(3), analyzers,
+        aggregateWith = Some(new HdfsStateProvider(spark, location(tmp, 1))),
+        saveStatesWith = Some(new HdfsStateProvider(spark, location(tmp, 2))))
+      val inherited = new HdfsStateProvider(spark, location(tmp, 2))
+        .load(Uniqueness(Seq("mono"))).get.runs.head.path
+      inherited should include("day-01")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(inherited))
+      val e = the[IllegalStateException] thrownBy
+        new HdfsStateProvider(spark, location(tmp, 2)).load(Uniqueness(Seq("mono")))
+      e.getMessage should include(inherited)
+    }
+  }
 }

@@ -7,7 +7,7 @@ import org.scalatest.wordspec.AnyWordSpec
 
 import graft.checks.{Check, CheckLevel, CheckStatus}
 import graft.core._
-import graft.operators.{Completeness, Mean, Size}
+import graft.operators.{Completeness, CountDistinct, Entropy, Mean, Size, Uniqueness}
 import graft.streaming.{StreamingOps, StreamingVerifier}
 
 /** End-to-end Structured Streaming integration: a real MemoryStream source
@@ -81,7 +81,29 @@ class StreamingIntegrationSpec extends AnyWordSpec with Matchers with SparkSpec 
       verifier.resetBatchTracking()
       sizeOf(verifier.processBatch(b1, 0L)) shouldBe 12.0
     }
-  }
+  
+
+    "hold at most one lineage cut per grouping key across micro-batches" in {
+      val s = spark
+      import s.implicits._
+      val analyzers = Seq[AnyAnalyzer](
+        Uniqueness(Seq("k")), Entropy("k"), CountDistinct(Seq("j")))
+      val verifier = new StreamingVerifier(analyzers)
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val batches = (0 until 5).map { b =>
+        (0 until 50).map(i => (b * 40L + i, s"j${i % 7}")).toDF("k", "j")
+      }
+      batches.zipWithIndex.foreach { case (batch, id) => verifier.processBatch(batch, id.toLong) }
+      // two grouping keys (k, j): two cuts, the replaced ones released
+      (sc.getPersistentRDDs.keySet -- before).size should be <= 2
+      val full = graft.runners.AnalysisRunner.run(batches.reduce(_ unionByName _), analyzers)
+      analyzers.foreach { a =>
+        val got = verifier.latestResult.get.metrics(a).value.get.asInstanceOf[Double]
+        got shouldBe full.metric(a).get.value.get.asInstanceOf[Double] +- 1e-12
+      }
+    }
+}
 
   "streaming dedup with bounded state" should {
     "drop duplicate keys across micro-batches and keep state watermark-bounded" in {
