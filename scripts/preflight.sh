@@ -30,10 +30,11 @@ cd "$(dirname "$0")/.."
 
 # StateMergeLawsSpec and FusionJobCountSpec pin the stored-state format
 # (delta appends, runs, job counts): a state-format change breaks them,
-# not ManifestSpec.
-echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, FusionJobCountSpec..."
+# not ManifestSpec. DomainsSpec and CurationSpec pin URL canonicalization
+# and the curation chain, including its 32 KiB plan-description bound.
+echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, FusionJobCountSpec, DomainsSpec, CurationSpec..."
 sbt -batch "Test/compile" \
-  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.FusionJobCountSpec"
+  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.FusionJobCountSpec graft.DomainsSpec graft.CurationSpec"
 
 echo "[preflight] perfbench smoke run..."
 python3 perfbench/run.py --smoke

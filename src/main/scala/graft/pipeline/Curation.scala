@@ -71,6 +71,8 @@ object Curation {
 
   /** Canonical-URL dedup ([[Domains.dedupByCanonicalUrl]]): `urlExpr`
     * evaluates over the frame; smallest `idCol` per canonical URL wins.
+    * The dedup reads only (`idCol`, `urlExpr`), so the text never enters
+    * the URL shuffle.
     */
   final case class UrlDedup(urlExpr: Column) extends Stage
 
@@ -280,7 +282,8 @@ object Curation {
       case UrlDedup(urlExpr) =>
         val keptIds = Domains
           .dedupByCanonicalUrl(
-            frame.withColumn("graft_curl", urlExpr), "graft_curl", idCol)
+            frame.select(col(idCol), urlExpr.as("graft_curl")),
+            "graft_curl", idCol)
           .select(col(idCol))
         applySurvivors("url_dedup_kept", keptIds)
 

@@ -36,10 +36,11 @@ object Domains {
     when(h === "", lit(null).cast(StringType)).otherwise(lower(h))
   }
 
-  /** Canonical form of a URL column for URL-level dedup (the CC-index /
-    * RefinedWeb convention: one page, one key — a re-crawl of
-    * `HTTP://WWW.Example.com:80/a/?utm_source=x&b=2&a=1#frag` and
-    * `http://example.com/a?a=1&b=2` must collide). Pure codegen
+  /** `df` plus `name`, the canonical form of `url` for URL-level dedup
+    * (the CC-index / RefinedWeb convention: one page, one key — a
+    * re-crawl of `HTTP://WWW.Example.com:80/a/?utm_source=x&b=2&a=1#frag`
+    * and `http://example.com/a?a=1&b=2` must collide). An existing `name`
+    * column is replaced in place (`url` may read it). Pure codegen
     * expressions, no UDF. Normalization, exactly:
     *
     *  - scheme and host lowercased; userinfo and fragment stripped;
@@ -63,39 +64,69 @@ object Domains {
     *
     * Null for unparseable values (no scheme/host) — callers decide
     * whether keyless rows are kept or quarantined, as with [[urlHost]].
+    *
+    * Scale shape: four stacked projections, no shuffle — `url` is bound
+    * once; scheme, host:port, path and query are cut from it by one
+    * `regexp_extract` each; host, port, trimmed path and the filtered,
+    * sorted query from those; then the canonical string. Each part is a
+    * named column because `CollapseProject` keeps a non-cheap expression
+    * that is referenced more than once in its own Project instead of
+    * inlining it, so every regex runs once per row (6 `regexp_extract`s
+    * in the plan). Written as one nested Column, `url` is copied into
+    * every part and `hostport` into each of its own: the URL stage of
+    * q136's chain (perfbench `curation`, 1,000 docs, 4-vCPU VM) then
+    * carried 100 `regexp_extract`s, an 84 KB physical-plan description
+    * and 0.195 s of task CPU per op; bound, 6, 8.1 KB and 0.037 s
+    * (`plans/r21/`).
     */
-  def canonicalUrl(url: Column): Column =
-    canonicalUrl(url, TrackingParamPattern)
-
-  def canonicalUrl(url: Column, trackingParamPattern: String): Column = {
-    val scheme = lower(regexp_extract(url, "^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
-    val hostport = regexp_extract(url,
-      "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/?#]+)", 1)
-    val rawHost = regexp_extract(hostport, "^(\\[[^\\]]+\\]|[^:]+)", 1)
-    val host = regexp_replace(lower(rawHost), "^www\\.", "")
-    val port = regexp_extract(hostport, "^(?:\\[[^\\]]+\\]|[^:]+):([0-9]+)$", 1)
+  def withCanonicalUrl(
+      df: DataFrame,
+      url: Column,
+      name: String = "canonical_url",
+      trackingParamPattern: String = TrackingParamPattern): DataFrame = {
+    def part(p: String): String = "graft_cu_" + p
+    def c(p: String): Column = col(part(p))
+    val bound = df.select(col("*"), url.as(part("url")))
+      .select(col("*"),
+        lower(regexp_extract(c("url"), "^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
+          .as(part("scheme")),
+        regexp_extract(c("url"),
+          "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/?#]+)", 1)
+          .as(part("hostport")),
+        regexp_extract(c("url"),
+          "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1).as(part("raw_path")),
+        regexp_extract(c("url"), "^[^#?]*\\?([^#]*)", 1).as(part("query")))
+      .select(col("*"),
+        regexp_replace(
+          lower(regexp_extract(c("hostport"), "^(\\[[^\\]]+\\]|[^:]+)", 1)),
+          "^www\\.", "").as(part("host")),
+        regexp_extract(c("hostport"), "^(?:\\[[^\\]]+\\]|[^:]+):([0-9]+)$", 1)
+          .as(part("port")),
+        regexp_replace(c("raw_path"), "/+$", "").as(part("trimmed_path")),
+        array_join(array_sort(filter(split(c("query"), "&"), p =>
+          p =!= "" && !p.rlike(trackingParamPattern))), "&").as(part("qstr")))
+    val scheme = c("scheme")
+    val port = c("port")
     val defaultPort = (scheme === "http" && port === "80") ||
       (scheme === "https" && port === "443")
     val portPart = when(port === "" || defaultPort, lit(""))
       .otherwise(concat(lit(":"), port))
-    val rawPath = regexp_extract(url,
-      "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1)
-    val trimmedPath = regexp_replace(rawPath, "/+$", "")
-    val path = when(trimmedPath === "", lit("/")).otherwise(trimmedPath)
-    val query = regexp_extract(url, "^[^#?]*\\?([^#]*)", 1)
-    val params = filter(split(query, "&"), p =>
-      p =!= "" && !p.rlike(trackingParamPattern))
-    val qstr = array_join(array_sort(params), "&")
-    val queryPart = when(qstr === "", lit(""))
-      .otherwise(concat(lit("?"), qstr))
-    when(scheme === "" || host === "", lit(null).cast(StringType))
-      .otherwise(concat(scheme, lit("://"), host, portPart, path, queryPart))
+    val path = when(c("trimmed_path") === "", lit("/"))
+      .otherwise(c("trimmed_path"))
+    val queryPart = when(c("qstr") === "", lit(""))
+      .otherwise(concat(lit("?"), c("qstr")))
+    bound.withColumn(name,
+        when(scheme === "" || c("host") === "", lit(null).cast(StringType))
+          .otherwise(concat(scheme, lit("://"), c("host"), portPart, path,
+            queryPart)))
+      .drop(Seq("url", "scheme", "hostport", "raw_path", "query", "host",
+        "port", "trimmed_path", "qstr").map(part): _*)
   }
 
   /** Anchored match for one `key=value` query parameter that is pure
     * click/campaign tracking — never page content in ANY corpus. Shared
     * with the q85 oracle replay. Bare `ref` is deliberately absent (see
-    * [[canonicalUrl]]); `ref_src` stays (Twitter attribution only). */
+    * [[withCanonicalUrl]]); `ref_src` stays (Twitter attribution only). */
   val TrackingParamPattern: String =
     "^(?:utm_[^=&]*|gclid|fbclid|msclkid|dclid|igshid|mc_cid|mc_eid|ref_src|_ga)(?:=.*)?$"
 
@@ -106,26 +137,29 @@ object Domains {
     "^(?:utm_[^=&]*|gclid|fbclid|msclkid|dclid|igshid|mc_cid|mc_eid|ref|ref_src|_ga)(?:=.*)?$"
 
   /** URL-level exact dedup: one survivor (min `tieBreakCol`, the
-    * [[Dedup.exact]] election) per [[canonicalUrl]] of `urlCol`. Rows
-    * whose URL does not canonicalize (null key) are ALL KEPT — an
+    * [[Dedup.exact]] election) per [[withCanonicalUrl]] key of `urlCol`.
+    * Rows whose URL does not canonicalize (null key) are ALL KEPT — an
     * unparseable URL identifies nothing, so it can't collide. The
     * returned frame carries `df`'s columns plus `canonical_url`.
     *
-    * Scale shape: one map-side-combinable groupBy on the canonical-url
-    * key (the [[Dedup.exact]] min_by plan — partial aggregates collapse
-    * hot keys per map partition, so a URL crawled a million times never
-    * forms a hot reduce group), plus a null-key pass-through that
-    * shuffles nothing.
+    * Scale shape: ONE map-side-combinable groupBy (the [[Dedup.exact]]
+    * min_by plan — partial aggregates collapse hot keys per map
+    * partition, so a URL crawled a million times never forms a hot
+    * reduce group) on (`canonical_url`, a discriminator that is null for
+    * keyed rows and a per-row id for null-key rows). Null-key rows thus
+    * ride the same aggregation as singleton groups, so the input is
+    * evaluated once: a separate null-key branch would evaluate its whole
+    * lineage, joins and broadcasts included, a second time.
     */
   def dedupByCanonicalUrl(
       df: DataFrame,
       urlCol: String,
       tieBreakCol: String): DataFrame = {
-    val keyed = df.withColumn("canonical_url", canonicalUrl(col(urlCol)))
-    val deduped = Dedup.exact(
-      keyed.where(col("canonical_url").isNotNull),
-      Seq("canonical_url"), tieBreakCol)
-    deduped.unionByName(keyed.where(col("canonical_url").isNull))
+    val keyed = withCanonicalUrl(df, col(urlCol))
+      .withColumn("graft_cu_null_id",
+        when(col("canonical_url").isNull, monotonically_increasing_id()))
+    Dedup.exact(keyed, Seq("canonical_url", "graft_cu_null_id"), tieBreakCol)
+      .drop("graft_cu_null_id")
   }
 
   /** Per-domain curation stats: one row per non-null domain with

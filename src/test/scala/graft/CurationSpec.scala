@@ -147,5 +147,52 @@ class CurationSpec extends AnyWordSpec with Matchers with SparkSpec {
       r.censuses.toMap.apply("quality_kept") shouldBe 20.0
       r.release()
     }
+
+    "keep every physical-plan description of q136's chain under 32 KiB" in {
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+      import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+      // Spark renders each execution's physical plan on the driver before
+      // it runs; a plan that re-inlines a deep expression per use shows
+      // up here first (a nested canonical-URL Column put ~86 KB into the
+      // URL stage's)
+      val sc = spark.sparkContext
+      val drainMarker = "graft-plan-size-drain"
+      val lengths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case st: SparkListenerSQLExecutionStart =>
+            if (st.description == drainMarker) drained.countDown()
+            else lengths.add(st.physicalPlanDescription.length)
+          case _ =>
+        }
+      }
+      SparkEntry.withTempDir("graft-plan-size") { dir =>
+        // a small corpus in q136's input layout: six sources, texts that
+        // share words across documents
+        spark.range(600).select(col("id").as("doc_id"),
+          concat(lit("src"), (col("id") % 6).cast("string")).as("source"),
+          concat_ws(" ", lit("the corpus holds"), (col("id") % 13).cast("string"),
+            lit("words and"), (col("id") % 7).cast("string"), lit("more words"))
+            .as("text"))
+          .write.parquet(s"$dir/documents.parquet")
+        sc.addSparkListener(listener)
+        try {
+          // q136's whole body: its input, stage list and URL expression,
+          // consumed through shard stats, then released
+          SparkEntry.queries("q136_curation_builder")(spark, dir)
+            .collect() should have length 1
+          // listener events arrive in order: once the marker execution is
+          // seen, every execution of the chain has been recorded
+          sc.setJobDescription(drainMarker)
+          try spark.range(1).collect() finally sc.setJobDescription(null)
+          drained.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+        } finally sc.removeSparkListener(listener)
+      }
+      import scala.jdk.CollectionConverters._
+      val got = lengths.asScala.toSeq
+      got should not be empty
+      all(got) should be < 32 * 1024
+    }
   }
 }

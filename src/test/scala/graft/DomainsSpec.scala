@@ -84,7 +84,7 @@ class DomainsSpec extends AnyWordSpec with Matchers with SparkSpec {
     }
   }
 
-  "canonicalUrl" should {
+  "withCanonicalUrl" should {
     "normalize scheme, host, port, path, params and fragment" in {
       val s = spark
       import s.implicits._
@@ -106,8 +106,8 @@ class DomainsSpec extends AnyWordSpec with Matchers with SparkSpec {
         // unparseable -> null
         "page moved" -> null,
         "/relative/only" -> null)
-      val out = Domains.canonicalUrl(col("url"))
-      val got = cases.map(_._1).toDF("url").select(out).collect()
+      val got = Domains.withCanonicalUrl(cases.map(_._1).toDF("url"), col("url"))
+        .select("canonical_url").collect()
         .map(r => if (r.isNullAt(0)) null else r.getString(0))
       got.toSeq shouldBe cases.map(_._2)
     }
@@ -123,16 +123,31 @@ class DomainsSpec extends AnyWordSpec with Matchers with SparkSpec {
         (3L, "HTTPS://a.com:443/x?utm_source=z"),
         (4L, "https://b.com/y"),
         (5L, "nope"),
-        (6L, "still nope"))
+        (6L, "still nope"),
+        // a whole-row duplicate with an unparseable URL, and a null URL:
+        // each null-key row is its own group, so none collapses
+        (6L, "still nope"),
+        (7L, null.asInstanceOf[String]))
         .toDF("doc_id", "url")
       val dd = Domains.dedupByCanonicalUrl(df, "url", "doc_id")
       val rows = dd.select("doc_id", "canonical_url").collect()
         .map(r => (r.getLong(0),
-          if (r.isNullAt(1)) null else r.getString(1))).toSet
-      rows shouldBe Set(
+          if (r.isNullAt(1)) null else r.getString(1))).toSeq
+      rows.sortBy(_._1) shouldBe Seq(
         (1L, "https://a.com/x"),
         (4L, "https://b.com/y"),
-        (5L, null), (6L, null))
+        (5L, null), (6L, null), (6L, null), (7L, null))
+    }
+
+    "replace an input canonical_url column" in {
+      val s = spark
+      import s.implicits._
+      val df = Seq((1L, "https://a.com/x", "x"), (2L, "https://a.com/x/", "y"))
+        .toDF("doc_id", "url", "canonical_url")
+      val out = Domains.dedupByCanonicalUrl(df, "url", "doc_id")
+      out.columns.toSeq shouldBe Seq("doc_id", "url", "canonical_url")
+      out.collect().map(r => (r.getLong(0), r.getString(2))).toSeq shouldBe
+        Seq((1L, "https://a.com/x"))
     }
   }
 }

@@ -410,9 +410,14 @@ class PlanAuditSpec extends AnyWordSpec with Matchers with SparkSpec {
       plan should include("partial_min_by")
       plan should not include "Window"
       plan should not include "Join"
-      // one exchange for the canonical-key groupBy; the null-key
-      // pass-through union adds none
+      // one exchange for the canonical-key groupBy; null-key rows ride
+      // the same aggregation
       plan.linesIterator.count(_.contains("Exchange hashpartitioning")) shouldBe 1
+      // each URL part is bound once: one regexp_extract per part, and no
+      // Union branch re-deriving the key
+      val optimized = dd.queryExecution.optimizedPlan.toString()
+      "regexp_extract\\(".r.findAllMatchIn(optimized).size should be <= 6
+      optimized should not include "Union"
     }
   }
 
