@@ -28,13 +28,13 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-# StateMergeLawsSpec and FusionJobCountSpec pin the stored-state format
-# (delta appends, runs, job counts): a state-format change breaks them,
-# not ManifestSpec. DomainsSpec and CurationSpec pin URL canonicalization
+# StateMergeLawsSpec, StateCodecSpec and FusionJobCountSpec pin the
+# stored-state format (delta appends, runs, one tagged codec per state
+# type, job counts): a state-format change breaks them, not ManifestSpec. DomainsSpec and CurationSpec pin URL canonicalization
 # and the curation chain, including its 32 KiB plan-description bound.
-echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, FusionJobCountSpec, DomainsSpec, CurationSpec..."
+echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, StateCodecSpec, FusionJobCountSpec, DomainsSpec, CurationSpec..."
 sbt -batch "Test/compile" \
-  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.FusionJobCountSpec graft.DomainsSpec graft.CurationSpec"
+  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.StateCodecSpec graft.FusionJobCountSpec graft.DomainsSpec graft.CurationSpec"
 
 echo "[preflight] perfbench smoke run..."
 python3 perfbench/run.py --smoke

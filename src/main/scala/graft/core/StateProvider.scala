@@ -1,16 +1,22 @@
 package graft.core
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, IOException, InputStream,
+  OutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.concurrent.TrieMap
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.operators.{DataTypeState, FrequenciesAndNumRows, FrequencyRun, KeyRange}
+import graft.operators.{CellPopDriftState, DataTypeState, DistinctRatioState, FreqDriftState,
+  FreqItemsState, FrequenciesAndNumRows, FrequencyRun, KeyRange, ManifestParityState,
+  QuantileShiftState, ThetaOverlapState}
+import graft.sketch.{KLLSketch, KLLState}
 
 /** Load/persist analyzer states — the substrate of incremental computation:
   * compute per-partition/per-day states once, merge algebraically later,
@@ -46,14 +52,30 @@ class InMemoryStateProvider extends StateLoader with StatePersister {
   }
 }
 
-/** Hadoop-filesystem provider with compact binary serde per state type
-  * (reference capability: analyzers/StateProvider.scala:71-435). Each
-  * analyzer's state is one file, `<location>-<analyzer id>.bin`.
+/** Hadoop-filesystem provider (reference capability:
+  * analyzers/StateProvider.scala:71-435). Each analyzer's state is one
+  * file, `<location>-<analyzer id>.bin`: a fixed magic number, the tag
+  * byte of the state's type and the state's body. Every persistable state
+  * type has one codec (tag, write, read) in the provider's codec table;
+  * `persist` picks it by the state's class and `load` by the file's tag,
+  * so a type's byte layout is written and read in one place. Pair states
+  * reuse their halves' codecs.
+  *
+  * Two rules refuse a persist, loudly, with an `IllegalArgumentException`:
+  *   - a [[NonMergeableState]] (HistogramBinned, ExactQuantile,
+  *     InterquartileRange): a later merge of it could only fail;
+  *   - an analyzer whose identity is not stable across runs: one that
+  *     holds a function (its rendering names a per-JVM lambda) or a
+  *     DataFrame (Spark renders only its first columns, so analyzers over
+  *     different frames would share a file). `load` answers `None` for
+  *     these, so an `aggregateWith` run computes fresh.
+  * A file without the magic number or with an unknown tag fails `load`,
+  * naming the file.
   *
   * Frequency states (grouping analyzers, Histogram) are stored as runs:
   * parquet directories `<location>-run-<uuid>.parquet`, each holding
   * distinct keys with their counts, sorted by key within each file. An
-  * analyzer's `.bin` file is then its manifest: the table schema,
+  * analyzer's `.bin` body is then its manifest: the table schema,
   * numRows, that analyzer's slot values of its family's fused
   * aggregation (when it has them, see `FrequencyBasedAnalyzer`) and the
   * runs, each with its key count and, for one orderable key column, its
@@ -74,64 +96,20 @@ class InMemoryStateProvider extends StateLoader with StatePersister {
   * a base run here. Run files that no manifest lists any more (a
   * location persisted over) are not deleted.
   */
-class HdfsStateProvider(spark: SparkSession, locationPrefix: String)
+class HdfsStateProvider(private val spark: SparkSession, private val locationPrefix: String)
     extends StateLoader with StatePersister {
+  import HdfsStateProvider._
 
   private def conf: Configuration = spark.sparkContext.hadoopConfiguration
 
   // manifests store run paths relative to their own directory
   private def manifestDir: Option[Path] = Option(new Path(locationPrefix).getParent)
 
-  // a lambda/anonymous-function field renders with a per-JVM identity
-  // (Foo$$Lambda$123@1a2b3c) — no later run can compute the same file name
-  private def lambdaKeyed(analyzer: Analyzer[_, _]): Boolean = {
-    val raw = analyzer.toString
-    raw.contains("$$Lambda") || raw.contains("$anonfun$")
-  }
-
-  private def identifier(analyzer: Analyzer[_, _]): String = {
+  private def path(analyzer: Analyzer[_, _]): Path = {
     // stable, filesystem-safe key per analyzer instance
-    val raw = analyzer.toString
-    java.lang.Long.toHexString(
-      raw.getBytes("UTF-8").foldLeft(1125899906842597L)((h, b) => 31 * h + b))
-  }
-
-  private def withOutput[T](path: String)(f: DataOutputStream => T): T = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val out = new DataOutputStream(fs.create(p, true))
-    try f(out) finally out.close()
-  }
-
-  private def withInput[T](path: String)(f: DataInputStream => T): Option[T] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = new DataInputStream(fs.open(p))
-    try Some(f(in)) finally in.close()
-  }
-
-  // counter keys serialize as writeInt(length) + utf8 bytes, the same
-  // length-prefixed scheme as the sketch-bytes states — writeUTF caps a
-  // key at 65535 UTF-8 bytes and a long token/URL item would poison the
-  // persist with UTFDataFormatException
-  private def writeFreqCounters(
-      o: DataOutputStream, counters: Map[String, Long], n: Long): Unit = {
-    o.writeInt(counters.size)
-    counters.foreach { case (k, v) =>
-      val kb = k.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      o.writeInt(kb.length); o.write(kb); o.writeLong(v)
-    }
-    o.writeLong(n)
-  }
-
-  private def readFreqState(i: DataInputStream): graft.operators.FreqItemsState = {
-    val size = i.readInt()
-    val counters = (0 until size).map { _ =>
-      val kl = i.readInt(); val kb = new Array[Byte](kl); i.readFully(kb)
-      new String(kb, java.nio.charset.StandardCharsets.UTF_8) -> i.readLong()
-    }.toMap
-    graft.operators.FreqItemsState(counters, i.readLong())
+    val key = analyzer.toString.getBytes(UTF_8)
+      .foldLeft(1125899906842597L)((h, b) => 31 * h + b)
+    new Path(s"$locationPrefix-${java.lang.Long.toHexString(key)}.bin")
   }
 
   // the runs the last persisted frequency state was stored as: the runner
@@ -157,247 +135,172 @@ class HdfsStateProvider(spark: SparkSession, locationPrefix: String)
   }
 
   override def persist[S <: State[_]](analyzer: Analyzer[S, _], state: S): Unit = {
-    // the persist would succeed but no later run could ever compute the
-    // same file name to load it back; fail LOUDLY instead of silently
-    // restarting the incremental aggregation. Persist-side ONLY: load()
-    // returns None for lambda-keyed analyzers so a same-JVM aggregateWith
-    // run still computes fresh instead of surfacing a failure metric
-    if (lambdaKeyed(analyzer)) {
+    // the persist would succeed, but no later run could compute the same
+    // file name (or another analyzer would): fail LOUDLY instead of
+    // silently restarting or corrupting the incremental aggregation
+    if (!stableIdentity(analyzer)) {
       throw new IllegalArgumentException(
-        s"Analyzer $analyzer carries a lambda in its identity — its state " +
-          "key is not stable across JVMs and cannot be persisted to a " +
-          "filesystem provider (use an analyzer without function-valued " +
-          "parameters)")
+        s"Analyzer $analyzer holds a function or a DataFrame, so its state key is " +
+          "not stable across runs and its state cannot be persisted to a " +
+          "filesystem provider")
     }
-    val base = s"$locationPrefix-${identifier(analyzer)}"
-    // non-mergeable states fail LOUDLY here (SURVEY §7.4): silently
-    // persisting something load() cannot reconstruct corrupts incremental runs
-    analyzer match {
-      case _: graft.operators.HistogramBinned =>
+    val codec = state match {
+      case s: NonMergeableState[_] =>
         throw new IllegalArgumentException(
-          "HistogramBinned state is not mergeable across runs (bin edges are data-dependent)")
-      case _ => ()
+          s"${s.analyzerName} computes a non-mergeable state; it cannot be persisted " +
+            "for a later merge")
+      case _ =>
+        byClass.getOrElse(state.getClass, throw new IllegalArgumentException(
+          s"Unable to persist state of type ${state.getClass.getSimpleName}"))
     }
-    state match {
-      case graft.sketch.KLLState(sketch) =>
-        val bytes = sketch.serialize()
-        withOutput(s"$base.bin") { o => o.writeInt(bytes.length); o.write(bytes) }
-      case NumMatches(n) => withOutput(s"$base.bin")(_.writeLong(n))
-      case NumMatchesAndCount(n, c) =>
-        withOutput(s"$base.bin") { o => o.writeLong(n); o.writeLong(c) }
-      case MinState(v) => withOutput(s"$base.bin")(_.writeDouble(v))
-      case MaxState(v) => withOutput(s"$base.bin")(_.writeDouble(v))
-      case SumState(v) => withOutput(s"$base.bin")(_.writeDouble(v))
-      case MeanState(sum, c) =>
-        withOutput(s"$base.bin") { o => o.writeDouble(sum); o.writeLong(c) }
-      case MinMaxState(mn, mx) =>
-        withOutput(s"$base.bin") { o => o.writeDouble(mn); o.writeDouble(mx) }
-      case SumPairState(a, b) =>
-        withOutput(s"$base.bin") { o => o.writeDouble(a); o.writeDouble(b) }
-      case MomentsState(n, mean, m2, m3, m4) =>
-        withOutput(s"$base.bin") { o =>
-          o.writeDouble(n); o.writeDouble(mean); o.writeDouble(m2)
-          o.writeDouble(m3); o.writeDouble(m4)
-        }
-      case CorrelationState(n, xa, ya, ck, xm, ym) =>
-        withOutput(s"$base.bin") { o =>
-          o.writeDouble(n); o.writeDouble(xa); o.writeDouble(ya)
-          o.writeDouble(ck); o.writeDouble(xm); o.writeDouble(ym)
-        }
-      case HllState(bytes) =>
-        withOutput(s"$base.bin") { o => o.writeInt(bytes.length); o.write(bytes) }
-      case graft.operators.ThetaOverlapState(a, b) =>
-        withOutput(s"$base.bin") { o =>
-          o.writeInt(a.length); o.write(a)
-          o.writeInt(b.length); o.write(b)
-        }
-      case graft.operators.FreqItemsState(counters, n) =>
-        withOutput(s"$base.bin") { o => writeFreqCounters(o, counters, n) }
-      case graft.operators.FreqDriftState(a, b) =>
-        withOutput(s"$base.bin") { o =>
-          Seq(a, b).foreach(s => writeFreqCounters(o, s.counters, s.n))
-        }
-      case graft.operators.QuantileShiftState(a, b) =>
-        withOutput(s"$base.bin") { o =>
-          Seq(a, b).foreach { s =>
-            val bytes = s.sketch.serialize()
-            o.writeInt(bytes.length); o.write(bytes)
-          }
-        }
-      case graft.operators.DistinctRatioState(a, b) =>
-        withOutput(s"$base.bin") { o =>
-          Seq(a, b).foreach { s =>
-            o.writeInt(s.sketchBytes.length); o.write(s.sketchBytes)
-          }
-        }
-      case DataTypeState(a, b, c, d, e) =>
-        withOutput(s"$base.bin") { o =>
-          o.writeLong(a); o.writeLong(b); o.writeLong(c); o.writeLong(d); o.writeLong(e)
-        }
-      case f: FrequenciesAndNumRows =>
-        val runs = storeRuns(f)
-        withOutput(s"$base.bin") { o =>
-          FrequencyRuns.writeManifest(o, manifestDir, f.frequencies.schema, f.numRows,
-            f.sums.get(analyzer.asInstanceOf[AnyAnalyzer]), runs)
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"Unable to persist state of type ${other.getClass.getSimpleName}")
-    }
+    // encoded whole before the file is opened: a failing write (a run of a
+    // frequency state) leaves the previous file as it was
+    val bytes = new ByteArrayOutputStream
+    val out = new StateOut(bytes, this, analyzer.asInstanceOf[AnyAnalyzer])
+    out.writeInt(Magic)
+    out.writeByte(codec.tag)
+    codec.asInstanceOf[Codec[S]].write(out, state)
+    out.flush()
+    val p = path(analyzer)
+    val file = p.getFileSystem(conf).create(p, true)
+    try bytes.writeTo(file) finally file.close()
   }
 
   override def load[S <: State[_]](analyzer: Analyzer[S, _]): Option[S] = {
-    if (lambdaKeyed(analyzer)) return None // never persisted; compute fresh
-    val base = s"$locationPrefix-${identifier(analyzer)}"
-    import graft.operators._
-    val loaded: Option[Any] = analyzer match {
-      case _: Size => withInput(s"$base.bin")(i => NumMatches(i.readLong()))
-      case _: ZerosCount => withInput(s"$base.bin")(i => NumMatches(i.readLong()))
-      // dataset-level analyzers: persist-side matches on the STATE type,
-      // so these wrote fine but silently failed to load — the corrupted
-      // incremental run the persist-side guards exist to prevent
-      case _: ColumnCount | _: ColumnExists =>
-        withInput(s"$base.bin")(i => NumMatches(i.readLong()))
-      case _: CustomSql => withInput(s"$base.bin")(i => SumState(i.readDouble()))
-      case _: Completeness | _: Compliance | _: PatternMatch =>
-        withInput(s"$base.bin")(i => NumMatchesAndCount(i.readLong(), i.readLong()))
-      case _: Minimum | _: MinLength => withInput(s"$base.bin")(i => MinState(i.readDouble()))
-      case _: Maximum | _: MaxLength => withInput(s"$base.bin")(i => MaxState(i.readDouble()))
-      case _: Sum => withInput(s"$base.bin")(i => SumState(i.readDouble()))
-      case _: Mean => withInput(s"$base.bin")(i => MeanState(i.readDouble(), i.readLong()))
-      case _: ValueRange =>
-        withInput(s"$base.bin")(i => MinMaxState(i.readDouble(), i.readDouble()))
-      case _: RatioOfSums =>
-        withInput(s"$base.bin")(i => SumPairState(i.readDouble(), i.readDouble()))
-      case _: StandardDeviation | _: Variance | _: Skewness | _: Kurtosis =>
-        withInput(s"$base.bin")(i => MomentsState(
-          i.readDouble(), i.readDouble(), i.readDouble(), i.readDouble(), i.readDouble()))
-      case _: Correlation =>
-        withInput(s"$base.bin")(i => CorrelationState(
-          i.readDouble(), i.readDouble(), i.readDouble(),
-          i.readDouble(), i.readDouble(), i.readDouble()))
-      case _: ApproxCountDistinct | _: graft.operators.ApproxCountDistinctFromState =>
-        withInput(s"$base.bin") { i =>
-          val len = i.readInt(); val bytes = new Array[Byte](len); i.readFully(bytes)
-          HllState(bytes)
-        }
-      case _: graft.operators.SnapshotOverlap =>
-        withInput(s"$base.bin") { i =>
-          val la = i.readInt(); val a = new Array[Byte](la); i.readFully(a)
-          val lb = i.readInt(); val b = new Array[Byte](lb); i.readFully(b)
-          graft.operators.ThetaOverlapState(a, b)
-        }
-      case _: graft.operators.ApproxItemFrequencyFromState =>
-        withInput(s"$base.bin")(readFreqState)
-      case _: graft.operators.ItemFrequencyDrift =>
-        withInput(s"$base.bin") { i =>
-          graft.operators.FreqDriftState(readFreqState(i), readFreqState(i))
-        }
-      case _: graft.operators.QuantileShift =>
-        withInput(s"$base.bin") { i =>
-          def one() = {
-            val len = i.readInt(); val bytes = new Array[Byte](len)
-            i.readFully(bytes)
-            graft.sketch.KLLState(graft.sketch.KLLSketch.deserialize(bytes))
-          }
-          graft.operators.QuantileShiftState(one(), one())
-        }
-      case _: graft.operators.DistinctCountRatio =>
-        withInput(s"$base.bin") { i =>
-          def one() = {
-            val len = i.readInt(); val bytes = new Array[Byte](len)
-            i.readFully(bytes)
-            HllState(bytes)
-          }
-          graft.operators.DistinctRatioState(one(), one())
-        }
-      case _: DataTypeAnalyzer =>
-        withInput(s"$base.bin")(i => DataTypeState(
-          i.readLong(), i.readLong(), i.readLong(), i.readLong(), i.readLong()))
-      case _: graft.sketch.KLLSketchAnalyzer | _: ApproxQuantile
-          | _: ApproxQuantiles | _: graft.operators.ApproxQuantileFromState =>
-        withInput(s"$base.bin") { i =>
-          val len = i.readInt(); val bytes = new Array[Byte](len); i.readFully(bytes)
-          graft.sketch.KLLState(graft.sketch.KLLSketch.deserialize(bytes))
-        }
-      case _: DatasetMatchAnalyzer =>
-        withInput(s"$base.bin")(i => NumMatchesAndCount(i.readLong(), i.readLong()))
-      case _: GroupingAnalyzer[_] | _: Histogram =>
-        withInput(s"$base.bin")(FrequencyRuns.readManifest(manifestDir)).map { m =>
-          m.runs.find(r => !new Path(r.path).getFileSystem(conf).exists(new Path(r.path)))
-            .foreach { r =>
-              throw new IllegalStateException(
-                s"The frequency state of $analyzer at $locationPrefix lists the run " +
-                  s"${r.path}, which does not exist; a location needs the runs of the " +
-                  "earlier locations it was built from until a compaction")
-            }
-          FrequenciesAndNumRows(FrequencyRuns.read(spark, m.schema, m.runs), m.numRows,
-            m.runs, None, m.sums.map(analyzer.asInstanceOf[AnyAnalyzer] -> _).toMap)
-        }
-      case _ => None
-    }
-    loaded.map(_.asInstanceOf[S])
+    if (!stableIdentity(analyzer)) return None // never persisted; compute fresh
+    val p = path(analyzer)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) return None
+    val in = new StateIn(fs.open(p), this, analyzer.asInstanceOf[AnyAnalyzer])
+    try {
+      if (in.readInt() != Magic) {
+        throw new IllegalStateException(s"$p is not a state file (no header)")
+      }
+      val tag = in.readUnsignedByte()
+      val codec = byTag.getOrElse(tag,
+        throw new IllegalStateException(s"$p holds a state of unknown type tag $tag"))
+      Some(codec.read(in).asInstanceOf[S])
+    } catch {
+      case e: IOException => throw new IllegalStateException(s"cannot read the state file $p", e)
+    } finally in.close()
   }
 }
 
-/** The frequency-state codec of [[HdfsStateProvider]]: run files and the
-  * per-analyzer manifest that lists them.
-  */
-private[graft] object FrequencyRuns {
+object HdfsStateProvider {
 
-  /** Runs a state may inherit before its next persist compacts them into
-    * one. Measured with 15,000-row days on local[4] and a local
-    * filesystem (40 appends, no compaction): loading a state took 15-45 ms
-    * up to 32 runs and 170-310 ms from 33 on, where Spark lists the paths
-    * in a job instead of on the driver; appends stayed flat (0.4-0.45 s
-    * with pruned runs, 0.55-0.9 s with every run read); compacting the
-    * whole table took 0.2-0.9 s, growing with history. 16 keeps the load
-    * on the driver even for a merge of two states (32 paths) and spreads
-    * each compaction over 16 appends.
+  private val Magic = 0x47524654 // "GRFT"
+
+  /** Whether `analyzer` renders the same in every run, so that its file
+    * name (a hash of that rendering) finds its state again and no other
+    * analyzer's. A function renders with a per-JVM name
+    * (`Foo$$Lambda$123@1a2b3c`); a DataFrame renders only its first
+    * columns (`[id: bigint, x: bigint ... 1 more field]`).
     */
-  private[graft] val MaxInheritedRuns = 16
-
-  case class Manifest(schema: StructType, numRows: Long, sums: Option[Seq[Any]],
-      runs: Seq[FrequencyRun])
-
-  /** The table the runs hold together, read with the manifest's schema
-    * (no schema inference, so no job).
-    */
-  def read(spark: SparkSession, schema: StructType, runs: Seq[FrequencyRun]): DataFrame =
-    if (runs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else {
-      val rows = spark.read.schema(schema).parquet(runs.map(_.path): _*)
-      if (runs.size == 1) rows else FrequenciesAndNumRows.sumByKey(rows)
-    }
-
-  /** Writes `table` as one run at `path`; its key count and key range are
-    * observed by the write itself.
-    */
-  def write(table: DataFrame, path: String): FrequencyRun = {
-    val keys = FrequenciesAndNumRows.keyColumns(table)
-    val range = KeyRange.aggregates(table.schema)
-    val stats = (count(lit(1)) +: range.getOrElse(Nil)).zipWithIndex
-      .map { case (c, i) => c.as(s"graft_stat$i") }
-    val observed = new Observation()
-    table.observe(observed, stats.head, stats.tail: _*)
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.parquet(path)
-    val values = observed.get
-    val row = Row.fromSeq(stats.indices.map(i => values(s"graft_stat$i")))
-    FrequencyRun(path, row.getLong(0), range.map(_ => KeyRange.fromRow(row, 1)))
+  private def stableIdentity(analyzer: Analyzer[_, _]): Boolean = {
+    val raw = analyzer.toString
+    !raw.contains("$$Lambda") && !raw.contains("$anonfun$") && (analyzer match {
+      case p: Product => !p.productIterator.exists(_.isInstanceOf[Dataset[_]])
+      case _ => true
+    })
   }
 
-  private def writeString(o: DataOutputStream, v: String): Unit = {
-    val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  /** A state file being written or read, with the provider and the
+    * analyzer it belongs to (the frequency manifest needs both).
+    */
+  private final class StateOut(out: OutputStream, val provider: HdfsStateProvider,
+      val analyzer: AnyAnalyzer) extends DataOutputStream(out)
+
+  private final class StateIn(in: InputStream, val provider: HdfsStateProvider,
+      val analyzer: AnyAnalyzer) extends DataInputStream(in)
+
+  /** One state type's stored form: its tag byte and its body. */
+  private final class Codec[S <: State[_]](val tag: Int, val write: (StateOut, S) => Unit,
+      val read: StateIn => S)(implicit val cls: ClassTag[S])
+
+  private def codec[S <: State[_]: ClassTag](tag: Int)(write: (StateOut, S) => Unit)(
+      read: StateIn => S): Codec[S] = new Codec(tag, write, read)
+
+  // every variable-length value is an Int length and that many bytes (not
+  // writeUTF, which caps a string at 65535 UTF-8 bytes: a long token or URL
+  // counter key would fail the persist)
+  private def writeBytes(o: DataOutputStream, b: Array[Byte]): Unit = {
     o.writeInt(b.length); o.write(b)
   }
 
-  private def readString(i: DataInputStream): String = {
-    val b = new Array[Byte](i.readInt()); i.readFully(b)
-    new String(b, java.nio.charset.StandardCharsets.UTF_8)
+  private def readBytes(i: DataInputStream): Array[Byte] = {
+    val b = new Array[Byte](i.readInt()); i.readFully(b); b
   }
 
-  // slot values and key bounds: a tag byte, then the value
+  private def writeString(o: DataOutputStream, v: String): Unit = writeBytes(o, v.getBytes(UTF_8))
+
+  private def readString(i: DataInputStream): String = new String(readBytes(i), UTF_8)
+
+  private val hll = codec[HllState](11)((o, s) => writeBytes(o, s.sketchBytes))(i =>
+    HllState(readBytes(i)))
+
+  private val kll = codec[KLLState](12)((o, s) => writeBytes(o, s.sketch.serialize()))(i =>
+    KLLState(KLLSketch.deserialize(readBytes(i))))
+
+  private val freqItems = codec[FreqItemsState](14) { (o, s) =>
+    o.writeInt(s.counters.size)
+    s.counters.foreach { case (k, v) => writeString(o, k); o.writeLong(v) }
+    o.writeLong(s.n)
+  } { i =>
+    val counters = Seq.fill(i.readInt())(readString(i) -> i.readLong()).toMap
+    FreqItemsState(counters, i.readLong())
+  }
+
+  private val codecs: Seq[Codec[_ <: State[_]]] = Seq(
+    codec[NumMatches](1)((o, s) => o.writeLong(s.numMatches))(i => NumMatches(i.readLong())),
+    codec[NumMatchesAndCount](2) { (o, s) => o.writeLong(s.numMatches); o.writeLong(s.count) }(
+      i => NumMatchesAndCount(i.readLong(), i.readLong())),
+    codec[MinState](3)((o, s) => o.writeDouble(s.minValue))(i => MinState(i.readDouble())),
+    codec[MaxState](4)((o, s) => o.writeDouble(s.maxValue))(i => MaxState(i.readDouble())),
+    codec[SumState](5)((o, s) => o.writeDouble(s.sum))(i => SumState(i.readDouble())),
+    codec[MeanState](6) { (o, s) => o.writeDouble(s.sum); o.writeLong(s.count) }(
+      i => MeanState(i.readDouble(), i.readLong())),
+    codec[MinMaxState](7) { (o, s) => o.writeDouble(s.minValue); o.writeDouble(s.maxValue) }(
+      i => MinMaxState(i.readDouble(), i.readDouble())),
+    codec[SumPairState](8) { (o, s) => o.writeDouble(s.numerator); o.writeDouble(s.denominator) }(
+      i => SumPairState(i.readDouble(), i.readDouble())),
+    codec[MomentsState](9)((o, s) => Seq(s.n, s.mean, s.m2, s.m3, s.m4).foreach(o.writeDouble))(
+      i => MomentsState(i.readDouble(), i.readDouble(), i.readDouble(), i.readDouble(),
+        i.readDouble())),
+    codec[CorrelationState](10)((o, s) =>
+      Seq(s.n, s.xAvg, s.yAvg, s.ck, s.xMk, s.yMk).foreach(o.writeDouble))(
+      i => CorrelationState(i.readDouble(), i.readDouble(), i.readDouble(), i.readDouble(),
+        i.readDouble(), i.readDouble())),
+    hll,
+    kll,
+    codec[ThetaOverlapState](13) { (o, s) => writeBytes(o, s.aBytes); writeBytes(o, s.bBytes) }(
+      i => ThetaOverlapState(readBytes(i), readBytes(i))),
+    freqItems,
+    codec[FreqDriftState](15) { (o, s) => freqItems.write(o, s.a); freqItems.write(o, s.b) }(
+      i => FreqDriftState(freqItems.read(i), freqItems.read(i))),
+    codec[QuantileShiftState](16) { (o, s) => kll.write(o, s.a); kll.write(o, s.b) }(
+      i => QuantileShiftState(kll.read(i), kll.read(i))),
+    codec[DistinctRatioState](17) { (o, s) => hll.write(o, s.a); hll.write(o, s.b) }(
+      i => DistinctRatioState(hll.read(i), hll.read(i))),
+    codec[DataTypeState](18)((o, s) => Seq(s.numNull, s.numBoolean, s.numIntegral,
+      s.numFractional, s.numString).foreach(o.writeLong))(
+      i => DataTypeState(i.readLong(), i.readLong(), i.readLong(), i.readLong(), i.readLong())),
+    codec[FrequenciesAndNumRows](19)(writeManifest)(readManifest),
+    codec[ManifestParityState](20) { (o, s) => o.writeLong(s.matched); o.writeLong(s.total) }(
+      i => ManifestParityState(i.readLong(), i.readLong())),
+    codec[CellPopDriftState](21) { (o, s) =>
+      o.writeInt(s.counts.size)
+      s.counts.foreach { case (c, (a, b)) => o.writeInt(c); o.writeLong(a); o.writeLong(b) }
+    } { i =>
+      CellPopDriftState(Seq.fill(i.readInt())(i.readInt() -> ((i.readLong(), i.readLong()))).toMap)
+    })
+
+  private val byClass: Map[Class[_], Codec[_ <: State[_]]] =
+    codecs.map(c => c.cls.runtimeClass -> c).toMap
+  private val byTag: Map[Int, Codec[_ <: State[_]]] = codecs.map(c => c.tag -> c).toMap
+  require(byTag.size == codecs.size && byClass.size == codecs.size,
+    "every state type needs one codec with its own tag")
+
+  // manifest slot values and key bounds: a tag byte, then the value
   private def writeValue(o: DataOutputStream, v: Any): Unit = v match {
     case null => o.writeByte(0)
     case x: Long => o.writeByte(1); o.writeLong(x)
@@ -431,15 +334,19 @@ private[graft] object FrequencyRuns {
       }
   }
 
-  def writeManifest(o: DataOutputStream, dir: Option[Path], schema: StructType, numRows: Long,
-      sums: Option[Seq[Any]], runs: Seq[FrequencyRun]): Unit = {
-    writeString(o, schema.json)
-    o.writeLong(numRows)
+  /** A frequency state's body: its manifest. Writing it stores the runs
+    * the state does not have yet.
+    */
+  private def writeManifest(o: StateOut, f: FrequenciesAndNumRows): Unit = {
+    val runs = o.provider.storeRuns(f)
+    val sums = f.sums.get(o.analyzer)
+    writeString(o, f.frequencies.schema.json)
+    o.writeLong(f.numRows)
     o.writeInt(sums.fold(-1)(_.size))
     sums.foreach(_.foreach(writeValue(o, _)))
     o.writeInt(runs.size)
     runs.foreach { r =>
-      writeString(o, relative(dir, r.path))
+      writeString(o, relative(o.provider.manifestDir, r.path))
       o.writeLong(r.rows)
       o.writeBoolean(r.range.nonEmpty)
       r.range.foreach { k =>
@@ -448,20 +355,74 @@ private[graft] object FrequencyRuns {
     }
   }
 
-  def readManifest(dir: Option[Path])(i: DataInputStream): Manifest = {
+  private def readManifest(i: StateIn): FrequenciesAndNumRows = {
+    val p = i.provider
     val schema = DataType.fromJson(readString(i)).asInstanceOf[StructType]
     val numRows = i.readLong()
     val slots = i.readInt()
     val sums = if (slots < 0) None else Some(Seq.fill(slots)(readValue(i)))
     val runs = Seq.fill(i.readInt()) {
       val stored = readString(i)
-      val path = dir.fold(stored)(d => new Path(d, stored).toString)
+      val path = p.manifestDir.fold(stored)(d => new Path(d, stored).toString)
       val rows = i.readLong()
       val range =
         if (i.readBoolean()) Some(KeyRange(readValue(i), readValue(i), i.readBoolean()))
         else None
       FrequencyRun(path, rows, range)
     }
-    Manifest(schema, numRows, sums, runs)
+    runs.find(r => !new Path(r.path).getFileSystem(p.conf).exists(new Path(r.path)))
+      .foreach { r =>
+        throw new IllegalStateException(
+          s"The frequency state of ${i.analyzer} at ${p.locationPrefix} lists the run " +
+            s"${r.path}, which does not exist; a location needs the runs of the " +
+            "earlier locations it was built from until a compaction")
+      }
+    FrequenciesAndNumRows(FrequencyRuns.read(p.spark, schema, runs), numRows, runs, None,
+      sums.map(i.analyzer -> _).toMap)
+  }
+}
+
+/** The run format of frequency states: each run is a parquet directory of
+  * distinct keys with their counts (see [[HdfsStateProvider]]).
+  */
+private[graft] object FrequencyRuns {
+
+  /** Runs a state may inherit before its next persist compacts them into
+    * one. Measured with 15,000-row days on local[4] and a local
+    * filesystem (40 appends, no compaction): loading a state took 15-45 ms
+    * up to 32 runs and 170-310 ms from 33 on, where Spark lists the paths
+    * in a job instead of on the driver; appends stayed flat (0.4-0.45 s
+    * with pruned runs, 0.55-0.9 s with every run read); compacting the
+    * whole table took 0.2-0.9 s, growing with history. 16 keeps the load
+    * on the driver even for a merge of two states (32 paths) and spreads
+    * each compaction over 16 appends.
+    */
+  private[graft] val MaxInheritedRuns = 16
+
+  /** The table the runs hold together, read with the manifest's schema
+    * (no schema inference, so no job).
+    */
+  def read(spark: SparkSession, schema: StructType, runs: Seq[FrequencyRun]): DataFrame =
+    if (runs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else {
+      val rows = spark.read.schema(schema).parquet(runs.map(_.path): _*)
+      if (runs.size == 1) rows else FrequenciesAndNumRows.sumByKey(rows)
+    }
+
+  /** Writes `table` as one run at `path`; its key count and key range are
+    * observed by the write itself.
+    */
+  def write(table: DataFrame, path: String): FrequencyRun = {
+    val keys = FrequenciesAndNumRows.keyColumns(table)
+    val range = KeyRange.aggregates(table.schema)
+    val stats = (count(lit(1)) +: range.getOrElse(Nil)).zipWithIndex
+      .map { case (c, i) => c.as(s"graft_stat$i") }
+    val observed = new Observation()
+    table.observe(observed, stats.head, stats.tail: _*)
+      .sortWithinPartitions(keys.map(col): _*)
+      .write.parquet(path)
+    val values = observed.get
+    val row = Row.fromSeq(stats.indices.map(i => values(s"graft_stat$i")))
+    FrequencyRun(path, row.getLong(0), range.map(_ => KeyRange.fromRow(row, 1)))
   }
 }

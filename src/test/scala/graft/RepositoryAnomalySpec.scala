@@ -335,8 +335,8 @@ class RepositoryAnomalySpec extends AnyWordSpec with Matchers with SparkSpec {
       df.createOrReplaceTempView("graft_prov_v")
       val tmp = java.nio.file.Files.createTempDirectory("graft-states2").toString
       val provider = new HdfsStateProvider(spark, s"$tmp/state")
-      // these persisted fine (state-type match) but silently failed to
-      // LOAD before the analyzer-side cases were added
+      // dataset-level analyzers: a state must load back whichever analyzer
+      // class wrote it
       val analyzers: Seq[AnyAnalyzer] = Seq(
         ColumnCount(), ColumnExists("l_quantity"),
         CustomSql("SELECT sum(l_quantity) FROM graft_prov_v"))
