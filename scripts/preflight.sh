@@ -32,9 +32,12 @@ cd "$(dirname "$0")/.."
 # stored-state format (delta appends, runs, one tagged codec per state
 # type, job counts): a state-format change breaks them, not ManifestSpec. DomainsSpec and CurationSpec pin URL canonicalization
 # and the curation chain, including its 32 KiB plan-description bound.
-echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, StateCodecSpec, FusionJobCountSpec, DomainsSpec, CurationSpec..."
+# ClassifySpec and LangIdSpec pin the NB model bit for bit against a
+# driver-side reference and its training cost (jobs, no cached relation
+# in any plan, nothing pinned after release).
+echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, StateCodecSpec, FusionJobCountSpec, DomainsSpec, CurationSpec, ClassifySpec, LangIdSpec..."
 sbt -batch "Test/compile" \
-  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.StateCodecSpec graft.FusionJobCountSpec graft.DomainsSpec graft.CurationSpec"
+  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.StateCodecSpec graft.FusionJobCountSpec graft.DomainsSpec graft.CurationSpec graft.ClassifySpec graft.LangIdSpec"
 
 echo "[preflight] perfbench smoke run..."
 python3 perfbench/run.py --smoke

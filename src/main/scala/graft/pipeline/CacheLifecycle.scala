@@ -3,7 +3,7 @@ package graft.pipeline
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -77,12 +77,22 @@ object CacheLifecycle {
     */
   def releaseTruncated(df: DataFrame): Unit = {
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ => df.unpersist(blocking = false)
     }
     ()
   }
+
+  /** Release every [[truncate]] cut that `df` reads: for a frame derived
+    * lazily from cuts (a projection over one reads its blocks but is not
+    * itself the cut, so [[releaseTruncated]] does not reach them).
+    * Frames that read those cuts are unusable afterwards.
+    */
+  def releaseCutsUnder(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Actions (with or without the tag) after which an unconsumed result's
     * caches are released anyway — a safety valve for results that are

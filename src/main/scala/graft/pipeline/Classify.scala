@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -43,13 +43,13 @@ object Classify {
       classLogPrior: DataFrame,
       vocabSize: Long,
       alpha: Double) {
-    /** `termLogProb` is cut by [[modelFromCounts]] with
-      * [[CacheLifecycle.truncate]] (it is consumed by every scoring
-      * pass); call this when done with the model. The model is unusable
-      * afterwards: its blocks cannot be recomputed, so scoring with a
+    /** Frees every [[CacheLifecycle.truncate]] cut `termLogProb` reads
+      * (for a [[modelFromCounts]] model: the pivoted counts it derives
+      * from); call this when done with the model. The model is unusable
+      * afterwards: those blocks cannot be recomputed, so scoring with a
       * released model fails.
       */
-    def release(): Unit = CacheLifecycle.releaseTruncated(termLogProb)
+    def release(): Unit = CacheLifecycle.releaseCutsUnder(termLogProb)
   }
 
   /** The model's sufficient statistics — plain integer counts, so the
@@ -138,60 +138,51 @@ object Classify {
   /** Derive the smoothed model from a count state: `log P(term|class)` =
     * `ln((count + alpha) / (class_tokens + alpha·V))` with V = the
     * vocabulary across ALL classes; `log P(class)` = `ln(docs_c /
-    * total_docs)`. The (vocab × classes) densification is a crossJoin of
-    * two seed-bounded frames — deliberate and documented, never
-    * corpus-sized.
+    * total_docs)`.
+    *
+    * Two actions, each reading its input once: a collect of the C class
+    * rows of `classDocs` (labels, doc counts, the total), then ONE lineage
+    * cut ([[CacheLifecycle.truncate]]) of the counts pivoted to one row
+    * per term with one count column per label. V and the per-class token
+    * totals are observed while that cut materializes, so `termLogProb`
+    * derives from the cut's leaf as a projection and `classLogPrior` is a
+    * local relation: no later plan re-reads the counts or the seed.
+    * The table stays dense — every vocabulary term × every class, a
+    * class whose seed docs carry no token included (it gets the floor
+    * `alpha/(alpha·V)` on every term).
     */
   def modelFromCounts(state: NbCountState, alpha: Double = 1.0): NbModel = {
     require(alpha > 0, s"alpha must be positive, got $alpha")
-    val counts = state.termCounts
-      .select(col("term"), col("label"), col("cnt").as("graft_c"))
-      .persist()
-    val vocab = counts.select(col("term")).distinct()
-    // This count is deliberately an EAGER action, not an in-plan fold:
-    // it materializes the counts cache ONCE before the dense-table build
-    // references it from three branches (vocab, the count join, the
-    // class totals) — an r13 experiment folding V into the plan as a
-    // broadcast 1-row aggregate made those branches race to compute the
-    // unmaterialized cache (duplicate seed tokenizes inside the
-    // broadcast collects; q96 +3.5 s at sf0.1)
-    val v = vocab.count()
-    val classTotals = counts.groupBy(col("label"))
-      .agg(sum(col("graft_c")).as("graft_tot"))
-    val labels = state.classDocs
-      .select(col("label"), col("docs").as("graft_docs"))
-    val total = labels.agg(coalesce(sum(col("graft_docs")), lit(0L)))
-      .collect().head.getLong(0)
+    val classDocs = state.classDocs
+      .select(col("label"), col("docs").cast(LongType).as("graft_docs"))
+    val classRows = classDocs.collect()
+    val total = classRows.iterator.map(_.getLong(1)).sum
     // an empty seed set would otherwise flow ln(x/0) = NaN/-Inf priors
     // silently into every downstream score — fail fast like the alpha
     // guard above
     require(total > 0,
       "modelFromCounts needs a non-empty training state (total seed docs = 0)")
-    // classTotals joins left_outer with a zero default: a class whose
-    // seed docs carry no tokens (all empty/null text) still gets the
-    // full smoothed floor alpha/(0 + alpha·V) on EVERY vocab term —
-    // an inner join would silently drop its rows from the dense table
-    // and let the degenerate class win any non-trivial doc on priors
-    // alone with no per-term penalty. Build sides are seed-bounded by
-    // construction — broadcast-hinted explicitly so the plan never
-    // depends on cache-stats timing.
-    // truncate, not persist: every scoring pass embeds this frame (via
-    // broadcast) in its plan, and the dense table's lineage re-inlines
-    // the whole seed tokenize tree at each reference — the checkpoint
-    // materializes once (before the counts cache drops, as the persist+
-    // count did) and hands consumers a leaf-sized plan
-    val termLogProb = CacheLifecycle.truncate(vocab
-      .crossJoin(labels.select(col("label")))
-      .join(broadcast(counts), Seq("term", "label"), "left_outer")
-      .join(broadcast(classTotals), Seq("label"), "left_outer")
-      .select(
-        col("term"), col("label"),
-        log((coalesce(col("graft_c"), lit(0L)) + lit(alpha)) /
-          (coalesce(col("graft_tot"), lit(0L)) +
-            lit(alpha) * lit(v.toDouble)))
-          .as("log_cond")))
-    counts.unpersist(blocking = false)
-    val classLogPrior = labels
+    val labels = classRows.map(_.get(0)).toIndexedSeq
+    val cntCols = labels.indices.map(i => s"graft_c$i")
+    val counted = Observation()
+    val perLabel = labels.zip(cntCols).map { case (l, c) =>
+      sum(when(col("label") === lit(l), col("cnt"))).as(c) }
+    val wide = CacheLifecycle.truncate(state.termCounts
+      .groupBy(col("term"))
+      .agg(perLabel.head, perLabel.tail: _*)
+      .observe(counted, count(lit(1)).as("graft_v"),
+        cntCols.map(c => coalesce(sum(col(c)), lit(0L)).as(c)): _*))
+    val stats = counted.get
+    val v = stats("graft_v").asInstanceOf[Long]
+    val termLogProb = wide.select(col("term"), inline(array(
+      labels.zip(cntCols).map { case (l, c) =>
+        struct(lit(l).as("label"),
+          log((coalesce(col(c), lit(0L)) + lit(alpha)) /
+            (lit(stats(c).asInstanceOf[Long]) + lit(alpha) * lit(v.toDouble)))
+            .as("log_cond"))
+      }: _*)))
+    val classLogPrior = classDocs.sparkSession
+      .createDataFrame(java.util.Arrays.asList(classRows: _*), classDocs.schema)
       .select(col("label"),
         log(col("graft_docs").cast(DoubleType) / lit(total.toDouble))
           .as("log_prior"))

@@ -52,7 +52,8 @@ object Curation {
 
   /** Naive-Bayes quality gate: train on `seedPredicate` rows labeled by
     * `labelExpr` (a string expression over the frame), keep documents
-    * scored `keepLabel`. Training and scoring share the one tf frame.
+    * scored `keepLabel`. The seed is cut once as (id, label), never with
+    * its text; training and scoring share the one tf frame.
     */
   final case class QualityClassifier(
       labelExpr: Column,
@@ -93,14 +94,13 @@ object Curation {
 
   /** `docs`: the lazy surviving frame (consume, then `release()`).
     * `censuses`: ordered (stage_name, value) rows — doc counts per
-    * stage plus stage-specific extras (boilerplate removed lines).
-    */
-  /** `censuses` resolves LAZILY from named observations riding the
-    * stage frames (the q96 action-fusion discipline: a census never
-    * adds a job — it fires inside whatever job first materializes its
-    * stage). Read it AFTER consuming `docs` (or any full action over
-    * the result); reading earlier blocks until the pipeline's frames
-    * have materialized once.
+    * stage plus stage-specific extras (boilerplate removed lines). It
+    * resolves LAZILY from named observations riding the stage frames
+    * (the q96 action-fusion discipline: a census never adds a job — it
+    * fires inside whatever job first materializes its stage). Read it
+    * AFTER consuming `docs` (or any full action over the result);
+    * reading earlier blocks until the pipeline's frames have
+    * materialized once.
     */
   final class Result private[Curation] (
       val docs: DataFrame,
@@ -239,18 +239,15 @@ object Curation {
 
       case QualityClassifier(labelExpr, seedPred, keepLabel, alpha) =>
         val all = sharedTf()
-        // slim persisted seed set: the featurizer's semi-join build side
-        // must not re-derive from the text cache per consumption
-        val seedIds = CacheLifecycle.truncate(
-          frame.where(seedPred).select(col(idCol)))
-        caches += seedIds
-        val seedTf: Classify.Featurizer =
-          (_, _, _) => all.join(seedIds, Seq(idCol), "left_semi")
+        // the one slim seed cut, (id, label): training reads it as a
+        // leaf, and countState's inner join with it restricts the shared
+        // tf to seed docs, so the featurizer hands over the tf as it is
+        val seed = CacheLifecycle.truncate(
+          frame.where(seedPred).select(col(idCol), labelExpr.as("graft_label")))
+        caches += seed
         val allTf: Classify.Featurizer = (_, _, _) => all
         val model = Classify.trainNaiveBayes(
-          frame.where(seedPred).select(col(idCol), col(textCol),
-            labelExpr.as("graft_label")),
-          idCol, textCol, "graft_label", alpha, seedTf)
+          seed, idCol, textCol, "graft_label", alpha, allTf)
         // the scoring job runs lazily inside a LATER stage's (or the
         // caller's) materialization — the model's broadcast state must
         // outlive this stage, so it releases with the Result

@@ -256,8 +256,9 @@ object LangId {
   /** Session-cached model over [[DefaultSeed]]: trained once per
     * (session, alpha) from the driver-local count state and shared by
     * every caller — the seed is a fixed constant, so the model is too.
-    * Do NOT `release()` the returned model (it is shared); a release is
-    * harmless but evicts nothing — the next call re-derives.
+    * Do NOT `release()` the returned model: it is shared, and a release
+    * frees its lineage cut for every holder (and for later calls, which
+    * return the same model), so scoring with it fails afterwards.
     */
   def defaultModel(spark: SparkSession, alpha: Double = 1.0): Classify.NbModel =
     defaultModelCache.computeIfAbsent((spark, alpha),

@@ -122,4 +122,143 @@ class ClassifySpec extends AnyWordSpec with Matchers with SparkSpec {
       viaDisk.release(); full.release()
     }
   }
+
+  "modelFromCounts" should {
+    "equal a driver-side reference built from the collected counts, bit for bit" in {
+      val s = spark
+      import s.implicits._
+      // "mute" has two seed docs and no token: empty and null text
+      val train = Seq[(Long, String, String)](
+        (1L, "good good nice", "hi"), (2L, "nice day", "hi"),
+        (3L, "bad awful bad", "lo"), (4L, "awful day day", "lo"),
+        (5L, "", "mute"), (6L, null, "mute"))
+        .toDF("doc_id", "text", "label")
+      val alpha = 0.5
+      val state = Classify.countState(train, "doc_id", "text", "label")
+      val cnt = state.termCounts.collect()
+        .map(r => (r.getAs[String]("term"), r.getAs[String]("label")) ->
+          r.getAs[Long]("cnt")).toMap
+      val docs = state.classDocs.collect()
+        .map(r => r.getAs[String]("label") -> r.getAs[Long]("docs")).toMap
+      val vocab = cnt.keySet.map(_._1)
+      val v = vocab.size.toLong
+      val tot = cnt.groupMapReduce(_._1._2)(_._2)(_ + _)
+      val total = docs.values.sum
+      // Spark's `log` is StrictMath.log; the arithmetic replays the
+      // model's expressions operation for operation
+      val expectedCond = (for (t <- vocab; l <- docs.keySet) yield
+        (t, l) -> StrictMath.log(
+          (cnt.getOrElse((t, l), 0L).toDouble + alpha) /
+            (tot.getOrElse(l, 0L).toDouble + alpha * v.toDouble))).toMap
+      val expectedPrior = docs.map { case (l, d) =>
+        l -> StrictMath.log(d.toDouble / total.toDouble) }
+
+      val m = Classify.modelFromCounts(state, alpha)
+      try {
+        val rows = m.termLogProb.collect()
+        val got = rows.map(r => (r.getAs[String]("term"),
+          r.getAs[String]("label")) -> r.getAs[Double]("log_cond")).toMap
+        m.vocabSize shouldBe v
+        v shouldBe 5L
+        rows should have length (v * docs.size) // dense: V x C, no repeats
+        got shouldBe expectedCond
+        // the token-less class still carries the smoothed floor on every
+        // vocabulary term
+        vocab.foreach(t => got((t, "mute")) shouldBe
+          StrictMath.log(alpha / (alpha * v.toDouble)))
+        m.classLogPrior.collect()
+          .map(r => r.getAs[String]("label") -> r.getAs[Double]("log_prior"))
+          .toMap shouldBe expectedPrior
+      } finally m.release()
+    }
+
+    "derive an empty table, V = 0, and the priors from a seed with no token" in {
+      val s = spark
+      import s.implicits._
+      val train = Seq[(Long, String, String)](
+        (1L, "", "hi"), (2L, null, "lo"), (3L, "  ", "lo"))
+        .toDF("doc_id", "text", "label")
+      val m = Classify.trainNaiveBayes(train, "doc_id", "text", "label")
+      try {
+        m.vocabSize shouldBe 0L
+        m.termLogProb.count() shouldBe 0L
+        m.classLogPrior.collect()
+          .map(r => r.getString(0) -> r.getDouble(1)).toMap shouldBe
+          Map("hi" -> StrictMath.log(1.0 / 3.0), "lo" -> StrictMath.log(2.0 / 3.0))
+        // every document is classified by the priors alone
+        Classify.scoreNaiveBayes(Seq((10L, "any text")).toDF("doc_id", "text"),
+          "doc_id", "text", m)
+          .select("predicted").as[String].collect() shouldBe Array("lo")
+      } finally m.release()
+    }
+
+    "train from one lineage cut: no cached relation in any plan, a bounded job count, nothing pinned after release" in {
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+      import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+      import org.apache.spark.sql.functions.{col, concat, concat_ws, lit}
+      import scala.jdk.CollectionConverters._
+      val sc = spark.sparkContext
+      val probe = "graft-nb-train-probe"
+      val drainMarker = "graft-nb-train-drain"
+      val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      // every plan text the driver renders for training — at execution
+      // start and on each adaptive re-plan — and every job it runs
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+              e.properties.getProperty("spark.job.description") == probe)
+            jobs.incrementAndGet()
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case st: SparkListenerSQLExecutionStart =>
+            if (st.description == drainMarker) drained.countDown()
+            else if (st.description == probe) {
+              execIds.add(st.executionId)
+              plans.add(st.physicalPlanDescription)
+            }
+          case u: SparkListenerSQLAdaptiveExecutionUpdate
+              if execIds.contains(u.executionId) =>
+            plans.add(u.physicalPlanDescription)
+          case _ =>
+        }
+      }
+      // a fixed corpus: 600 docs over 3 labels and 17 + 5 + 1 terms
+      val train = spark.range(600).select(col("id").as("doc_id"),
+        concat_ws(" ", concat(lit("t"), (col("id") % 17).cast("string")),
+          concat(lit("u"), (col("id") % 5).cast("string")), lit("common"))
+          .as("text"),
+        concat(lit("c"), (col("id") % 3).cast("string")).as("label"))
+      val before = sc.getPersistentRDDs.keySet
+      sc.addSparkListener(listener)
+      val model = try {
+        sc.setJobDescription(probe)
+        val m = try Classify.trainNaiveBayes(train, "doc_id", "text", "label")
+        finally sc.setJobDescription(null)
+        // listener events arrive in order: once the marker execution is
+        // seen, every training execution has been recorded
+        sc.setJobDescription(drainMarker)
+        try spark.range(1).collect() finally sc.setJobDescription(null)
+        drained.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+        m
+      } finally sc.removeSparkListener(listener)
+      try {
+        model.vocabSize shouldBe 23L
+        val got = plans.asScala.toSeq
+        got should not be empty
+        all(got) should not include "InMemoryRelation"
+        // local[4], AQE on: 6 jobs (16 when the counts were persisted
+        // and counted eagerly, with the priors re-derived from the seed)
+        jobs.get should be <= 8
+        (sc.getPersistentRDDs.keySet -- before) should not be empty
+      } finally model.release()
+      // unpersist is non-blocking: allow the block manager to catch up
+      def pinned = sc.getPersistentRDDs.keySet -- before
+      val deadline = System.currentTimeMillis() + 15000
+      while (pinned.nonEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      pinned shouldBe empty
+    }
+  }
 }
