@@ -34,10 +34,13 @@ cd "$(dirname "$0")/.."
 # and the curation chain, including its 32 KiB plan-description bound.
 # ClassifySpec and LangIdSpec pin the NB model bit for bit against a
 # driver-side reference and its training cost (jobs, no cached relation
-# in any plan, nothing pinned after release).
-echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, StateCodecSpec, FusionJobCountSpec, DomainsSpec, CurationSpec, ClassifySpec, LangIdSpec..."
+# in any plan, nothing pinned after release). RankingSpec, PackingSpec,
+# MixingSpec, PpsSampleSpec, ProfilerKllSpec and PrefixScanSpec pin the
+# prefix-offset operators (Ranking.prefixScan): exact results, and
+# results that stay the same over repeated consumptions and pin nothing.
+echo "[preflight] sbt Test/compile + ManifestSpec, StateMergeLawsSpec, StateCodecSpec, FusionJobCountSpec, DomainsSpec, CurationSpec, ClassifySpec, LangIdSpec, RankingSpec, PackingSpec, MixingSpec, PpsSampleSpec, ProfilerKllSpec, PrefixScanSpec..."
 sbt -batch "Test/compile" \
-  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.StateCodecSpec graft.FusionJobCountSpec graft.DomainsSpec graft.CurationSpec graft.ClassifySpec graft.LangIdSpec"
+  "testOnly graft.ManifestSpec graft.StateMergeLawsSpec graft.StateCodecSpec graft.FusionJobCountSpec graft.DomainsSpec graft.CurationSpec graft.ClassifySpec graft.LangIdSpec graft.RankingSpec graft.PackingSpec graft.MixingSpec graft.PpsSampleSpec graft.ProfilerKllSpec graft.PrefixScanSpec"
 
 echo "[preflight] perfbench smoke run..."
 python3 perfbench/run.py --smoke

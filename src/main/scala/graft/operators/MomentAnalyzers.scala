@@ -215,7 +215,9 @@ object ExactQuantileGuard {
   *   2. One pass collecting per-partition count sums (K longs to the
   *      driver, K = shuffle partitions) → prefix sums locate which
   *      partition owns each target rank.
-  *   3. One pass over ONLY the owning partitions, walking the sorted run
+  *   3. One pass over ONLY the owning partitions, re-reading and
+  *      re-sorting their range-shuffle output (nothing is cached; see
+  *      [[graft.pipeline.Ranking.prefixScan]]) and walking the sorted run
   *      to the local ranks — emits ≤ 2 values per requested quantile.
   *
   * No stage buffers more than one partition of distinct values; memory is
@@ -252,53 +254,45 @@ object DistributedExactQuantile {
       where: Option[String],
       qs: Seq[Double]): Option[Map[Double, Double]] = {
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0))
-    val freqDf = data
+    val freq = data
       .select(conditionalSelection(col(column), where).cast(DoubleType).as("graft_v"))
       .where(col("graft_v").isNotNull) // NaN kept: sorts last, as in `percentile`
       .groupBy("graft_v").agg(count(lit(1)).as("graft_c"))
-      .repartitionByRange(col("graft_v"))
-      .sortWithinPartitions("graft_v")
-    val freq = freqDf.rdd.map(r => (r.getDouble(0), r.getLong(1)))
-    freq.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // stage 2: K (partitionId, countSum) pairs → rank offsets
-      val partTotals = freq
-        .mapPartitionsWithIndex { (i, it) =>
-          var s = 0L; it.foreach(s += _._2); Iterator((i, s))
-        }
-        .collect().sortBy(_._1).map(_._2)
-      val n = partTotals.sum
-      if (n == 0) return None
-      val offsets = partTotals.scanLeft(0L)(_ + _) // ranks before partition i
-      val pos = qs.map(q => q * (n - 1))
-      val ranks = pos.flatMap(p => Seq(math.floor(p).toLong, math.ceil(p).toLong)).distinct
-      // partition → (rank offset, sorted local ranks to extract)
-      val ranksByPart: Map[Int, (Long, Seq[Long])] = ranks
-        .groupBy(k => ownerOf(offsets, k))
-        .map { case (p, ks) => p -> (offsets(p), ks.map(_ - offsets(p)).sorted) }
-      val bByPart = data.sparkSession.sparkContext.broadcast(ranksByPart)
+    def positions(n: Long) = qs.map(q => q * (n - 1))
+    // stage 2: K per-partition count sums → rank offsets → partition →
+    // (rank offset, sorted local ranks to extract)
+    val ((n, _), found) = graft.pipeline.Ranking.prefixScan(freq, Seq(col("graft_v")))(
+      it => it.foldLeft(0L)(_ + _.getLong(1)))(
+      partTotals => {
+        val n = partTotals.sum
+        val offsets = partTotals.scanLeft(0L)(_ + _) // ranks before partition i
+        val ranks =
+          if (n == 0) Nil
+          else positions(n).flatMap(p => Seq(math.floor(p).toLong, math.ceil(p).toLong)).distinct
+        (n, ranks.groupBy(k => ownerOf(offsets, k))
+          .map { case (p, ks) => p -> (offsets(p), ks.map(_ - offsets(p)).sorted) })
+      }) { (i, prefix, it) =>
       // stage 3: walk only owning partitions to their local ranks
-      val found: Map[Long, Double] = freq
-        .mapPartitionsWithIndex { (i, it) =>
-          bByPart.value.get(i) match {
-            case None => Iterator.empty
-            case Some((rankOffset, localRanks)) =>
-              val want = localRanks.iterator.buffered
-              val out = Seq.newBuilder[(Long, Double)]
-              var cum = 0L
-              while (want.hasNext && it.hasNext) {
-                val (v, c) = it.next()
-                cum += c
-                while (want.hasNext && want.head < cum) {
-                  out += ((rankOffset + want.next(), v)) // keyed by GLOBAL rank
-                }
-              }
-              out.result().iterator
+      prefix._2.get(i) match {
+        case None => Iterator.empty
+        case Some((rankOffset, localRanks)) =>
+          val want = localRanks.iterator.buffered
+          val out = Seq.newBuilder[(Long, Double)]
+          var cum = 0L
+          while (want.hasNext && it.hasNext) {
+            val r = it.next()
+            cum += r.getLong(1)
+            while (want.hasNext && want.head < cum) {
+              out += ((rankOffset + want.next(), r.getDouble(0))) // keyed by GLOBAL rank
+            }
           }
-        }
-        .collect().toMap
-      def valueAt(k: Long): Double = found(k)
-      Some(qs.zip(pos).map { case (q, p) =>
+          out.result().iterator
+      }
+    }
+    if (n == 0) None
+    else {
+      val valueAt: Map[Long, Double] = found.collect().toMap
+      Some(qs.zip(positions(n)).map { case (q, p) =>
         val lo = valueAt(math.floor(p).toLong)
         val hi = valueAt(math.ceil(p).toLong)
         // Mirror the built-in `percentile`'s interpolation exactly: exact
@@ -309,9 +303,6 @@ object DistributedExactQuantile {
         q -> (if (lo == hi) lo
               else (math.ceil(p) - p) * lo + (p - math.floor(p)) * hi)
       }.toMap)
-    } finally {
-      freq.unpersist(blocking = false)
-      ()
     }
   }
 }

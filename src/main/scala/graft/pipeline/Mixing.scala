@@ -29,11 +29,12 @@ import org.apache.spark.sql.types._
   *    exceeds the group's budget — the prefix the budget affords. The
   *    running sum is NOT a `Window` partitioned by group (one task per
   *    group dies when a group is most of a 100 TB corpus): like
-  *    [[graft.sketch.KLL.exactNumericalDistance]], rows range-partition on
-  *    (group, hash, id), each partition reports per-group partial token
-  *    sums (K small maps to the driver, K = shuffle partitions), and a
-  *    second pass over the cached slim projection seeds each partition's
-  *    running totals from broadcast offsets. No task ever holds more than
+  *    [[graft.sketch.Distance.exactNumericalDistance]], rows
+  *    range-partition on (group, hash, id, tokens), each partition
+  *    reports per-group partial token sums (K small maps to the driver,
+  *    K = shuffle partitions), and a second pass over the range-sorted
+  *    slim projection seeds each partition's running totals from
+  *    broadcast offsets ([[Ranking.prefixScan]]). No task ever holds more than
   *    one range partition, whatever the group skew.
   *
   * reference capability: deequ has no mixture sampling; this is part of the
@@ -303,11 +304,13 @@ object Mixing {
     * result is a pure function of (data, seed, budgets). Null text counts
     * zero tokens (kept for free if its hash rank falls inside the prefix).
     *
-    * Execution: one range exchange on (group, hash, id) over a slim
-    * 4-column projection, two passes over the cached partitions (partial
-    * sums up, offsets broadcast down), then a semi-join back to the full
-    * rows — AQE picks broadcast when the kept-id set is small, sort-merge
-    * when it is most of the corpus.
+    * Execution: one range exchange on (group, hash, id, tokens) over a
+    * slim 4-column projection — the tokens key orders rows sharing an id,
+    * so every consumption keeps the same ones — two passes over the
+    * range-sorted partitions ([[Ranking.prefixScan]]: partial sums up,
+    * offsets broadcast down), then a semi-join back to the full rows —
+    * AQE picks broadcast when the kept-id set is small, sort-merge when
+    * it is most of the corpus.
     */
   def tokenBudgetSample(
       df: DataFrame,
@@ -317,7 +320,6 @@ object Mixing {
       budgets: Map[String, Long],
       seed: String = "graft",
       tokenCount: Column => Column = tokenCountExpr): DataFrame = {
-    val spark = df.sparkSession
     val idField = df.schema(df.schema.fieldIndex(idCol))
     val slim = df
       .where(col(idCol).isNotNull &&
@@ -327,56 +329,41 @@ object Mixing {
         sampleHash(col(idCol), seed).as("graft_h"),
         col(idCol).as("graft_id"),
         tokenCount(col(textCol)).cast(LongType).as("graft_t"))
-      .repartitionByRange(col("graft_g"), col("graft_h"), col("graft_id"))
-      .sortWithinPartitions("graft_g", "graft_h", "graft_id")
-      .rdd.map(r => (r.getString(0), r.getString(1), r.get(2), r.getLong(3)))
-    slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val (_, keptIds) = Ranking.prefixScan(slim, slim.columns.toSeq.map(col))(
       // pass 1: per-partition per-group token totals — K small maps
-      val partTotals: Array[(Int, Map[String, Long])] = slim
-        .mapPartitionsWithIndex { (i, it) =>
-          val m = scala.collection.mutable.HashMap.empty[String, Long]
-          it.foreach { t => m.update(t._1, m.getOrElse(t._1, 0L) + t._4) }
-          Iterator((i, m.toMap))
+      it => {
+        val m = scala.collection.mutable.HashMap.empty[String, Long]
+        it.foreach { r =>
+          val g = r.getString(0)
+          m.update(g, m.getOrElse(g, 0L) + r.getLong(3))
         }
-        .collect().sortBy(_._1)
+        m.toMap
+      })(
       // offsets(i)(g) = tokens of group g in partitions before i; range
       // partitioning keys on group first, so each group's rows are a
       // contiguous partition run and the offsets are exact prefix sums
-      val running = scala.collection.mutable.HashMap.empty[String, Long]
-      val offsets: Array[Map[String, Long]] = partTotals.map { case (_, m) =>
-        val snap = m.keys.map(g => g -> running.getOrElse(g, 0L)).toMap
-        m.foreach { case (g, t) =>
-          running.update(g, running.getOrElse(g, 0L) + t)
+      partTotals => {
+        val running = scala.collection.mutable.HashMap.empty[String, Long]
+        partTotals.map { m =>
+          val snap = m.keys.map(g => g -> running.getOrElse(g, 0L)).toMap
+          m.foreach { case (g, t) =>
+            running.update(g, running.getOrElse(g, 0L) + t)
+          }
+          snap
         }
-        snap
+      }) { (i, offsets, it) =>
+      val cum = scala.collection.mutable.HashMap.empty[String, Long]
+      offsets(i).foreach { case (g, o) => cum.update(g, o) }
+      it.flatMap { r =>
+        val g = r.getString(0)
+        val c = cum.getOrElse(g, 0L) + r.getLong(3)
+        cum.update(g, c)
+        if (c <= budgets(g)) Iterator(Row(r.get(2))) else Iterator.empty
       }
-      val bOffsets = spark.sparkContext.broadcast(offsets)
-      val bBudgets = spark.sparkContext.broadcast(budgets)
-      val keptIds = slim.mapPartitionsWithIndex { (i, it) =>
-        val cum = scala.collection.mutable.HashMap.empty[String, Long]
-        bOffsets.value(i).foreach { case (g, o) => cum.update(g, o) }
-        val bud = bBudgets.value
-        it.flatMap { case (g, _, id, t) =>
-          val c = cum.getOrElse(g, 0L) + t
-          cum.update(g, c)
-          if (c <= bud(g)) Iterator(Row(id)) else Iterator.empty
-        }
-      }
-      // materialize the thin id set before releasing the slim cache — the
-      // returned frame is lazy, and an unpersisted `slim` would re-run the
-      // range shuffle (and re-sample its bounds) at consumption time. The
-      // id cache itself is id-width only and is reclaimed by the
-      // ContextCleaner when the returned frame goes unreachable.
-      keptIds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      keptIds.count()
-      val keptDf = spark.createDataFrame(keptIds,
-        StructType(Seq(idField.copy(name = idCol))))
-      df.join(keptDf, Seq(idCol), "left_semi")
-    } finally {
-      slim.unpersist(blocking = false)
-      ()
     }
+    val keptDf = df.sparkSession.createDataFrame(keptIds,
+      StructType(Seq(idField.copy(name = idCol))))
+    df.join(keptDf, Seq(idCol), "left_semi")
   }
 
   /** Whitespace token count matching [[Repetition]] / the oracle
@@ -456,8 +443,8 @@ object Mixing {
     * than hidden.
     *
     * Fully deterministic and integer-exact: the prefix line comes from
-    * the [[tokenBudgetSample]] partition-offset machinery (range
-    * repartition + broadcast prefix, no global window), and the per-row
+    * [[Ranking.prefixScan]] (range repartition on (id, weight) +
+    * broadcast prefix, no global window), and the per-row
     * hit count is CLOSED-FORM — #{j : probe_j < x} inverts to one integer
     * division, so no probe set is ever materialized or joined. One
     * shuffle (the range partition), then pure map-side arithmetic.
@@ -471,58 +458,42 @@ object Mixing {
       weightCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = df.sparkSession
     val idField = df.schema(df.schema.fieldIndex(idCol))
     val slim = df
       .where(col(idCol).isNotNull)
       .select(col(idCol).as("graft_id"),
         coalesce(col(weightCol).cast(LongType), lit(0L)).as("graft_w"))
-      .repartitionByRange(col("graft_id"))
-      .sortWithinPartitions("graft_id")
-      .rdd.map(r => (r.get(0), r.getLong(1)))
-    slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val partTotals: Array[(Int, Long)] = slim
-        .mapPartitionsWithIndex { (i, it) =>
-          Iterator((i, it.foldLeft(0L)(_ + _._2)))
-        }
-        .collect().sortBy(_._1)
-      val offsets = partTotals.map(_._2).scanLeft(0L)(_ + _)
+    val (_, rows) = Ranking.prefixScan(slim, Seq(col("graft_id"), col("graft_w")))(
+      it => it.foldLeft(0L)(_ + _.getLong(1)))(
+      partTotals => {
+        val offsets = partTotals.scanLeft(0L)(_ + _)
+        val totalW = offsets.last
+        require(totalW > 0, "ppsSystematicSample needs positive total weight")
+        require(totalW <= Long.MaxValue / (2L * k),
+          s"2*k*W overflows a long (W=$totalW, k=$k)")
+        offsets
+      }) { (i, offsets, it) =>
       val totalW = offsets.last
-      require(totalW > 0, "ppsSystematicSample needs positive total weight")
-      require(totalW <= Long.MaxValue / (2L * k),
-        s"2*k*W overflows a long (W=$totalW, k=$k)")
-      val bOffsets = spark.sparkContext.broadcast(offsets)
-      val rows = slim.mapPartitionsWithIndex { (i, it) =>
-        var running = bOffsets.value(i)
-        // #{j in [0,k) : (W*(2j+1)) div (2k) < x} — probes strictly
-        // below x; floor(y) < x for integer x iff y < x
-        def probesBelow(x: Long): Long = {
-          val num = 2L * k * x - totalW
-          if (num <= 0) 0L
-          else math.min(k.toLong, (num - 1) / (2L * totalW) + 1)
-        }
-        it.map { case (id, w) =>
-          val start = running
-          running += w
-          Row(id, w, start, probesBelow(start + w) - probesBelow(start))
-        }
+      var running = offsets(i)
+      // #{j in [0,k) : (W*(2j+1)) div (2k) < x} — probes strictly
+      // below x; floor(y) < x for integer x iff y < x
+      def probesBelow(x: Long): Long = {
+        val num = 2L * k * x - totalW
+        if (num <= 0) 0L
+        else math.min(k.toLong, (num - 1) / (2L * totalW) + 1)
       }
-      val out = spark.createDataFrame(rows, StructType(Seq(
-        idField.copy(name = idCol),
-        StructField("weight", LongType, nullable = false),
-        StructField("start", LongType, nullable = false),
-        StructField("pps_mult", LongType, nullable = false))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize before the slim cache releases — the frame is lazy,
-      // and re-running the range shuffle would re-sample its bounds
-      out.count()
-      CacheLifecycle.releaseOnConsume(
-        out.select(out.columns.map(col).toSeq: _*), Seq(out))
-    } finally {
-      slim.unpersist(blocking = false)
-      ()
+      it.map { r =>
+        val w = r.getLong(1)
+        val start = running
+        running += w
+        Row(r.get(0), w, start, probesBelow(start + w) - probesBelow(start))
+      }
     }
+    df.sparkSession.createDataFrame(rows, StructType(Seq(
+      idField.copy(name = idCol),
+      StructField("weight", LongType, nullable = false),
+      StructField("start", LongType, nullable = false),
+      StructField("pps_mult", LongType, nullable = false))))
   }
 
   // -- deterministic training-order curriculum (epoch shuffle) ---------------

@@ -30,11 +30,11 @@ import org.apache.spark.sql.types._
   * NOT a global window (`Window.orderBy` with no partition = one task
   * holding the corpus — the exact plan shape this repo rejects everywhere,
   * see [[Mixing.tokenBudgetSample]] / KLL.exactNumericalDistance): a slim
-  * (id, tokenCount) projection range-partitions on id, each partition
+  * (id, tokenCount) projection range-partitions on both, each partition
   * reports one partial sum (K longs to the driver, K = shuffle
-  * partitions), and a second pass over the cached partitions seeds running
-  * offsets from the broadcast prefix — no task ever holds more than one
-  * range partition. Piece generation is then pure map-side (one HOF
+  * partitions), and a second pass over the range-sorted partitions seeds
+  * running offsets from the broadcast prefix — no task ever holds more
+  * than one range partition. Piece generation is then pure map-side (one HOF
   * `transform` + narrow `explode` per document, at most
   * `nTokens/seqLen + 2` pieces per doc), and assembly is ONE shuffle
   * keyed on `seq_id` — uniformly distributed by construction — whose
@@ -181,17 +181,17 @@ object Packing {
         col("max_len") * col("docs") - col("sum_tokens"))
 
   /** Exclusive global token offsets in id order, as
-    * (idCol, graft_nt, graft_start): one slim range exchange + two passes
-    * over the cached partitions (partial sums up, offsets broadcast
-    * down) — the [[Mixing.tokenBudgetSample]] prefix-sum shape with a
-    * single implicit group.
+    * (idCol, graft_nt, graft_start): one slim range exchange sorted on
+    * (id, tokens), partial sums up and offsets broadcast down
+    * ([[Ranking.prefixScan]] with a single implicit group). Rows sharing
+    * an id order by token count, so they get the same offsets on every
+    * consumption.
     */
   private def docOffsets(
       df: DataFrame,
       idCol: String,
       textCol: String,
       tokens: Column => Column = TextAnalysis.tokens): DataFrame = {
-    val spark = df.sparkSession
     val idField = df.schema(df.schema.fieldIndex(idCol))
     val slim = df
       .where(col(idCol).isNotNull)
@@ -199,38 +199,20 @@ object Packing {
         col(idCol).as("graft_id"),
         coalesce(size(tokens(col(textCol))).cast(LongType), lit(0L))
           .as("graft_t"))
-      .repartitionByRange(col("graft_id"))
-      .sortWithinPartitions("graft_id")
-      .rdd.map(r => (r.get(0), r.getLong(1)))
-    slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val partTotals: Array[(Int, Long)] = slim
-        .mapPartitionsWithIndex { (i, it) =>
-          Iterator((i, it.foldLeft(0L)(_ + _._2)))
-        }
-        .collect().sortBy(_._1)
-      val offsets = partTotals.map(_._2).scanLeft(0L)(_ + _)
-      val bOffsets = spark.sparkContext.broadcast(offsets)
-      val rows = slim.mapPartitionsWithIndex { (i, it) =>
-        var running = bOffsets.value(i)
-        it.map { case (id, t) =>
-          val r = Row(id, t, running)
-          running += t
-          r
-        }
+    val (_, rows) = Ranking.prefixScan(slim, Seq(col("graft_id"), col("graft_t")))(
+      it => it.foldLeft(0L)(_ + _.getLong(1)))(
+      totals => totals.scanLeft(0L)(_ + _)) { (i, offsets, it) =>
+      var running = offsets(i)
+      it.map { r =>
+        val t = r.getLong(1)
+        val out = Row(r.get(0), t, running)
+        running += t
+        out
       }
-      // materialize before releasing the slim cache — the returned frame
-      // is lazy, and an unpersisted `slim` would re-run the range shuffle
-      // (and re-sample its bounds) at consumption time
-      rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      spark.createDataFrame(rows, StructType(Seq(
-        idField.copy(name = idCol),
-        StructField("graft_nt", LongType, nullable = false),
-        StructField("graft_start", LongType, nullable = false))))
-    } finally {
-      slim.unpersist(blocking = false)
-      ()
     }
+    df.sparkSession.createDataFrame(rows, StructType(Seq(
+      idField.copy(name = idCol),
+      StructField("graft_nt", LongType, nullable = false),
+      StructField("graft_start", LongType, nullable = false))))
   }
 }

@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,9 +25,9 @@ import org.apache.spark.sql.types._
   * (at most P + G rows — groups are contiguous under range
   * partitioning), and a second pass assigns ranks from broadcast prefix
   * offsets. No task ever holds more than one range partition; skew in
-  * group size becomes parallelism, not a hot task. This is the
-  * [[Packing]] / [[Mixing.tokenBudgetSample]] prefix-sum machinery
-  * generalized to keyed groups.
+  * group size becomes parallelism, not a hot task. The two passes are
+  * [[prefixScan]], the one scan every prefix-offset operator
+  * ([[Packing]], [[Mixing.tokenBudgetSample]], the exact quantile) runs.
   *
   * reference capability: none (deequ has no ranking operator); part of
   * the beyond-reference LLM-pipeline family (SURVEY §2 pipeline block).
@@ -41,13 +44,15 @@ object Ranking {
     * range-boundary-dependent buckets) and must not contain nulls;
     * ascending, as in the SQL default. Null GROUP values are a group of
     * their own, as in SQL. Columns must be of an orderable primitive
-    * type (numeric / string / boolean / date / timestamp).
+    * type (numeric / string / boolean / date / timestamp). With a
+    * non-total `orderCols`, tied rows may land in different tiles on
+    * different consumptions of the result, since each re-sorts the range
+    * partitions.
     *
-    * Returns `df` with `bucketCol` (IntegerType, 1-based) appended. The
-    * result releases its cache after one consuming action (more under
-    * [[CacheLifecycle.withConsumptions]]); consuming it past that count
-    * fails, because its lineage runs through a released local checkpoint
-    * of the input.
+    * Returns `df` with `bucketCol` (IntegerType, 1-based) appended: a
+    * lazy frame over the second pass of [[prefixScan]], which caches
+    * nothing. It can be consumed any number of times while the range
+    * shuffle's output lives (as long as the frame is reachable).
     */
   def groupedNtile(
       df: DataFrame,
@@ -78,14 +83,16 @@ object Ranking {
           s"'$c' is ${schema(c).dataType.simpleString}")
     }
     val sortCols = (groupCol +: orderCols).map(col)
-    // cache the input: repartitionByRange SAMPLES its child to pick the
-    // range bounds, so an uncached upstream is evaluated at least twice
-    // (sample pass + shuffle pass) — and upstreams that release their
-    // OWN internal caches after one consumption (the CacheLifecycle
-    // convention, e.g. the LM scorers' tf frame) would recompute from
-    // the raw corpus on the second pass. A frame the caller already
-    // persisted, or cut with CacheLifecycle.truncate (a LogicalRDD leaf
-    // over a persisted RDD), is used as-is (and not released).
+    // cut the input: repartitionByRange SAMPLES its child to pick the
+    // range bounds, so an uncut upstream is evaluated at least twice
+    // (sample pass + shuffle pass). The cut also truncates the logical
+    // plan to a LogicalRDD leaf: in the curation chains the analyzed tree
+    // behind `df` is huge, and planning it, not executing it, was the
+    // measured cost (~3 s of driver RUNNABLE time in q136's perplexity
+    // stage). A frame the caller already persisted, or cut with
+    // CacheLifecycle.truncate (a LogicalRDD leaf over a persisted RDD),
+    // is used as-is (and not released). The cut is released once the
+    // range shuffle is written: pass 2 reads only the shuffle output.
     val callerCached =
       df.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
         (df.queryExecution.analyzed match {
@@ -93,99 +100,101 @@ object Ranking {
             lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
           case _ => false
         })
-    // truncate, not persist: beyond the cache (both evaluate the
-    // upstream once), the cut TRUNCATES the logical plan to a LogicalRDD
-    // leaf. The `.rdd` conversion below and the count/assign passes each
-    // re-plan this subtree, and in the curation chains the analyzed tree
-    // behind `df` is huge (every cached frame's full lineage re-inlined
-    // at each reference) — planning, not execution, was the measured
-    // cost (~3 s of driver RUNNABLE time in q136's perplexity stage).
     val input =
       if (callerCached) df
       else CacheLifecycle.truncate(df)
-    val sorted = input
-      .repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .rdd
-    sorted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one slim pass up: per-partition per-group row counts. Groups are
-      // contiguous runs under the range partitioning, so a partition
-      // holds at most (runs) groups and the collected total is <= P + G.
-      val counts: Array[(Int, Any, Long)] = sorted
-        .mapPartitionsWithIndex { (pid, it) =>
+    val nb = nBuckets.toLong
+    val out =
+      try prefixScan(input, sortCols)(
+        // per-partition group runs in row order: groups are contiguous
+        // under the range partitioning, so a partition holds at most
+        // (runs) groups and the collected total is <= P + G
+        it => {
           val runs = scala.collection.mutable.ArrayBuffer.empty[(Any, Long)]
           var cur: Any = null
-          var started = false
           var n = 0L
           it.foreach { r =>
             val g = r.get(gi)
-            if (!started) { cur = g; started = true; n = 1L }
-            else if (g == cur) n += 1L
-            else { runs += ((cur, n)); cur = g; n = 1L }
+            if (n > 0 && g == cur) n += 1L
+            else { if (n > 0) runs += ((cur, n)); cur = g; n = 1L }
           }
-          if (started) runs += ((cur, n))
-          runs.iterator.map { case (g, n) => (pid, g, n) }
-        }
-        .collect()
-      // driver: group totals and, per (partition, group), the exclusive
-      // rank offset = rows of that group in earlier partitions
-      val totals = scala.collection.mutable.HashMap.empty[Any, Long]
-      val offsets = scala.collection.mutable.HashMap.empty[(Int, Any), Long]
-      counts.sortBy(_._1).foreach { case (pid, g, n) =>
-        val sofar = totals.getOrElse(g, 0L)
-        offsets((pid, g)) = sofar
-        totals(g) = sofar + n
-      }
-      val bTotals = spark.sparkContext.broadcast(totals.toMap)
-      val bOffsets = spark.sparkContext.broadcast(offsets.toMap)
-      val nb = nBuckets.toLong
-      val out = sorted.mapPartitionsWithIndex { (pid, it) =>
-        val tot = bTotals.value
-        val off = bOffsets.value
-        var cur: Any = null
-        var started = false
-        var rank = 0L // exclusive rank of the previous row within its group
-        var n = 0L
-        var q = 0L
-        var rem = 0L
-        var thr = 0L
-        it.map { r =>
-          val g = r.get(gi)
-          if (!started || g != cur) {
-            cur = g; started = true
-            rank = off((pid, g))
-            n = tot(g)
-            q = n / nb
-            rem = n % nb
-            thr = (q + 1L) * rem // rows in the (q+1)-sized leading tiles
+          if (n > 0) runs += ((cur, n))
+          runs.toSeq
+        })(
+        // group totals and, per (partition, group), the exclusive rank
+        // offset = rows of that group in earlier partitions
+        parts => {
+          val totals = scala.collection.mutable.HashMap.empty[Any, Long]
+          val offsets = scala.collection.mutable.HashMap.empty[(Int, Any), Long]
+          parts.zipWithIndex.foreach { case (runs, pid) =>
+            runs.foreach { case (g, n) =>
+              val sofar = totals.getOrElse(g, 0L)
+              offsets((pid, g)) = sofar
+              totals(g) = sofar + n
+            }
           }
-          rank += 1L
-          // SQL ntile: the first (n mod b) tiles get ceil(n/b) rows, the
-          // rest floor(n/b); rank is 1-based within the group
-          val bucket =
-            if (rank <= thr) ((rank - 1L) / (q + 1L) + 1L).toInt
-            else (rem + (rank - thr - 1L) / q + 1L).toInt
-          Row.fromSeq(r.toSeq :+ bucket)
-        }
-      }
-      // cache as a DataFrame (not the RDD — an RDD persist has no
-      // release path a caller can see) and materialize BEFORE the
-      // sorted cache is released below: the frame is lazy, and
-      // re-running the range shuffle would re-sample its bounds. The
-      // cache itself releases after the caller's first consumption via
-      // CacheLifecycle — nothing strands for the session.
-      val cached = spark.createDataFrame(out,
-        StructType(schema.fields :+
-          StructField(bucketCol, IntegerType, nullable = false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cached.count()
-      CacheLifecycle.releaseOnConsume(
-        cached.select(cached.columns.map(col).toSeq: _*), Seq(cached))
-    } finally {
-      sorted.unpersist(blocking = false)
-      if (!callerCached) CacheLifecycle.releaseTruncated(input)
-    }
+          (totals.toMap, offsets.toMap)
+        }) { case (pid, (tot, off), it) =>
+          var cur: Any = null
+          var started = false
+          var rank = 0L // exclusive rank of the previous row within its group
+          var n = 0L
+          var q = 0L
+          var rem = 0L
+          var thr = 0L
+          it.map { r =>
+            val g = r.get(gi)
+            if (!started || g != cur) {
+              cur = g; started = true
+              rank = off((pid, g))
+              n = tot(g)
+              q = n / nb
+              rem = n % nb
+              thr = (q + 1L) * rem // rows in the (q+1)-sized leading tiles
+            }
+            rank += 1L
+            // SQL ntile: the first (n mod b) tiles get ceil(n/b) rows, the
+            // rest floor(n/b); rank is 1-based within the group
+            val bucket =
+              if (rank <= thr) ((rank - 1L) / (q + 1L) + 1L).toInt
+              else (rem + (rank - thr - 1L) / q + 1L).toInt
+            Row.fromSeq(r.toSeq :+ bucket)
+          }
+        }._2
+      finally if (!callerCached) CacheLifecycle.releaseTruncated(input)
+    spark.createDataFrame(out,
+      StructType(schema.fields :+
+        StructField(bucketCol, IntegerType, nullable = false)))
+  }
+
+  /** The range-sorted two-pass scan behind every prefix-offset operator
+    * ([[groupedNtile]], Packing's document offsets,
+    * [[Mixing.tokenBudgetSample]], [[Mixing.ppsSystematicSample]],
+    * [[graft.operators.DistributedExactQuantile]] and
+    * [[graft.sketch.Distance.exactNumericalDistance]]). `df` is
+    * range-partitioned and sorted on `keys`; pass 1 reduces each
+    * partition to one `summary` (collected in partition order), `prefix`
+    * folds those on the driver, and pass 2 (the returned RDD) runs `emit`
+    * over every sorted partition with its index and the broadcast prefix.
+    * Returns the prefix and pass 2.
+    *
+    * Nothing is cached: the range shuffle's output is the only copy, and
+    * each action over pass 2 re-reads and re-sorts it (no range shuffle
+    * and no bound sampling runs again while that output lives). Rows
+    * equal on `keys` may therefore come back in another order on another
+    * action, so `keys` must order `df`'s rows totally for pass 2 to be
+    * the same on every consumption. Pass 1 and `prefix` (and any
+    * `require` in it) run at call time.
+    */
+  private[graft] def prefixScan[S: ClassTag, P: ClassTag, O: ClassTag](
+      df: DataFrame, keys: Seq[Column])(
+      summary: Iterator[Row] => S)(
+      prefix: Array[S] => P)(
+      emit: (Int, P, Iterator[Row]) => Iterator[O]): (P, RDD[O]) = {
+    val sorted = df.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*).rdd
+    val p = prefix(sorted.mapPartitions(it => Iterator.single(summary(it))).collect())
+    val bp = df.sparkSession.sparkContext.broadcast(p)
+    (p, sorted.mapPartitionsWithIndex((i, it) => emit(i, bp.value, it)))
   }
 
   /** Exact per-group top-k without a window — the public face of the

@@ -141,9 +141,11 @@ object Distance {
     *      globally-ordered, size-balanced partitions.
     *   2. One pass collecting K per-partition (sumA, sumB) pairs → prefix
     *      offsets on the driver (K = shuffle partitions, not data-sized).
-    *   3. One pass re-reading the cached frequency table: each partition
-    *      seeds its running sums from the broadcast offsets and emits its
-    *      local max |cdfA - cdfB| — K doubles reduced on the driver.
+    *   3. One pass re-reading the frequency table's range-shuffle output
+    *      (nothing is cached; see [[graft.pipeline.Ranking.prefixScan]]):
+    *      each partition seeds its running sums from the broadcast offsets
+    *      and emits its local max |cdfA - cdfB| — K doubles reduced on the
+    *      driver.
     *
     * No task ever holds more than one range partition; a multi-billion-
     * distinct-value column at 100 TB holds where the window form dies.
@@ -162,43 +164,26 @@ object Distance {
       .where(col("graft_v").isNotNull)
       .groupBy("graft_v")
       .agg(sum(col("graft_a")).as("graft_ca"), sum(col("graft_b")).as("graft_cb"))
-      .repartitionByRange(col("graft_v"))
-      .sortWithinPartitions("graft_v")
-      .rdd.map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
-    freq.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val partTotals = freq
-        .mapPartitionsWithIndex { (i, it) =>
-          var a = 0L; var b = 0L
-          it.foreach { t => a += t._2; b += t._3 }
-          Iterator((i, a, b))
+    // pass 1: K per-partition (sumA, sumB) pairs → side totals and offsets
+    val ((na, nb, _, _), localMax) =
+      graft.pipeline.Ranking.prefixScan(freq, Seq(col("graft_v")))(
+        it => it.foldLeft((0L, 0L)) { case ((a, b), r) => (a + r.getLong(1), b + r.getLong(2)) })(
+        partTotals => {
+          val (as, bs) = partTotals.unzip
+          (as.sum.toDouble, bs.sum.toDouble, as.scanLeft(0L)(_ + _), bs.scanLeft(0L)(_ + _))
+        }) { case (i, (na, nb, offA, offB), it) =>
+        var ca = offA(i)
+        var cb = offB(i)
+        var m = 0.0
+        it.foreach { r =>
+          ca += r.getLong(1); cb += r.getLong(2)
+          val d = math.abs(ca / na - cb / nb)
+          if (d > m) m = d
         }
-        .collect().sortBy(_._1)
-      val na = partTotals.map(_._2).sum.toDouble
-      val nb = partTotals.map(_._3).sum.toDouble
-      if (na == 0.0 || nb == 0.0) return 0.0 // degenerate, as numericalDistance
-      val offA = partTotals.map(_._2).scanLeft(0L)(_ + _)
-      val offB = partTotals.map(_._3).scanLeft(0L)(_ + _)
-      val sc = data.sparkSession.sparkContext
-      val bOff = sc.broadcast((offA, offB))
-      freq
-        .mapPartitionsWithIndex { (i, it) =>
-          val (oa, ob) = bOff.value
-          var ca = oa(i)
-          var cb = ob(i)
-          var m = 0.0
-          it.foreach { t =>
-            ca += t._2; cb += t._3
-            val d = math.abs(ca / na - cb / nb)
-            if (d > m) m = d
-          }
-          Iterator(m)
-        }
-        .collect().foldLeft(0.0)(math.max)
-    } finally {
-      freq.unpersist(blocking = false)
-      ()
-    }
+        Iterator(m)
+      }
+    if (na == 0.0 || nb == 0.0) 0.0 // degenerate, as numericalDistance
+    else localMax.collect().foldLeft(0.0)(math.max)
   }
 
   /** L-infinity distance between two categorical distributions. */

@@ -88,12 +88,7 @@ class RankingSpec extends AnyWordSpec with Matchers with SparkSpec {
         } finally sc.removeSparkListener(listener)
       got shouldBe want
       cutJobs.get shouldBe 0
-      // the result's own cache is released after its consumption; the
-      // caller's cut stays
-      val deadline = System.nanoTime() + 10000000000L
-      while (sc.getPersistentRDDs.keySet != before && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-      }
+      // the call caches nothing of its own, and the caller's cut stays
       sc.getPersistentRDDs.keySet shouldBe before
       CacheLifecycle.releaseTruncated(cut)
     }
